@@ -51,7 +51,7 @@ object AnnScale {
     val factor = args.lift(1).map(_.toInt).getOrElse(750)
     val k = args.lift(2).map(_.toInt).getOrElse(5)
     val queryIds = (0L until 10L)
-    val spark = Engine.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val out = java.nio.file.Files.createTempDirectory("graft_annscale").toString

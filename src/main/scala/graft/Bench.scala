@@ -1,102 +1,106 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Paths}
 
-/** Driver-run benchmark: times every registered query at SPARK_GRAFT_SF_DIR
-  * and prints ONE JSON line.
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The engine's one measurement tool: `graft.Bench [mode]`, modes
+  * `time` (the default), `counts`, `plan [<outDir> <suffix>]` and `audit`.
   *
-  * Methodology:
-  *  - a warmup query first absorbs JVM/codegen/session start (otherwise the
-  *    first timed query carries ~5s of one-time cost);
-  *  - each query materializes through the `noop` sink — full computation of
-  *    every output column, no driver collect, no disk write. `count()`
-  *    would let Catalyst prune the projections being measured;
-  *  - every query runs SPARK_GRAFT_BENCH_RUNS times (default 3) in
-  *    round-robin passes over the whole registry — the reported number is
-  *    the per-query MEDIAN, so a single ambient-host spike (GC, a noisy
-  *    neighbor on the driver box) lands in the max, not the headline.
-  *    Round-robin (not back-to-back triples) keeps the repeat runs
-  *    separated in time, so a transient stall can't inflate all three
-  *    samples of one query.
+  * Every mode runs the session a user gets, [[Engine.session]] on
+  * [[Engine.defaultMaster]] sized from the corpus, over the same query list:
+  *  - `SPARK_GRAFT_SF_DIR`: the corpus (default: the sf0.1 test corpus);
+  *  - `SPARK_GRAFT_BENCH_ONLY=q1_agg,q3_topn`: a subset of the registry
+  *    (default all of it). A name not in the registry exits 2: a typo would
+  *    otherwise shrink the measured set and under-report a committed total.
+  *
+  * `time` — each query materializes through the `noop` sink (full
+  * computation of every output column, no driver collect, no disk write;
+  * `count()` would let Catalyst prune the projections being measured),
+  * `SPARK_GRAFT_BENCH_RUNS` times (default 3) in round-robin passes after
+  * one warm-up query that absorbs JVM/codegen/session start. The reported
+  * number is the per-query MEDIAN, so a single ambient-host spike lands in
+  * the max, not the headline; round-robin (not back-to-back triples) keeps
+  * the repeats separated in time. Per-run times are in the JSON record's
+  * `runs`, so one query timed N times is
+  * `SPARK_GRAFT_BENCH_ONLY=<query> SPARK_GRAFT_BENCH_RUNS=N`.
+  *
+  * `counts` — deterministic work counters per query: jobs, stages, tasks
+  * and records read (input + shuffle) from a SparkListener over one warm
+  * execution, plus generated classes compiled (`CodegenMetrics`) and JVM
+  * classes loaded. This host's wall clock drifts 1.3–2.6× within a session,
+  * so structural claims ("one exchange removed") are checked with these
+  * load-invariant counts against the before and after classes. The whole
+  * list runs once uncounted first; warming the list rather than each query
+  * right before its count keeps generated-class cache thrash between
+  * queries visible in `compiles:`. A closing `[total]` line gives the
+  * warm-up pass's compiles, the summed counts and Metaspace in use.
+  *
+  * `plan` — `explain("formatted")` per query: to stdout, or with
+  * `<outDir> <suffix>` to `<outDir>/<query>_<suffix>.txt` (the evidence
+  * artifacts committed under `plans/`).
+  *
+  * `audit` — one line per query: join strategies, exchanges,
+  * whole-stage-codegen spans and scans with pushed filters, so a dimension
+  * join falling back to sort-merge is visible without reading full plans.
   */
 object Bench {
+  private val modes = Set("time", "counts", "plan", "audit")
+
   def main(args: Array[String]): Unit = {
+    val mode = args.headOption.getOrElse("time")
+    if (!modes(mode) || (mode == "plan" && args.length != 1 && args.length != 3)) {
+      System.err.println(
+        "usage: graft.Bench [time|counts|plan [<outDir> <suffix>]|audit]")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // Corpus-sized shuffle parallelism (see Engine.sizedShufflePartitions):
-    // identical to the thread count at sf0.1/SF1, scales up for SF10+.
-    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .map(_.toInt)
-      .getOrElse(Engine.sizedShufflePartitions(sfDir, cpus.toInt))
-    // Heap-sized broadcast threshold (see Engine.sizedBroadcastThreshold):
-    // dims keep broadcasting as their byte size grows with SF, until they
-    // are genuinely fact-sized for the JVM.
-    // SPARK_GRAFT_MASTER=local-cluster[4,8,12288] benches the multi-executor
-    // shape: real executor JVMs, shuffle/broadcast over netty (see
-    // ClusterMode). Default stays single-JVM local[cpus].
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val isCluster = master.startsWith("local-cluster")
-    // local-cluster[w,c,m]: per-worker grant; executors take the full grant.
-    // Whitespace allowed exactly where Spark's own SparkMasterRegex allows
-    // it (ADVICE r15: 'local-cluster[2, 4, 4096]' is a valid Spark spec).
-    val clusterSpec =
-      "local-cluster\\[\\s*(\\d+)\\s*,\\s*(\\d+)\\s*,\\s*(\\d+)\\s*\\]".r
-    val (executorMemMb, totalCores) = master match {
-      case clusterSpec(w, c, m) => (m.toInt, w.toInt * c.toInt)
-      case _ if isCluster =>
-        // A malformed spec would otherwise fall through to executorMemMb=0
-        // and size the broadcast threshold from a zero-byte heap.
-        sys.error(
-          s"SPARK_GRAFT_MASTER looks like local-cluster but does not match " +
-            s"local-cluster[w,c,memMb]: '$master'")
-      case _ => (0, cpus.toInt)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val unknown = only.toSeq.flatMap(_.diff(SparkEntry.queries.keySet)).sorted
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[bench] SPARK_GRAFT_BENCH_ONLY names not in the registry: ${unknown.mkString(", ")}")
+      sys.exit(2)
     }
-    // Broadcast threshold must be sized from EXECUTOR heap (the process
-    // that builds/holds the hashed relation), which is the driver's own
-    // heap only in local mode.
-    val broadcastBytes = Engine.sizedBroadcastThreshold(
-      if (isCluster) executorMemMb * 1024L * 1024L
-      else Runtime.getRuntime.maxMemory)
-    if (isCluster) ClusterMode.ensureSparkHomeShim()
-    val builder = SparkSession.builder()
-      .master(master)
-      // engine extensions (function pack, planner strategy, broadcast
-      // guard) — see Verify; without this the bench session silently
-      // loses every extension-injected rule
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        math.max(shufflePartitions, totalCores))
-      .config("spark.sql.autoBroadcastJoinThreshold", broadcastBytes)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    if (isCluster) {
-      builder
-        .config("spark.executor.memory", s"${executorMemMb}m")
-        .config("spark.executor.extraClassPath", ClusterMode.absoluteClassPath)
-        .config("spark.executor.extraJavaOptions", ClusterMode.executorJavaOptions)
-        .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "60s")
-    }
-    val spark = builder.getOrCreate()
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n)))
+    val master = Engine.defaultMaster
+    val spark = Engine.session(master, Some(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
+    def query(name: String): DataFrame = SparkEntry.queries(name)(spark, sfDir)
+    try mode match {
+      case "time" => time(spark, master, sfDir, names, subset = only.nonEmpty, query)
+      case "counts" => counts(spark, names, query)
+      case "plan" => plan(names, args.lift(1), args.lift(2), query)
+      case "audit" => audit(names, query)
+    } finally spark.stop()
+  }
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def time(spark: SparkSession, master: String, sfDir: String,
+      names: Seq[String], subset: Boolean, query: String => DataFrame): Unit = {
+    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
 
     // Cumulative stop-the-world GC time across all collectors; the per-run
-    // delta goes into BENCH_FULL.json so a slow pass self-adjudicates
+    // delta goes into the JSON record so a slow pass self-adjudicates
     // ("was that the plan or the heap?") instead of needing a rerun at a
     // different -Xmx to decompose (the round-10 q_rollup dispute).
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+    def gcMillis(): Long =
+      ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
 
     // Returns (wall seconds, GC millis spent during the run); -1 wall on failure.
     def runNoop(name: String): (Double, Long) = {
       val g0 = gcMillis()
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      try noop(query(name))
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return (-1.0, gcMillis() - g0)
@@ -107,17 +111,6 @@ object Bench {
     // Warmup: session + codegen + parquet footer caches.
     runNoop("q1_agg")
 
-    // SPARK_GRAFT_BENCH_ONLY=q1_agg,q3_topn limits the registry to a subset
-    // (used for the SF1 TPC-H/TPC-DS record in BASELINE.md, where the full
-    // 100+-query registry would mostly re-time sf-independent fixtures).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // A typo'd name would silently shrink the benchmarked set and
-    // under-report the suite total in a committed record — say so loudly.
-    only.foreach(_.diff(SparkEntry.queries.keySet).toSeq.sorted.foreach(u =>
-      System.err.println(s"[bench] WARNING: SPARK_GRAFT_BENCH_ONLY name not in registry: $u")))
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     val samples = scala.collection.mutable.Map(
       names.map(_ -> Vector.empty[Double]): _*)
     val gcSamples = scala.collection.mutable.Map(
@@ -145,8 +138,12 @@ object Bench {
       else (ok(ok.size / 2 - 1) + ok(ok.size / 2)) / 2
     }
     val results = names.map(n => n -> median(samples(n)))
+    // A query that failed every run has no time to add to the total; it is
+    // named in the summary line and the record instead of vanishing.
+    val failed = results.collect { case (n, v) if v < 0 => n }
     val total = results.map(_._2).filter(_ >= 0).sum
-    spark.stop()
+    def jsonList(xs: Seq[String]): String =
+      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
 
     // The driver keeps only the LAST 2000 chars of output (measured: the r8
     // capture's tail is exactly 2000, and sbt appends a ~72-char "[success]"
@@ -164,6 +161,8 @@ object Bench {
     // un-pinned 8g heap only after a manual rerun; now the record carries
     // the evidence itself).
     val heapMb = Runtime.getRuntime.maxMemory / (1024L * 1024L)
+    val cluster = ClusterMode.parse(master)
+    val conf = spark.sessionState.conf
     val fullJson = {
       val qs = names.map { n =>
         val xs = samples(n)
@@ -173,7 +172,7 @@ object Bench {
           ",\"runs\":[" + xs.map(f3).mkString(",") + "]" +
           ",\"gc_ms\":[" + gcSamples(n).map(_.toString).mkString(",") + "]}"
       }.mkString("{", ",", "}")
-      s"""{"metric":"total_median","value":${f3(total)},"unit":"sec","n_queries":${results.size},"runs_per_query":$runs,"master":"$master","heap_mb":$heapMb,"executor_mem_mb":$executorMemMb,"shuffle_partitions":${math.max(shufflePartitions, totalCores)},"broadcast_mb":${broadcastBytes / (1024L * 1024L)},"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total_median","value":${f3(total)},"unit":"sec","n_queries":${results.size},"failed":${jsonList(failed)},"runs_per_query":$runs,"master":"$master","heap_mb":$heapMb,"executor_mem_mb":${cluster.map(_.memMb).getOrElse(0)},"shuffle_partitions":${conf.numShufflePartitions},"broadcast_mb":${conf.autoBroadcastJoinThreshold / (1024L * 1024L)},"queries":$qs,"sf":"$sfDir"}"""
     }
     // full record next to the checkout (cwd), not a hardcoded absolute
     // path — a silently-swallowed write failure elsewhere would lose the
@@ -194,20 +193,20 @@ object Bench {
     // or BENCH_SCRATCH_*) — previously a full-registry run at a non-default
     // sfDir wrote an ungated, unignored BENCH_<sf>.json (ADVICE r13).
     val isRecord = sys.env.contains("GRAFT_RECORD")
-    val clusterTag = if (isCluster) "CLUSTER_" else ""
+    val clusterTag = if (cluster.isDefined) "CLUSTER_" else ""
     val sfLast = sfDir.split('/').last
     val stem =
-      if (only.isEmpty && sfDir == defaultSf && !isCluster) "BENCH_FULL"
-      else if (only.isEmpty) s"BENCH_$clusterTag$sfLast"
+      if (!subset && sfDir == defaultSf && cluster.isEmpty) "BENCH_FULL"
+      else if (!subset) s"BENCH_$clusterTag$sfLast"
       else s"BENCH_${clusterTag}SUBSET_${sfLast}_n${results.size}"
     val fullName =
       if (isRecord) stem + ".json"
       else if (stem == "BENCH_FULL") "BENCH_DRIVER.json"
       else "BENCH_SCRATCH_" + stem.stripPrefix("BENCH_") + ".json"
     for (p <- Seq(
-        java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "bench_timings.txt"),
-        java.nio.file.Paths.get(sys.props("user.dir"), fullName)))
-      try java.nio.file.Files.write(p, (fullJson + "\n").getBytes("UTF-8"))
+        Paths.get(sys.props("java.io.tmpdir"), "bench_timings.txt"),
+        Paths.get(sys.props("user.dir"), fullName)))
+      try Files.write(p, (fullJson + "\n").getBytes("UTF-8"))
       catch { case e: Throwable =>
         System.err.println(s"[bench] could not write $p: ${e.getMessage}") }
     // All-query medians in centiseconds, for the log (may exceed the
@@ -217,8 +216,9 @@ object Bench {
       .mkString("{", ",", "}")
     println(s"""{"metric":"all_queries","unit":"centisec","med_of":$runs,"queries":$qsCs}""")
     // Final line: bounded summary the driver can always parse from the
-    // 2000-char tail — total over ALL queries plus the TPC-H 21 headline
-    // medians in centiseconds.
+    // 2000-char tail — total over the queries that ran, the names of any
+    // that failed every run, and the TPC-H 21 headline medians in
+    // centiseconds.
     val tpch21 = Seq("q1_agg", "q2_minsupp", "q3_topn", "q4_semi",
       "q5_join_agg", "q6_filter", "q8_share", "q9_profit", "q10_agg_topn",
       "q11_value", "q12_priority", "q13_dist", "q14_promo", "q15_top",
@@ -227,6 +227,92 @@ object Bench {
     val headline = results.filter(r => tpch21.contains(r._1))
       .map { case (k, v) => "\"" + k + "\":" + math.round(v * 100).toString }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"qunit":"centisec","med_of":$runs,"heap_mb":$heapMb,"queries":$headline,"full":"$fullName","sf":"${sfDir.split('/').last}"}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"failed":${jsonList(failed)},"qunit":"centisec","med_of":$runs,"heap_mb":$heapMb,"queries":$headline,"full":"$fullName","sf":"$sfLast"}""")
+  }
+
+  private def counts(spark: SparkSession, names: Seq[String],
+      query: String => DataFrame): Unit = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val recs = new java.util.concurrent.atomic.AtomicLong(0L)
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+        override def onStageCompleted(
+            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+          stages.incrementAndGet()
+          tasks.addAndGet(sc.stageInfo.numTasks)
+          recs.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.recordsRead +
+            sc.stageInfo.taskMetrics.shuffleReadMetrics.recordsRead)
+        }
+      })
+    val compilations = CodegenMetrics.METRIC_COMPILATION_TIME
+    val classLoading = ManagementFactory.getClassLoadingMXBean
+    val warm0 = compilations.getCount
+    names.foreach(n => noop(query(n)))
+    val warmCompiles = compilations.getCount - warm0
+    Thread.sleep(500)
+    var totalCompiles = 0L
+    var totalClasses = 0L
+    for (name <- names) {
+      jobs.set(0); stages.set(0); tasks.set(0); recs.set(0L)
+      val compiles0 = compilations.getCount
+      val classes0 = classLoading.getTotalLoadedClassCount
+      noop(query(name))
+      val compiles = compilations.getCount - compiles0
+      val classes = classLoading.getTotalLoadedClassCount - classes0
+      totalCompiles += compiles
+      totalClasses += classes
+      Thread.sleep(500) // let the listener bus drain before reading
+      println(s"[$name] jobs: ${jobs.get()} stages: ${stages.get()} " +
+        s"tasks: ${tasks.get()} recordsRead: ${recs.get()} " +
+        s"compiles: $compiles classes: $classes")
+    }
+    val metaspaceMb = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .find(_.getName == "Metaspace")
+      .map(_.getUsage.getUsed / (1024 * 1024)).getOrElse(-1L)
+    println(s"[total] queries: ${names.length} warmupCompiles: $warmCompiles " +
+      s"compiles: $totalCompiles classes: $totalClasses metaspaceUsedMb: $metaspaceMb")
+  }
+
+  private def plan(names: Seq[String], outDir: Option[String],
+      suffix: Option[String], query: String => DataFrame): Unit = {
+    outDir.foreach(d => Files.createDirectories(Paths.get(d)))
+    names.foreach { name =>
+      val txt = query(name).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      (outDir, suffix) match {
+        case (Some(d), Some(s)) =>
+          Files.write(Paths.get(d, s"${name}_$s.txt"), txt.getBytes("UTF-8"))
+          println(s"wrote ${name}_$s.txt (${txt.length} chars)")
+        case _ =>
+          println(s"== $name ==\n$txt")
+      }
+    }
+  }
+
+  private def audit(names: Seq[String], query: String => DataFrame): Unit = {
+    println(f"${"query"}%-24s bcast smj shj bnl exch codegen pushedScans")
+    names.foreach { name =>
+      try {
+        val plan = query(name).queryExecution.executedPlan.toString
+        // Under AQE the string is the initial adaptive plan, so
+        // WholeStageCodegen spans appear as 0 — codegen is applied at
+        // execution time per stage; use df.explain("codegen") to inspect.
+        def c(s: String) = plan.linesIterator.count(_.contains(s))
+        val pushed = plan.linesIterator
+          .filter(_.contains("PushedFilters: ["))
+          .count(!_.contains("PushedFilters: []"))
+        println(f"$name%-24s ${c("BroadcastHashJoin")}%5d ${c("SortMergeJoin")}%3d " +
+          f"${c("ShuffledHashJoin")}%3d ${c("BroadcastNestedLoopJoin")}%3d " +
+          f"${c("Exchange")}%4d ${c("WholeStageCodegen")}%7d $pushed%11d")
+      } catch {
+        case e: Throwable =>
+          println(f"$name%-24s ERROR ${Option(e.getMessage).getOrElse(e.toString).take(80)}")
+      }
+    }
   }
 }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-executor rehearsal harness: `local-cluster[N,cores,memMB]` sessions.
   *
   * `local[32]` runs every task in the driver JVM — no serialization boundary
@@ -27,7 +25,8 @@ import org.apache.spark.sql.SparkSession
   * classes (graft expressions, physical operators) reach executors via
   * `spark.executor.extraClassPath` = this JVM's classpath; JDK-17 module
   * opens via `spark.executor.extraJavaOptions` (spark-submit would inject
-  * both on a real cluster).
+  * both on a real cluster). [[Engine.builder]] applies this wiring to every
+  * `local-cluster` master.
   */
 object ClusterMode {
 
@@ -81,25 +80,27 @@ object ClusterMode {
     Files.createDirectories(home.resolve("launcher/target/scala-2.13"))
   }
 
-  /** Engine session on a local-cluster master. `master` e.g.
-    * "local-cluster[2,4,2048]" (workers, cores/worker, MB/worker);
-    * `executorMemMb` must fit inside the per-worker grant. */
-  def session(master: String, executorMemMb: Int): SparkSession = {
-    ensureSparkHomeShim()
-    require(sys.env.get("SPARK_HOME").contains(sparkHomeShim),
-      s"local-cluster mode needs SPARK_HOME=$sparkHomeShim in the JVM's " +
-        "environment (build.sbt exports it for forked JVMs; plain java " +
-        "runs must export it)")
-    val spark = Engine.builder(master)
-      .config("spark.executor.memory", s"${executorMemMb}m")
-      .config("spark.executor.extraClassPath", absoluteClassPath)
-      .config("spark.executor.extraJavaOptions", executorJavaOptions)
-      // Executor JVMs cold-start slower than local[*] threads; don't let
-      // the first heavy stage time out waiting for registration.
-      .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    functions.GraftFunctions.register(spark, overrideBuiltins = true)
-    spark
+  /** A `local-cluster[workers,cores,memMb]` master: `memMb` is each
+    * worker's grant, and the engine gives its executor the whole grant. */
+  final case class Spec(workers: Int, cores: Int, memMb: Int) {
+    def totalCores: Int = workers * cores
+    def memBytes: Long = memMb * 1024L * 1024L
+  }
+
+  /** Whitespace allowed exactly where Spark's own SparkMasterRegex allows
+    * it: `local-cluster[2, 4, 4096]` is a valid Spark spec. */
+  private val SpecRegex =
+    """local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*(\d+)\s*\]""".r
+
+  /** The spec of a local-cluster master; None for any other master. A
+    * master that names local-cluster but does not match the spec fails here:
+    * silently defaulting its memory would size executors and the broadcast
+    * threshold from a number the caller never gave. */
+  def parse(master: String): Option[Spec] = master match {
+    case SpecRegex(w, c, m) => Some(Spec(w.toInt, c.toInt, m.toInt))
+    case _ =>
+      require(!master.startsWith("local-cluster"),
+        s"master '$master' does not match local-cluster[workers,cores,memMb]")
+      None
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures the incremental standing-artifact lifecycle
@@ -30,19 +30,11 @@ object DeltaBench {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(1).getOrElse(
       Files.createTempDirectory("graft_delta_bench").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val initialFactor = sys.env.getOrElse("GRAFT_DELTA_INITIAL", "16").toInt
     val deltaFactors = sys.env.getOrElse("GRAFT_DELTA_STEPS", "1,2,4")
       .split(",").map(_.trim.toInt).toSeq
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus.toInt * 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs0 = spark.read.parquet(s"$srcDir/documents.parquet")

@@ -25,9 +25,11 @@ import org.apache.spark.sql.SparkSession
   *    registry, so repeated queries reuse compiled (and JIT-compiled)
   *    code instead of recompiling per query as the reference's LLVM
   *    codegen does (`be/src/codegen/llvm-codegen.cc`). The conf is static
-  *    and JVM-global: the first codegen in a JVM fixes the size, so it
-  *    only takes effect when that codegen runs under an `Engine` session;
-  *    a JVM whose first session is a stock one keeps Spark's 100 entries.
+  *    and JVM-global: the first codegen in a JVM fixes the size.
+  *
+  * [[builder]] is the only place a session is configured: every main, the
+  * oracle gate and the bench run this profile, so what they check is what
+  * users run.
   */
 object Engine {
 
@@ -36,8 +38,43 @@ object Engine {
   private lazy val warehouseDir: String =
     java.nio.file.Files.createTempDirectory("graft-warehouse").toString
 
-  def builder(master: String = "local[32]"): SparkSession.Builder =
-    SparkSession.builder()
+  /** The master a main runs on: `SPARK_GRAFT_MASTER` (e.g.
+    * `local-cluster[2,4,4096]`, see [[ClusterMode]]), else
+    * `local[$SPARK_GRAFT_CPUS]`, else one thread per host core. */
+  def defaultMaster: String =
+    sys.env.getOrElse("SPARK_GRAFT_MASTER",
+      "local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors.toString) + "]")
+
+  /** Task slots of a master: workers × cores for `local-cluster`, N for
+    * `local[N]`, the host's cores for `local[*]`. */
+  private def masterCores(master: String): Int = {
+    val LocalN = """local\[\s*(\d+)\s*(?:,\s*\d+\s*)?\]""".r
+    ClusterMode.parse(master).map(_.totalCores).getOrElse(master match {
+      case LocalN(n) => n.toInt
+      case "local" => 1
+      case _ => Runtime.getRuntime.availableProcessors
+    })
+  }
+
+  /** The confs a builder given a corpus adds: shuffle partitions sized from
+    * the corpus and the master's task slots, and the broadcast threshold
+    * sized from the heap that builds the hashed relation — the executor
+    * grant on `local-cluster`, this JVM's heap otherwise. */
+  def sizedConfs(master: String, corpus: String): Seq[(String, Long)] = Seq(
+    "spark.sql.shuffle.partitions" ->
+      sizedShufflePartitions(corpus, masterCores(master)).toLong,
+    "spark.sql.autoBroadcastJoinThreshold" -> sizedBroadcastThreshold(
+      ClusterMode.parse(master).map(_.memBytes)
+        .getOrElse(Runtime.getRuntime.maxMemory)))
+
+  /** The engine's session profile. With a `corpus` the shuffle partitions
+    * and broadcast threshold are sized from it ([[sizedConfs]]); without
+    * one they stay at the fixed defaults below. A `local-cluster` master
+    * also gets the executor wiring [[ClusterMode]] describes. */
+  def builder(master: String = defaultMaster,
+      corpus: Option[String] = None): SparkSession.Builder = {
+    val b = SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.warehouse.dir", warehouseDir)
@@ -74,9 +111,25 @@ object Engine {
       // them again. At 4096 (~2.5x the registry set) it compiles 14-16.
       // Static and JVM-global; see the scaladoc above.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+    ClusterMode.parse(master).foreach { spec =>
+      ClusterMode.ensureSparkHomeShim()
+      require(sys.env.contains("SPARK_HOME"),
+        s"local-cluster mode needs SPARK_HOME (e.g. ${ClusterMode.sparkHomeShim})" +
+          " in the JVM's environment: the in-JVM Worker launches executors from it")
+      b.config("spark.executor.memory", s"${spec.memMb}m")
+        .config("spark.executor.extraClassPath", ClusterMode.absoluteClassPath)
+        .config("spark.executor.extraJavaOptions", ClusterMode.executorJavaOptions)
+        // Executor JVMs cold-start slower than local[*] threads; don't let
+        // the first heavy stage time out waiting for registration.
+        .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "60s")
+    }
+    corpus.foreach(sizedConfs(master, _).foreach { case (k, v) => b.config(k, v) })
+    b
+  }
 
-  def session(master: String = "local[32]"): SparkSession = {
-    val spark = builder(master).getOrCreate()
+  def session(master: String = defaultMaster,
+      corpus: Option[String] = None): SparkSession = {
+    val spark = builder(master, corpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     functions.GraftFunctions.register(spark, overrideBuiltins = true)
     spark
@@ -141,11 +194,10 @@ object Engine {
     * is fact-sized for the JVM and the shuffle is the right plan (at
     * 100 TB, part itself is TBs: it must never be collected).
     *
-    * Used by the corpus-sized harness ([[Bench]]/[[BenchOne]]) alongside
-    * [[sizedShufflePartitions]]; [[builder]] keeps Spark's default so
-    * reference-planner parity fixtures (PlannerGoldenSpec) exercise the
-    * stock cost model. A multi-JVM deployment should size this from
-    * EXECUTOR memory, not the driver's. */
+    * [[builder]] sets it only when given a corpus ([[sizedConfs]], which
+    * passes the executor grant on `local-cluster`); an unsized builder keeps
+    * Spark's default so reference-planner parity fixtures
+    * (PlannerGoldenSpec) exercise the stock cost model. */
   def sizedBroadcastThreshold(maxHeapBytes: Long): Long = {
     val byHeap = maxHeapBytes / 128
     math.max(10L * 1024 * 1024, math.min(256L * 1024 * 1024, byHeap))

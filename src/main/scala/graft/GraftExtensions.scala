@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Injects the Impala-dialect function pack into every session built through
-  * [[Engine]] (`SparkSession.builder().withExtensions(new GraftExtensions)`).
+  * [[Engine.builder]] (`withExtensions(new GraftExtensions)`).
   *
   * The reference registers its 275 builtin signatures in
   * `fe/src/main/java/com/cloudera/impala/catalog/BuiltinsDb.java` /

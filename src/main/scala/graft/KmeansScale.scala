@@ -18,7 +18,7 @@ object KmeansScale {
     val factor = args.lift(1).map(_.toInt).getOrElse(750)
     val k = args.lift(2).map(_.toInt).getOrElse(256)
     val maxIters = args.lift(3).map(_.toInt).getOrElse(20)
-    val spark = Engine.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val out = java.nio.file.Files.createTempDirectory("graft_kmscale").toString

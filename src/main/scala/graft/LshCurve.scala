@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Maintenance tool: the LSH-ANN recall-vs-cost curve (VERDICT r18 task 4).
   *
   * For a grid of (tables, probes) configurations, measures recall@k of
@@ -16,13 +14,7 @@ import org.apache.spark.sql.SparkSession
 object LshCurve {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = Tables.table(spark, sfDir, "embeddings")

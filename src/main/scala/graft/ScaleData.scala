@@ -209,7 +209,7 @@ object ScaleData {
     // corpus, symlinking the rest — regenerating 300× lineitem to re-layout
     // two tables would be 25 min of wasted amplification)
     val tables = args.lift(4).map(_.split(",").map(_.trim).toSet)
-    val spark = Engine.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = Engine.session()
     val t0 = System.nanoTime()
     amplify(spark, srcDir, outDir, factor, layout, tables)
     println(f"[scaledata] $srcDir x$factor ($layout) -> $outDir in ${(System.nanoTime() - t0) / 1e9}%.1f s")

@@ -16,7 +16,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = Engine.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = Engine.session()
     val out = java.nio.file.Files.createTempDirectory("graft_scale").toString
 
     // One amplifier for the repo: ScaleData's disjoint-universe key shift

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch SQL executor for the differential-testing harness
   * (tools/fuzz.py — the Spark half of the reference's random-query
   * discrepancy searcher, `tests/comparison/discrepancy_searcher.py`).
@@ -16,18 +14,8 @@ import org.apache.spark.sql.SparkSession
 object SqlRunner {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, queryFile, outDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ui.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(Engine.defaultMaster, Some(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
-    // The dialect-function surface (strleft/nvl/zeroifnull/date-arith
-    // families) is part of the fuzzed grammar — register it like any
-    // engine-owned session would.
-    functions.GraftFunctions.register(spark, overrideBuiltins = true)
     Engine.openCatalog(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     val errors = new StringBuilder

@@ -1,39 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. The gate runs the
+  * engine's own session profile, so it checks the semantics users get. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER=local-cluster[w,c,mem] runs the WHOLE oracle gate
-    // across real executor JVMs (same wiring as Bench/ClusterMode) — the
-    // multi-executor rehearsal's correctness half.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val isCluster = master.startsWith("local-cluster")
-    if (isCluster) ClusterMode.ensureSparkHomeShim()
-    val builder = SparkSession.builder()
-      .master(master)
-      // engine extensions (function pack, planner strategy, broadcast
-      // guard) — attachable only at builder time; the register()-time
-      // ExperimentalMethods hook is the fallback for sessions built
-      // elsewhere, but the gate session should be a first-class one
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (isCluster) {
-      val clusterSpec = "local-cluster\\[(\\d+),(\\d+),(\\d+)\\]".r
-      val memMb = master match { case clusterSpec(_, _, m) => m.toInt; case _ => 2048 }
-      builder
-        .config("spark.executor.memory", s"${memMb}m")
-        .config("spark.executor.extraClassPath", ClusterMode.absoluteClassPath)
-        .config("spark.executor.extraJavaOptions", ClusterMode.executorJavaOptions)
-        .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "60s")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // across real executor JVMs (see ClusterMode) — the multi-executor
+    // rehearsal's correctness half.
+    val spark = Engine.session(Engine.defaultMaster, Some(sfDir))
     new java.io.File(outDir).mkdirs()
     // Manifest FIRST (replacing any stale one from a previous run in this
     // out_dir): if this JVM dies mid-loop, the checker still knows the full

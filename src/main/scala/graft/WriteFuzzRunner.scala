@@ -18,7 +18,7 @@ import java.nio.file.{Files, Paths}
 object WriteFuzzRunner {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, scriptFile, outDir) = args
-    val spark = Engine.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     Engine.openCatalog(spark, sfDir)

@@ -208,14 +208,12 @@ object GraftFunctions {
         strategies :+ graft.plans.TopKPerGroupStrategy
     }
     // The broadcast-safety rule must hold in sessions we did NOT build
-    // (the Verify/Bench harness mains construct stock sessions): extensions
-    // can only be attached at builder time, but ExperimentalMethods rules
-    // run as the optimizer's final batch — still before physical planning,
-    // which is all the hint stamping needs. In Engine-built sessions the
-    // preCBO copy stamps first and this one no-ops (the rule skips sides
-    // that already carry a strategy hint). Round-18 find: the r17 SF30
-    // broadcast-OOM fix would have silently vanished from the bench/gate
-    // sessions without this — GuardInstallSpec pins it.
+    // (one passed to `SparkEntry.entry` by its caller): extensions can only be
+    // attached at builder time, but ExperimentalMethods rules run as the
+    // optimizer's final batch — still before physical planning, which is
+    // all the hint stamping needs. In Engine-built sessions the preCBO copy
+    // stamps first and this one no-ops (the rule skips sides that already
+    // carry a strategy hint). CorpusBroadcastGuardSpec pins it.
     val extraOpts = spark.experimental.extraOptimizations
     if (!extraOpts.contains(graft.plans.CorpusBroadcastGuard)) {
       spark.experimental.extraOptimizations =

@@ -21,7 +21,7 @@ object GoldenTriage {
     }
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val only = if (args.length > 2) Some(args(2).toInt) else None
-    val spark = Engine.session("local[8]")
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
     Engine.openCatalog(spark, sfDir)
     FunctionalDataset.ensureFunctionalDb(spark)

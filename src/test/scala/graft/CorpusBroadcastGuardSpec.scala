@@ -112,13 +112,12 @@ class CorpusBroadcastGuardSpec extends SparkSpec {
   }
 
   test("register() installs the guard into sessions not built by Engine (idempotently)") {
-    // The r17 SF30 OOM fix must hold in the harness mains (Verify/Bench),
-    // which construct their own sessions: extensions attach only at builder
-    // time, so GraftFunctions.register — already invoked idempotently at
-    // query-build time for any foreign session — must ALSO install the rule
-    // via ExperimentalMethods (the optimizer's final batch, still before
-    // physical planning). Round-18 find: without this, deleting the per-site
-    // hints silently removed all protection from the gate/bench sessions.
+    // The r17 SF30 OOM fix must hold in sessions the engine did not build
+    // (one passed to `SparkEntry.entry` by its caller): extensions attach only at
+    // builder time, so GraftFunctions.register — already invoked
+    // idempotently at query-build time for any foreign session — must ALSO
+    // install the rule via ExperimentalMethods (the optimizer's final
+    // batch, still before physical planning).
     val s = spark.newSession()
     s.experimental.extraOptimizations = Seq.empty // simulate a fresh session
     functions.GraftFunctions.register(s)

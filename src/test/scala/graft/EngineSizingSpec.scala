@@ -39,4 +39,51 @@ class EngineSizingSpec extends AnyFunSuite {
     // the cap is reachable only through byData, never the floor
     assert(Engine.sizedShufflePartitions("/nonexistent", 2048) == 2048)
   }
+
+  test("local-cluster spec parses with the whitespace Spark accepts") {
+    assert(ClusterMode.parse("local-cluster[2, 4, 4096]") ==
+      Some(ClusterMode.Spec(2, 4, 4096)))
+    assert(ClusterMode.parse("local-cluster[2,4,1536]") ==
+      Some(ClusterMode.Spec(2, 4, 1536)))
+    assert(ClusterMode.parse("local[4]").isEmpty)
+  }
+
+  test("a malformed local-cluster spec fails instead of defaulting") {
+    for (bad <- Seq("local-cluster[2,4]", "local-cluster[2,4,4g]", "local-cluster"))
+      intercept[IllegalArgumentException](ClusterMode.parse(bad))
+  }
+
+  test("sized broadcast threshold follows the executor grant, else the driver heap") {
+    def threshold(master: String) = Engine.sizedConfs(master, "/nonexistent")
+      .toMap.apply("spark.sql.autoBroadcastJoinThreshold")
+    // 16 g executors → heap/128, whatever this JVM's own heap is
+    assert(threshold("local-cluster[2,4,16384]") == 128 * MB)
+    assert(threshold("local-cluster[2,4,1536]") == 12 * MB)
+    assert(threshold("local[4]") ==
+      Engine.sizedBroadcastThreshold(Runtime.getRuntime.maxMemory))
+  }
+
+  test("sized shuffle partitions floor at the master's task slots") {
+    def partitions(master: String) = Engine.sizedConfs(master, "/nonexistent")
+      .toMap.apply("spark.sql.shuffle.partitions")
+    assert(partitions("local[6]") == 6)
+    assert(partitions("local-cluster[2, 4, 1536]") == 8)
+  }
+
+  test("SparkSession.builder() is called only in Engine.scala") {
+    // One session profile: every main, the gate and the bench go through
+    // Engine.builder, so what they check is what users run.
+    val root = new java.io.File("src/main/scala")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val files = scalaFiles(root)
+    assert(files.exists(_.getName == "Engine.scala"), s"no sources under $root")
+    val offenders = files.filter { f =>
+      f.getName != "Engine.scala" &&
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+          .contains("SparkSession.builder()")
+    }
+    assert(offenders.isEmpty, s"sessions built outside Engine: ${offenders.mkString(", ")}")
+  }
 }

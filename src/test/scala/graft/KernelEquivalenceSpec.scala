@@ -3,17 +3,79 @@ package graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Focused pins for the round-21 n-gram kernels
-  * ([[graft.functions.NgramKernels]]): each kernel must be value-identical
-  * to the composable formulation it replaced (the pre-round-21
-  * `transform(sequence(...), i -> concat_ws(...))` builders), including the
-  * edges the oracle corpus may not exercise — null arrays, null elements
-  * (concat_ws skips them), docs shorter than n, duplicate grams, non-ASCII
-  * text. The dedup/text queries that consume them are oracle-covered end to
-  * end on top of this. */
-class Round21KernelsSpec extends SparkSpec {
+/** Each codegen kernel must be value-identical to the composite it replaced,
+  * including the edges the oracle corpus may not exercise: null arrays,
+  * null elements, inputs shorter than n, duplicates, non-ASCII text. The
+  * queries that consume them are oracle-covered end to end on top of this.
+  *
+  *  - [[graft.functions.TopRunFrac]] — the max-multiplicity fraction that
+  *    replaced the sorted longest-run fold in q_text_repetition;
+  *  - [[graft.functions.PpjoinPositionOk]] — the PPJoin position-filter
+  *    bound that prunes candidates in AllPairs.jaccardPairs, which must
+  *    never reject a pair the verifier keeps;
+  *  - the n-gram, hashing, set-hit and int8 kernels
+  *    ([[graft.functions.NgramKernels]]) against the
+  *    `transform(sequence(...), ...)` builders they replaced.
+  */
+class KernelEquivalenceSpec extends SparkSpec {
 
-  /** The pre-round-21 composite, verbatim. */
+  test("TopRunFrac matches the sorted longest-equal-run fold semantics") {
+    import spark.implicits._
+    val rows = Seq(
+      Seq("a", "b", "a", "c", "a"), // top multiplicity 3/5
+      Seq("x"),                     // single element -> 1/1
+      Seq("q", "q", "q"),           // all equal -> 1.0
+      Seq.empty[String]             // empty -> 0.0
+    ).toDF("g")
+    // reference: the sorted fold the kernel replaced
+    def oldTopFrac(g: org.apache.spark.sql.Column) = {
+      val best = aggregate(
+        array_sort(g),
+        struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
+        (acc, x) => {
+          val newRun = when(acc.getField("prev") === x, acc.getField("run") + 1L)
+            .otherwise(lit(1L))
+          struct(x.as("prev"), newRun.as("run"),
+                 greatest(acc.getField("best"), newRun).as("best"))
+        },
+        acc => acc.getField("best"))
+      when(size(g) === 0, lit(0.0)).otherwise(best.cast("double") / size(g))
+    }
+    val got = rows.select(
+      graft.functions.TopRunFrac(col("g")).as("nw"),
+      oldTopFrac(col("g")).as("old")).collect()
+    got.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
+      s"kernel ${r.getDouble(0)} != fold ${r.getDouble(1)}"))
+    // null input -> null (the old when/otherwise chain also yielded null)
+    val nullRow = Seq(Tuple1[Seq[String]](null)).toDF("g")
+      .select(graft.functions.TopRunFrac(col("g"))).collect()
+    assert(nullRow.head.isNullAt(0))
+  }
+
+  test("PpjoinPositionOk never rejects a pair the verifier would keep") {
+    // exhaustive small-universe check: all set pairs over universe 0..7,
+    // sizes 3..6; for every pair with round6(jaccard) >= t the bound must
+    // pass at the pair's FIRST common element's positions.
+    for (t <- Seq(0.2, 0.5, 0.8)) {
+      val sets = (0 to 7).toSet.subsets.filter(s => s.size >= 3 && s.size <= 6)
+        .map(_.toSeq.sorted).toSeq
+      for (a <- sets; b <- sets) {
+        val inter = a.intersect(b)
+        if (inter.nonEmpty) {
+          val j = inter.size.toDouble / (a.size + b.size - inter.size)
+          if (graft.pipeline.AllPairs.round6(j) >= t) {
+            val c = inter.min
+            val pa = a.indexOf(c); val pb = b.indexOf(c)
+            assert(graft.functions.PpjoinPositionOk.ok(
+              a.size, pa, b.size, pb, t - 5e-7),
+              s"t=$t a=$a b=$b j=$j rejected at first common element")
+          }
+        }
+      }
+    }
+  }
+
+  /** The composite WordNgrams replaced, verbatim. */
   private def oldWordNgrams(toks: Column, n: Int, distinct: Boolean): Column = {
     val grams = transform(
       sequence(lit(0), size(toks) - n),

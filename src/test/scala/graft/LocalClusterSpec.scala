@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Multi-executor rehearsal (VERDICT r12/r13 #1): the same queries that are
   * oracle-green on `local[*]` must produce identical results on
-  * `local-cluster[2,4,2048]`, where every task, broadcast and shuffle block
+  * `local-cluster[2,4,1536]`, where every task, broadcast and shuffle block
   * crosses a REAL process boundary — the serialization surface a
   * 1000-executor deployment exercises and a single JVM never does.
   *
@@ -103,7 +103,8 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
 
-    spark = ClusterMode.session("local-cluster[2,4,2048]", executorMemMb = 1536)
+    // Engine.builder gives each executor its worker's whole grant: 1536 MB.
+    spark = Engine.session("local-cluster[2,4,1536]")
     spark.sparkContext.setCheckpointDir(tmp("graft-ckpt-cluster"))
     // Force executor registration + one real job before asserting topology.
     spark.range(1000).repartition(8).count()
