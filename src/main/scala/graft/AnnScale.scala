@@ -104,12 +104,14 @@ object AnnScale {
       // Query frame from the CORPUS, not the index: the index is
       // partitioned by cell_id, so a vec_id filter over it scans every
       // cell — the corpus parquet serves the 10-row fetch with a pushed
-      // vec_id predicate instead (the query-frame searchIndexed overload).
+      // vec_id predicate instead.
       val qFrame = emb.filter(col("vec_id").isin(queryIds: _*))
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       for (nprobe <- Seq(1, 8)) {
         val got = timed(f"ivf probe (standing) nprobe=$nprobe") {
-          graft.pipeline.IvfAnn.searchIndexed(spark, s"$out/ivf", qFrame, k, nprobe)
+          graft.pipeline.IvfAnn.searchIndexedMulti(spark,
+              s"$out/ivf/centroids.parquet", Seq(s"$out/ivf/index.parquet"),
+              qFrame, k, nprobe)
             .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
         }
         println(f"[annscale]   -> indexed recall@$k nprobe=$nprobe: ${recall(got)}%.2f")
@@ -118,13 +120,15 @@ object AnnScale {
 
     // Append-drift rehearsal (mode=drift, not part of `all` — it re-derives
     // brute truth per tranche): build the standing index on HALF the
-    // corpus, then ingest the other half via appendToIndex in tranches.
+    // corpus, then ingest the other half in tranches, each one
+    // buildDeltaIndex batch assigned against the standing centroids and
+    // probed as the union of batches (the incremental artifact's layout).
     // The appended copies are sign-decorrelated directions the centroids
     // were never trained on, so this measures exactly the production decay
-    // question: how far can cheap append-ingest run before stale centroids
-    // cost recall and a buildIndex retrain is due? The closing full
-    // rebuild quantifies how much recall a retrain buys back at the same
-    // nprobe — BASELINE.md records the curve and names the trigger.
+    // question: how far can cheap delta ingest run before stale centroids
+    // cost recall and a retrain is due? The closing full rebuild
+    // quantifies how much recall a retrain buys back at the same nprobe —
+    // BASELINE.md records the curve and names the trigger.
     if (mode == "drift") {
       val copyOf = floor(col("vec_id") / 1000000000L)
       val half = math.max(1, factor / 2)
@@ -137,6 +141,8 @@ object AnnScale {
       }
       val qFrame = emb.filter(col("vec_id").isin(queryIds: _*))
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      var centroids = s"$out/drift/centroids.parquet"
+      var indexPaths = Seq(s"$out/drift/index.parquet")
       def recallNow(hi: Long, label: String): Unit = {
         val corpus = emb.filter(copyOf < hi)
         val truthNow = graft.pipeline.SimilarityQueries
@@ -144,7 +150,7 @@ object AnnScale {
           .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
         val got = timed(f"$label probe nprobe=$nprobe") {
           graft.pipeline.IvfAnn
-            .searchIndexed(spark, s"$out/drift", qFrame, k, nprobe)
+            .searchIndexedMulti(spark, centroids, indexPaths, qFrame, k, nprobe)
             .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
         }
         val r = if (truthNow.isEmpty) 1.0
@@ -159,14 +165,17 @@ object AnnScale {
         val hi = math.min(factor.toLong, lo + per)
         val batch = emb.filter(copyOf >= lo && copyOf < hi)
         timed(f"append copies $lo..${hi - 1} (${batch.count()} vectors)") {
-          graft.pipeline.IvfAnn.appendToIndex(batch, s"$out/drift")
+          graft.pipeline.IvfAnn.buildDeltaIndex(batch, centroids, s"$out/drift_$lo")
         }
+        indexPaths :+= s"$out/drift_$lo/index.parquet"
         recallNow(hi, f"appended ${(hi - half) * 100 / (factor - half)}%%")
         lo = hi
       }
       timed(f"drift full rebuild nlist=$nlist") {
-        graft.pipeline.IvfAnn.buildIndex(emb, nlist, s"$out/drift")
+        graft.pipeline.IvfAnn.buildIndex(emb, nlist, s"$out/drift_full")
       }
+      centroids = s"$out/drift_full/centroids.parquet"
+      indexPaths = Seq(s"$out/drift_full/index.parquet")
       recallNow(factor.toLong, "rebuilt 100%")
     }
 

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** Measures the incremental standing-artifact lifecycle
   * ([[graft.pipeline.DeltaIndex]]): does a delta build cost O(delta), and
-  * how does it compare to the full rebuild the fingerprint-keyed lifecycle
-  * would have paid on every append?
+  * how does it compare to the full rebuild a whole-corpus artifact would
+  * pay on every append?
   *
   * Shape: an initial corpus of `initialFactor` disjoint copies of the
   * sf0.1 documents/embeddings tables is ingested and indexed once; then

@@ -29,7 +29,7 @@ import graft.streaming.DocumentsStreaming
   *  - `nearDupCandidates`: the stream-static probe is stateless, so the
   *    union of per-microbatch outputs must equal the batch call's pair
   *    multiset EXACTLY, for any split.
-  *  - `nearDupCandidatesIndexed`: same pair multiset probed through a
+  *  - `nearDupCandidatesIndexedMulti`: same pair multiset probed through a
   *    standing [[pipeline.MinhashIndex]] artifact of the corpus (built
   *    per case — exercises contraction inside the artifact when the
   *    generated corpus carries exact-duplicate groups).
@@ -200,7 +200,7 @@ object StreamFuzz {
       val idxDir = java.nio.file.Files.createTempDirectory("graft_sf_idx").toString
       try {
         pipeline.MinhashIndex.buildSignatures(staticDf, idxDir)
-        val gotIdx = DocumentsStreaming.nearDupCandidatesIndexed(probeDf, idxDir)
+        val gotIdx = DocumentsStreaming.nearDupCandidatesIndexedMulti(probeDf, Seq(idxDir))
           .collect().map(row => (row.getLong(0), row.getLong(1), row.getDouble(2)))
           .sorted.toSeq
         check(gotIdx == want, seed,

@@ -318,7 +318,7 @@ object CurationQueries {
           sum(when(col("changed"), lit(1L)).otherwise(lit(0L)))
             .as("n_changed"))
       val jumped = graft.Engine.materialize(observed)
-      converged = ccRoundChanged(observed, jumped) == 0L
+      converged = ccRoundChanged(observed) == 0L
       // Rounds N−1/N are safely on stable storage — drop the previous cut.
       // Without this, rounds × cuts checkpoint files accumulate for the
       // whole session (Engine.releaseMaterialized scaladoc).
@@ -347,21 +347,18 @@ object CurationQueries {
     * CollectMetricsExec accumulators are populated when the action
     * returns — `observedMetrics` is a synchronous accumulator read with
     * no listener-bus dependency (an `Observation` future would wait on
-    * the shared event queue, seconds behind in a busy session).
-    * Fallback: the pre-round-21 probe — one extra job over the
-    * materialized frame reading the `changed` column — keeps the loop
-    * correct even with no metrics at all (e.g. a future materialize
-    * implementation that re-plans instead of executing the observed
-    * frame's QueryExecution). */
-  private def ccRoundChanged(
-      observed: DataFrame, jumped: DataFrame): Long =
-    observed.queryExecution.observedMetrics.get("cc_changed") match {
-      case Some(row) =>
-        if (row.isNullAt(row.fieldIndex("n_changed"))) 0L // sum over 0 rows
-        else row.getAs[Number]("n_changed").longValue()
-      case None =>
-        if (jumped.filter(col("changed")).limit(1).isEmpty) 0L else 1L
-    }
+    * the shared event queue, seconds behind in a busy session). A missing
+    * metric (e.g. a materialize that re-plans instead of executing the
+    * observed frame's QueryExecution) fails loudly rather than paying a
+    * silent extra probe job per round. */
+  private[graft] def ccRoundChanged(observed: DataFrame): Long = {
+    val row = observed.queryExecution.observedMetrics.getOrElse("cc_changed",
+      throw new IllegalStateException(
+        "connectedComponents: observed metric cc_changed missing after the " +
+          "checkpoint action — convergence cannot be read"))
+    if (row.isNullAt(row.fieldIndex("n_changed"))) 0L // sum over 0 rows
+    else row.getAs[Number]("n_changed").longValue()
+  }
 
   /** Transitive closure as a recursive CTE: DuckDB brute-forces reachability
     * from the same t=0.8 pair set, so a propagation bug that stops one round

@@ -1,27 +1,24 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{FileSystemException, Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Incremental (delta) maintenance for standing artifacts — the round-19
-  * lead item: [[StandingIndex]] keys a whole artifact on a corpus
-  * fingerprint, so ANY append invalidates and re-derives everything —
-  * O(corpus) work where O(delta) is achievable. At 100 TB with daily
-  * ingest that full rebuild is the last corpus-sized cost in the standing-
-  * artifact story. This lifecycle partitions the artifact by INGEST BATCH
-  * instead (the reference's REFRESH-vs-INVALIDATE split —
+/** The one lifecycle for standing on-disk artifacts (the MinHash signature
+  * table, the IVF ANN index): the artifact is partitioned by INGEST BATCH,
+  * so an append costs O(delta) instead of an O(corpus) rebuild (the
+  * reference's REFRESH-vs-INVALIDATE split —
   * fe/src/main/java/org/apache/impala/analysis/ResetMetadataStmt.java:
   * REFRESH reconciles the delta, INVALIDATE rebuilds):
   *
   *  - The unit of ingest is the source table's PART FILE (how a 100 TB
   *    corpus actually grows: a writer drops new parquet parts into the
-  *    table directory). Each live batch directory records the exact file
-  *    set it covers (`_covered.txt`: one `name|size|mtime` key per line,
-  *    written inside the batch so the ATOMIC_MOVE publishes data and
-  *    coverage together).
+  *    table directory; a single-file table is one one-file batch). Each
+  *    live batch directory records the exact file set it covers
+  *    (`_covered.txt`: one `name|size|mtime` key per line, written inside
+  *    the batch so the ATOMIC_MOVE publishes data and coverage together).
   *  - [[sync]] diffs the current file listing against the union of covered
   *    sets: new files → ONE delta build reading ONLY those files (the
   *    builder gets a DataFrame over exactly the new paths — DeltaIndexSpec
@@ -31,11 +28,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - Probe = UNION of batch partitions: readers resolve the live batch
   *    dirs through the `_manifest.txt` snapshot pointer ([[liveBatches]])
   *    and read `spark.read.parquet(batches.map(_ + "/payload.parquet"))`.
-  *    Batch publication reuses [[StandingIndex.ensure]] (staging + marker +
-  *    ATOMIC_MOVE + debris self-heal), and the batch NAME is a pure
-  *    function of the covered file keys, so two builders racing on the same
-  *    ingest state build identical batches and one rename wins — the same
-  *    idempotence argument as the fingerprint-keyed artifacts.
+  *  - Every batch — a sync's delta, a [[compact]] rebase, a [[retrain]] —
+  *    is published by [[publish]]: built in a private staging dir beside
+  *    its target, marker-stamped, and moved into place by one
+  *    same-filesystem ATOMIC_MOVE. The batch NAME is a pure function of
+  *    the covered file keys, so two builders racing on the same ingest
+  *    state build identical batches and one rename wins.
   *
   * Semantics contract for builders: the artifact relation must be a UNION-
   * DECOMPOSABLE function of the corpus — per-document signatures qualify
@@ -44,8 +42,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * candidate path at Jaccard 1.0, so the union probe equals the single-
   * build probe EXACTLY); corpus-global state must live in the initial
   * batch and be treated as standing ([[IvfAnn]]: centroids train on the
-  * initial batch, deltas assign against them — the documented
-  * append-then-retrain-on-drift contract of `appendToIndex`).
+  * initial batch, deltas assign against them, and [[retrain]] re-fits
+  * them when the measured recall drifts below the floor).
   *
   * Readers resolve the live batch set through `_manifest.txt` — an
   * atomically-replaced SNAPSHOT POINTER (the log-structured-table
@@ -58,8 +56,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `retainMillis` to [[sync]]/[[compact]], which tombstones retired dirs
   * and defers their deletion past the window; sync assumes one logical writer per corpus
   * generation (concurrent syncs of the SAME state are safe by
-  * idempotence — content-keyed batch names, byte-identical manifests —
-  * while syncs racing a source mutation are not a supported mode); and
+  * idempotence — content-keyed batch names, byte-identical manifests,
+  * and a GC that never sweeps a live writer's staging — while syncs
+  * racing a source mutation are not a supported mode); and
   * the live batch COUNT grows
   * with ingest cadence (a year of daily appends = 365 partitions on the
   * probe's union read — mostly harmless, each is a columnar scan root,
@@ -93,13 +92,84 @@ object DeltaIndex {
     files.map(p => (p, fileKey(p))).sortBy(_._2)
   }
 
-  /** Artifact ROOT for the incremental lifecycle: keyed by source PATH
-    * only — unlike [[StandingIndex.artifactDir]], the root must survive
+  /** Artifact ROOT: keyed by source PATH only — the root must survive
     * appends (freshness is per-batch via the covered sets). */
   def root(dir: String, table: String, prefix: String): Path = {
     val src = Paths.get(dir, s"$table.parquet").toAbsolutePath
     Paths.get(sys.props("java.io.tmpdir"),
       s"${prefix}_${Integer.toHexString(src.toString.hashCode)}")
+  }
+
+  /** Stamped into a fully built batch before it is published; a batch dir
+    * without it is debris, never live. */
+  def readyMarker(batch: Path): Path = batch.resolve("graft_index_ready")
+
+  /** Content key of a line set (first 8 bytes of its MD5, hex) — batch
+    * names are `batch_<seq>_<contentKey(covered keys)>`. */
+  private def contentKey(lines: Seq[String]): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(lines.mkString("\n").getBytes("UTF-8"))
+      .take(8).map("%02x".format(_)).mkString
+
+  /** Writer-private names (`_staging_*`, `_manifest_tmp_*`) end in
+    * `_<pid>_<nanos>`. */
+  private def writerSuffix: String =
+    s"${java.lang.ProcessHandle.current.pid}_${System.nanoTime}"
+
+  /** Debris of a writer that died mid-publish: a `_staging_*` dir or a
+    * `_manifest_tmp_*` file whose owning process is gone. A LIVE writer's
+    * (another thread, another process) is left alone — it may be one
+    * rename away from publishing. */
+  private def deadWriterDebris(name: String): Boolean =
+    (name.startsWith("_staging_") || name.startsWith("_manifest_tmp_")) && {
+      val parts = name.split('_')
+      !parts(parts.length - 2).toLongOption
+        .exists(pid => java.lang.ProcessHandle.of(pid).isPresent)
+    }
+
+  private def deleteTree(p: Path): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
+
+  /** Run `build(stagingDir)` and publish the result at `target` unless a
+    * ready artifact is already there (content-keyed adoption).
+    *
+    *  - **Atomic**: the build writes into a private `_staging_*` sibling
+    *    of `target` (same parent ⇒ same filesystem, so the directory
+    *    ATOMIC_MOVE cannot fail as a cross-device rename), gets the ready
+    *    marker, and moves into place whole. Nobody observes a half-built
+    *    batch; two builders of the same target each finish a private
+    *    build, one rename wins and the loser uses the winner's.
+    *  - **Self-heal**: marker-less debris at the target (a killed run, a
+    *    partial copy) would make the rename fail forever; on a failed
+    *    rename with no marker present the debris is deleted and the rename
+    *    retried once.
+    *  - **No leak**: staging is removed on exit, success or failure. */
+  private[graft] def publish(target: Path)(build: String => Unit): Unit = {
+    val marker = readyMarker(target)
+    if (Files.exists(marker)) return
+    Files.createDirectories(target.getParent)
+    val staging = target.resolveSibling(s"_staging_${target.getFileName}_$writerSuffix")
+    try {
+      build(staging.toString)
+      Files.createDirectories(staging)
+      Files.write(readyMarker(staging), Array.emptyByteArray)
+      try Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
+      catch {
+        case e: FileSystemException if !Files.exists(marker) =>
+          // marker-less debris at the target: replace it with our complete
+          // staging copy; if another healer beat us to the retry, theirs is
+          // ready — use it
+          if (Files.exists(target)) deleteTree(target)
+          try Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
+          catch {
+            case _: FileSystemException if Files.exists(marker) => ()
+            case _: FileSystemException => throw e
+          }
+        case _: FileSystemException => () // a concurrent builder won
+      }
+    } finally {
+      if (Files.exists(staging)) deleteTree(staging)
+    }
   }
 
   private def coveredFile(batch: Path): Path = batch.resolve("_covered.txt")
@@ -120,7 +190,7 @@ object DeltaIndex {
     * sight and delete only once the window has elapsed. */
   private def gcRetired(p: Path, retainMillis: Long): Unit = {
     if (retainMillis <= 0L) {
-      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
+      deleteTree(p)
     } else {
       val tomb = retiredFile(p)
       val now = System.currentTimeMillis
@@ -128,8 +198,7 @@ object DeltaIndex {
         Files.write(tomb, now.toString.getBytes("UTF-8"))
       } else {
         val ts = new String(Files.readAllBytes(tomb), "UTF-8").trim.toLong
-        if (now - ts >= retainMillis)
-          org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
+        if (now - ts >= retainMillis) deleteTree(p)
       }
     }
   }
@@ -143,12 +212,10 @@ object DeltaIndex {
     * content-keyed), so the last rename is a no-op overwrite. */
   private def writeManifest(root: Path, batchNames: Seq[String]): Unit = {
     Files.createDirectories(root)
-    val tmp = root.resolve(
-      s"_manifest_tmp_${java.lang.ProcessHandle.current.pid}_${System.nanoTime}")
+    val tmp = root.resolve(s"_manifest_tmp_$writerSuffix")
     Files.write(tmp, batchNames.mkString("\n").getBytes("UTF-8"))
     Files.move(tmp, manifestFile(root),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Live (published) batch dirs under `root`, oldest-first (the head is
@@ -161,7 +228,7 @@ object DeltaIndex {
     * the next sync writes the manifest — forward-compatible healing. */
   def liveBatches(root: Path): Seq[Path] = {
     if (!Files.isDirectory(root)) return Seq.empty
-    val ok = (p: Path) => Files.exists(StandingIndex.readyMarker(p)) &&
+    val ok = (p: Path) => Files.exists(readyMarker(p)) &&
       Files.exists(coveredFile(p))
     val mf = manifestFile(root)
     if (Files.exists(mf)) {
@@ -247,17 +314,12 @@ object DeltaIndex {
     if (fresh.nonEmpty) {
       // Batch name = seq prefix (ordering) + content key of the covered
       // set (idempotence: racing builders of the same ingest state target
-      // the same dir and ensure()'s rename race settles it).
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(fresh.map(_._2).mkString("\n").getBytes("UTF-8"))
-        .take(8).map("%02x".format(_)).mkString
-      val seq = f"${live.size}%06d"
-      val target = root.resolve(s"batch_${seq}_$key")
-      Files.createDirectories(root)
+      // the same dir and publish's rename race settles it).
+      val target = root.resolve(
+        f"batch_${live.size}%06d_${contentKey(fresh.map(_._2))}")
       val initial = live.headOption
-      val deltaDocs = spark.read.parquet(fresh.map(_._1.toString): _*)
-      StandingIndex.ensure(target) { staging =>
-        build(deltaDocs, staging, initial)
+      publish(target) { staging =>
+        build(spark.read.parquet(fresh.map(_._1.toString): _*), staging, initial)
         Files.write(Paths.get(staging, "_covered.txt"),
           fresh.map(_._2).mkString("\n").getBytes("UTF-8"))
       }
@@ -277,7 +339,9 @@ object DeltaIndex {
     // referenced dir unreferenced). Also sweeps writer crash debris that
     // no manifest can ever reference: orphaned `_manifest_tmp_*` files (a
     // writer that died between write and ATOMIC_MOVE — ADVICE r19) and
-    // `_staging_*` dirs (a compact that died mid-rewrite).
+    // `_staging_*` dirs (a build that died mid-publish) — only a DEAD
+    // writer's: a racing same-state sync may still be building in its
+    // staging dir or about to move its manifest tmp.
     if (Files.exists(manifestFile(root))) {
       val referenced = live.map(_.getFileName.toString).toSet
       val s = Files.list(root)
@@ -289,8 +353,8 @@ object DeltaIndex {
           // a retired-but-retained dir re-entered the snapshot (content-
           // keyed adoption after a rewound manifest): clear the tombstone
           // so a later lost-manifest listing fallback still counts it live
-          Files.delete(retiredFile(p))
-        else if (n.startsWith("_manifest_tmp_") || n.startsWith("_staging_"))
+          Files.deleteIfExists(retiredFile(p))
+        else if (deadWriterDebris(n))
           org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
       } finally s.close()
     }
@@ -329,30 +393,11 @@ object DeltaIndex {
     val live = liveBatches(root)
     if (live.size <= 1) return live
     val unionKeys = live.flatMap(coveredKeys).toSet.toSeq.sorted
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(unionKeys.mkString("\n").getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val target = root.resolve(s"batch_000000_$key")
-    if (!Files.exists(StandingIndex.readyMarker(target))) {
-      // Stage INSIDE the artifact root (a `_staging_*` sibling — invisible
-      // to liveBatches, swept by sync's GC if we crash): the publish below
-      // is a directory ATOMIC_MOVE, and java.io.tmpdir is not guaranteed
-      // to share a filesystem with the root — a cross-device rename throws
-      // AtomicMoveNotSupportedException (ADVICE r19). Same-parent staging
-      // makes the rename same-filesystem by construction.
-      val staging = root.resolve(
-        s"_staging_${key}_${java.lang.ProcessHandle.current.pid}_${System.nanoTime}")
-      try {
-        rewrite(live, staging.toString)
-        Files.write(staging.resolve("_covered.txt"),
-          unionKeys.mkString("\n").getBytes("UTF-8"))
-        Files.write(StandingIndex.readyMarker(staging), Array.emptyByteArray)
-        Files.move(staging, target,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } finally {
-        if (Files.exists(staging))
-          org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      }
+    val target = root.resolve(s"batch_000000_${contentKey(unionKeys)}")
+    publish(target) { staging =>
+      rewrite(live, staging)
+      Files.write(Paths.get(staging, "_covered.txt"),
+        unionKeys.mkString("\n").getBytes("UTF-8"))
     }
     publishSingle(root, target, live, retainMillis, "compact")
   }
@@ -408,30 +453,56 @@ object DeltaIndex {
              (build: (DataFrame, String) => Unit): Seq[Path] = {
     val current = sourceFiles(sourceDir, table)
     val keys = current.map(_._2)
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(("trained-full\n" + keys.mkString("\n")).getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val target = root.resolve(s"batch_000000_$key")
-    Files.createDirectories(root)
-    if (!Files.exists(StandingIndex.readyMarker(target))) {
-      // Same-parent staging for a guaranteed same-filesystem ATOMIC_MOVE,
-      // invisible to liveBatches, swept by sync's GC on a crash (the
-      // compact conventions).
-      val staging = root.resolve(
-        s"_staging_${key}_${java.lang.ProcessHandle.current.pid}_${System.nanoTime}")
-      try {
-        build(spark.read.parquet(current.map(_._1.toString): _*), staging.toString)
-        Files.write(staging.resolve("_covered.txt"),
-          keys.mkString("\n").getBytes("UTF-8"))
-        writeTrained(staging.toString, keys.toSet)
-        Files.write(StandingIndex.readyMarker(staging), Array.emptyByteArray)
-        Files.move(staging, target,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } finally {
-        if (Files.exists(staging))
-          org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      }
+    val target = root.resolve(s"batch_000000_${contentKey("trained-full" +: keys)}")
+    publish(target) { staging =>
+      build(spark.read.parquet(current.map(_._1.toString): _*), staging)
+      Files.write(Paths.get(staging, "_covered.txt"),
+        keys.mkString("\n").getBytes("UTF-8"))
+      writeTrained(staging, keys.toSet)
     }
     publishSingle(root, target, liveBatches(root), retainMillis, "retrain")
+  }
+
+  /** Private source dir of a two-append rehearsal of `<dir>/<table>.parquet`:
+    * keyed by the corpus path AND its file keys, so a regenerated corpus
+    * gets a fresh rehearsal (and, through [[root]], a fresh artifact). */
+  private[graft] def rehearsalDir(dir: String, table: String, prefix: String): Path = {
+    val src = Paths.get(dir, s"$table.parquet").toAbsolutePath.toString
+    Paths.get(sys.props("java.io.tmpdir"),
+      s"${prefix}_${contentKey(src +: sourceFiles(dir, table).map(_._2))}")
+  }
+
+  /** Replay the gate corpus as two appends through the real lifecycle. The
+    * gate corpus ships each table as ONE file, which [[sync]] sees as one
+    * batch; the rehearsal entries split the rows of `<dir>/<table>.parquet`
+    * by `standing` into two part files of a
+    * private source table ([[rehearsalDir]]), written one at a time with
+    * `sync(privateDir)` after each — so the artifact they probe is built,
+    * compacted and retrained by exactly the code production ingest runs.
+    * A part is written only if missing, so a warm call's syncs are no-ops.
+    * Like [[sync]], a cold rehearsal assumes one writer per corpus.
+    * Returns the private source dir. */
+  def rehearse(spark: SparkSession, dir: String, table: String, prefix: String,
+               standing: Column)(sync: String => Unit): String = {
+    val docs = graft.Tables.table(spark, dir, table)
+    val src = rehearsalDir(dir, table, prefix)
+    val tableDir = src.resolve(s"$table.parquet")
+    for ((slice, i) <- Seq(standing, !standing).zipWithIndex) {
+      val part = tableDir.resolve(s"part-$i.parquet")
+      if (!Files.exists(part)) {
+        // `_`-prefixed: invisible to sourceFiles while it is written
+        val staging = tableDir.resolve(s"_staging_${i}_$writerSuffix")
+        try {
+          docs.filter(slice).coalesce(1).write.parquet(staging.toString)
+          val s = Files.list(staging)
+          val written =
+            try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+            finally s.close()
+          Files.move(written.head, part)
+        } finally deleteTree(staging)
+      }
+      sync(src.toString)
+    }
+    src.toString
   }
 }

@@ -85,7 +85,7 @@ object IvfAnn {
 
   /** Probe `nprobe` cells per query against an already-built (index,
     * centroids) pair and return exact-cosine top-k within them — the
-    * shared core of [[search]] (in-memory build) and [[searchIndexed]]
+    * shared core of [[search]] (in-memory build) and [[searchIndexedMulti]]
     * (standing on-disk index). */
   private def probeTopK(index: DataFrame, centroids: DataFrame,
                         queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
@@ -96,7 +96,7 @@ object IvfAnn {
     // (ADVICE r19): a single evaluation of the queries×centroids scoring,
     // and no silent dependency on the probe ranking being deterministic
     // across two evaluations. The collect is |queries|·nprobe id pairs —
-    // probe batches are request-sized by contract (see [[searchIndexed]]:
+    // probe batches are request-sized by contract (see [[searchIndexedMulti]]:
     // the corpus side is never the query side), and the local relation is
     // re-broadcast to executors for the join, so nothing corpus-sized ever
     // lands on the driver.
@@ -172,7 +172,7 @@ object IvfAnn {
 
   /** Top-k within the nprobe nearest cells per query — self-contained form
     * (trains + assigns per call; for repeated probing build the index once
-    * with [[buildIndex]] and use [[searchIndexed]]: the AnnScale 1.5 M-
+    * with [[buildIndex]] and use [[searchIndexedMulti]]: the AnnScale 1.5 M-
     * vector rehearsal measured the per-call build at ~2 min vs millisecond
     * probes). */
   def search(emb: DataFrame, queryIds: Seq[Long], k: Int,
@@ -202,79 +202,54 @@ object IvfAnn {
     * IvfPruneProbeSpec) turns the probe into an nprobe/nlist-fraction
     * scan, and the O(n·nlist)
     * training/assignment cost is paid once, amortized over every
-    * subsequent [[searchIndexed]] call (AnnScale measured the per-call
-    * build at ~2 min for 1.5 M×612 vs seconds per probe batch). */
+    * subsequent [[searchIndexedMulti]] call (AnnScale measured the
+    * per-call build at ~2 min for 1.5 M×612 vs seconds per probe batch). */
   def buildIndex(emb: DataFrame, nlist: Int, indexDir: String): Unit = {
     val trained = trainCentroids(emb, nlist)
     trained.write.mode("overwrite").parquet(s"$indexDir/centroids.parquet")
-    val spark = emb.sparkSession
-    val centroids = spark.read.parquet(s"$indexDir/centroids.parquet")
-    assignCells(emb, centroids)
-      // co-locate each cell before the partitioned write: without this,
-      // every upstream task writes a file into every cell directory
-      // (tasks × nlist small files — measured 250 s build / 20 s probe at
-      // 1.5 M×612 from file-listing alone); hashed on cell_id each cell
-      // lands in one task ⇒ one file per cell
-      .repartition(math.min(nlist, 1024), col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id")
-      .parquet(s"$indexDir/index.parquet")
+    val centroids = emb.sparkSession.read.parquet(s"$indexDir/centroids.parquet")
+    writeCells(assignCells(emb, centroids), nlist, s"$indexDir/index.parquet")
   }
 
-  /** Append a batch of NEW vectors to a standing [[buildIndex]] artifact
-    * without retraining: assign the batch against the STANDING centroids
-    * (one broadcast scoring pass over only the new rows) and append into
-    * the existing cell partitions. This is the production ingest path — a
-    * daily 0.1% batch costs O(batch·nlist), not the O(corpus·nlist) full
-    * rebuild.
-    *
-    * Exact contract (pinned in IvfAnnSpec): after appends, the index holds
-    * BYTE-IDENTICAL rows to a single [[assignCells]] pass of the combined
-    * corpus against the same centroids — append changes freshness, never
-    * assignment semantics. What appends DO degrade is centroid fit: the
-    * cells were trained on the original distribution, so recall against
-    * the drifted corpus decays as the appended fraction grows
-    * (`graft.AnnScale` drift mode measures recall@k per appended tranche;
-    * BASELINE.md names the measured retrain trigger). Callers retrain by
-    * re-running [[buildIndex]] over the full corpus. */
-  def appendToIndex(newEmb: DataFrame, indexDir: String): Unit = {
-    val spark = newEmb.sparkSession
-    val centroids = spark.read.parquet(s"$indexDir/centroids.parquet")
-    val nlist = centroids.count().toInt
-    assignCells(newEmb, centroids)
-      // same one-file-per-cell co-location as buildIndex — an append that
-      // skipped this would scatter tasks × nlist small files per batch and
-      // erode probe-time file listing round over round
-      .repartition(math.min(nlist, 1024), col("cell_id"))
-      .write.mode("append").partitionBy("cell_id")
-      .parquet(s"$indexDir/index.parquet")
-  }
+  /** The cell_id-partitioned write of every index layout (build, delta,
+    * compaction). Each cell is co-located first: without that, every
+    * upstream task writes a file into every cell directory (tasks × nlist
+    * small files — measured 250 s build / 20 s probe at 1.5 M×612 from
+    * file-listing alone); hashed on cell_id each cell lands in one task ⇒
+    * one file per cell. */
+  private def writeCells(assigned: DataFrame, nlist: Int, path: String): Unit =
+    assigned.repartition(math.min(nlist, 1024), col("cell_id"))
+      .write.mode("overwrite").partitionBy("cell_id").parquet(path)
 
-  /** Delta batch for the INCREMENTAL lifecycle ([[DeltaIndex]]): same
-    * assignment semantics as [[appendToIndex]] (new vectors score against
-    * the STANDING centroids — byte-identical rows to a combined-corpus
-    * assignCells pass, the IvfAnnSpec contract), but the delta lands in
-    * its OWN immutable batch dir instead of appending into the published
-    * one, so publication stays a single ATOMIC_MOVE and live batches are
-    * never mutated. Probe side: [[searchIndexedMulti]] over the union of
-    * batch index paths. Centroid drift is the same documented story as
-    * appendToIndex: retrain (full rebuild) when `graft.AnnScale` drift
-    * mode says recall decayed past the trigger. */
+  /** Delta batch for the incremental lifecycle ([[DeltaIndex]]): new
+    * vectors score against the STANDING centroids (one broadcast scoring
+    * pass over only the new rows — O(batch·nlist), not the O(corpus·nlist)
+    * rebuild) and land in their OWN immutable batch dir, so publication
+    * stays a single ATOMIC_MOVE and live batches are never mutated. The
+    * union of batches holds BYTE-IDENTICAL rows to one [[assignCells]]
+    * pass of the combined corpus against the same centroids
+    * (DeltaIndexSpec). What deltas DO degrade is centroid fit: recall
+    * against the drifted corpus decays as the appended fraction grows
+    * (`graft.AnnScale` drift mode measures it per tranche), which
+    * [[ensureIncrementalGuarded]] answers with a measured-recall retrain. */
   def buildDeltaIndex(newEmb: DataFrame, centroidsPath: String,
                       stagingDir: String): Unit = {
-    val spark = newEmb.sparkSession
-    val centroids = spark.read.parquet(centroidsPath)
-    val nlist = centroids.count().toInt
-    assignCells(newEmb, centroids)
-      .repartition(math.min(nlist, 1024), col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id")
-      .parquet(s"$stagingDir/index.parquet")
+    val centroids = newEmb.sparkSession.read.parquet(centroidsPath)
+    writeCells(assignCells(newEmb, centroids), centroids.count().toInt,
+      s"$stagingDir/index.parquet")
   }
 
-  /** [[searchIndexed]] over the UNION of several batch index partitions —
-    * the probe side of the incremental lifecycle. All batches were
-    * assigned against the SAME standing centroids (the initial batch's),
-    * so the union is row-identical to one index built over the combined
-    * corpus with those centroids (DeltaIndexSpec pins it). */
+  /** Probe a standing index: `nprobe` cells per query, exact-cosine top-k
+    * within them, over the UNION of the artifact's batch index partitions
+    * (one path for a single-batch artifact). All batches were assigned
+    * against the SAME standing centroids (the initial batch's), so the
+    * union is row-identical to one index built over the combined corpus
+    * with those centroids (DeltaIndexSpec pins it), and the probe is
+    * row-for-row [[search]] with the same (nlist, nprobe) (IvfAnnSpec).
+    * The query frame `(query_id, q_emb)` comes from the CALLER (the
+    * corpus, a request batch, a file): the index is partitioned by
+    * cell_id, so fetching queries by vec_id FROM the index would prune
+    * nothing — a whole-index scan per probe batch. */
   def searchIndexedMulti(spark: org.apache.spark.sql.SparkSession,
                          centroidsPath: String, indexPaths: Seq[String],
                          queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
@@ -293,12 +268,11 @@ object IvfAnn {
     * state the post-compaction retrain guard depends on. */
   private[graft] val IncPrefix = "graft_ivf_inc_v2"
 
-  /** PRODUCTION incremental maintenance ([[DeltaIndex]]): the initial
-    * batch trains centroids and indexes its vectors; every later ingest
-    * batch is one [[buildDeltaIndex]] pass over ONLY the new part files
-    * (O(delta·nlist), vs the fingerprint-keyed artifact's O(corpus·nlist)
-    * rebuild). Returns (centroids path, index paths) for
-    * [[searchIndexedMulti]].
+  /** Reconcile the IVF artifact with the source table ([[DeltaIndex]]):
+    * the initial batch trains centroids and indexes its vectors; every
+    * later ingest batch is one [[buildDeltaIndex]] pass over ONLY the new
+    * part files (O(delta·nlist), not an O(corpus·nlist) rebuild). Returns
+    * (centroids path, index paths) for [[searchIndexedMulti]].
     *
     * `maxLiveBatches` > 0 makes the compaction cadence ENGINE-OWNED
     * (VERDICT r19 task 5): when a sync leaves more than that many live
@@ -468,42 +442,9 @@ object IvfAnn {
       // the compacted batch as full-trained and freeze post-compaction
       // drift forever (the VERDICT r19 lead finding).
       DeltaIndex.writeTrained(staging, DeltaIndex.trainedKeysOf(bs.head))
-      bs.map(b => spark.read.parquet(s"$b/index.parquet"))
-        .reduce(_ unionByName _)
-        .repartition(math.min(nlist, 1024), col("cell_id"))
-        .write.mode("overwrite").partitionBy("cell_id")
-        .parquet(s"$staging/index.parquet")
+      writeCells(bs.map(b => spark.read.parquet(s"$b/index.parquet"))
+        .reduce(_ unionByName _), nlist, s"$staging/index.parquet")
     }.map(_.toString)
-
-  /** Probe a standing [[buildIndex]] artifact with an external query frame
-    * `(query_id, q_emb)`: same output, row-for-row, as [[search]] with the
-    * same (nlist, nprobe) — pinned in IvfAnnSpec. The query frame comes
-    * from the CALLER (the original corpus, a request batch, a file): the
-    * index is partitioned by cell_id, so fetching queries by vec_id FROM
-    * the index would prune nothing — a whole-index scan per probe batch,
-    * exactly what the partitioned layout exists to avoid. */
-  def searchIndexed(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                    queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids.parquet")
-    val index = spark.read.parquet(s"$indexDir/index.parquet")
-    probeTopK(index, centroids, queries, k, nprobe)
-  }
-
-  /** Convenience vec_id form of [[searchIndexed]] — fetches the query
-    * vectors by scanning the index (no partition pruning on vec_id; fine
-    * for fixtures/specs, use the query-frame overload for repeated
-    * production probing). */
-  def searchIndexed(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                    queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids.parquet")
-    val index = spark.read.parquet(s"$indexDir/index.parquet")
-    val queries = index.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    // Hand probeTopK the already-loaded frames rather than delegating to
-    // the path-based overload, which would re-read index.parquet for the
-    // probe side (one extra full listing+scan per call — ADVICE r13).
-    probeTopK(index, centroids, queries, k, nprobe)
-  }
 
   /** Same query/k shape as q_ann_brute / q_ann_lsh; rows-only (approximate
     * by design), invariants pinned in IvfAnnSpec. */
@@ -512,89 +453,57 @@ object IvfAnn {
       k = 5, nlist = 16, nprobe = 4)
 
   /** The PRODUCTION probe path as a registry entry (VERDICT r14/r15 #5):
-    * [[buildIndex]] runs once per gate corpus (amortized across every
-    * subsequent Verify/Bench invocation via the fingerprint-keyed standing
-    * artifact — build-once lifecycle, atomic publish, and stale-debris
-    * self-heal all in [[StandingIndex.ensure]]), then [[searchIndexed]]
-    * probes it with a caller-provided query frame — the exact shape a
-    * serving deployment runs. Same (nlist, nprobe, k) as q_ann_ivf, so the
-    * same ivf_recall_min bound in tools/check.py applies against the
+    * [[ensureIncremental]] reconciles the artifact with the gate corpus
+    * (one batch, built on first use and reused by every later Verify/Bench
+    * invocation), then [[searchIndexedMulti]] probes it with a
+    * caller-provided query frame — the exact shape a serving deployment
+    * runs. Same (nlist, nprobe, k) as q_ann_ivf, so the same
+    * ivf_recall_min bound in tools/check.py applies against the
     * q_ann_brute ground truth. */
   val annIvfIndexed: QueryFn = (s, dir) => {
-    val idxDir = StandingIndex.artifactDir(dir, "embeddings", "graft_ivf_idx")
-    StandingIndex.ensure(idxDir) { staging =>
-      buildIndex(t(s, dir, "embeddings"), nlist = 16, staging)
-    }
-    val queries = t(s, dir, "embeddings")
-      .filter(col("vec_id") < 10L)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    searchIndexed(s, idxDir.toString, queries, k = 5, nprobe = 4)
+    val (c, is) = ensureIncremental(s, dir)
+    searchIndexedMulti(s, c, is, gateQueries(s, dir), k = 5, nprobe = 4)
   }
 
   /** Two-append REHEARSAL of the incremental IVF artifact on the gate
-    * corpus (single-file table ⇒ the file-grained [[DeltaIndex]] lifecycle
-    * is exercised in DeltaIndexSpec and measured by [[graft.DeltaBench]];
-    * here the append is a deterministic ~1/3 slice): centroids train on
-    * the standing 2/3, the delta third assigns against them into its own
-    * batch partition, the probe unions both. Approximate by design like
-    * the other IVF entries — recall vs q_ann_brute is gated in
-    * tools/check.py (`ivf_recall_min`), with the extra teeth that the
-    * centroids here never saw the delta vectors. */
+    * corpus ([[DeltaIndex.rehearse]]; the append is a deterministic ~1/3
+    * slice): centroids train on the standing 2/3, the delta third assigns
+    * against them into its own batch partition, the probe unions both.
+    * Approximate by design like the other IVF entries — recall vs
+    * q_ann_brute is gated in tools/check.py (`ivf_recall_min`), with the
+    * extra teeth that the centroids here never saw the delta vectors. */
   val annIvfDelta: QueryFn = (s, dir) => {
-    val idxDir = StandingIndex.artifactDir(dir, "embeddings", "graft_ivf_delta_v1")
-    StandingIndex.ensure(idxDir) { staging =>
-      val emb = t(s, dir, "embeddings")
-      val standing = col("vec_id") % 3 < 2
-      buildIndex(emb.filter(standing), nlist = 16, s"$staging/batch_0")
-      buildDeltaIndex(emb.filter(!standing),
-        s"$staging/batch_0/centroids.parquet", s"$staging/batch_1")
-    }
-    val queries = t(s, dir, "embeddings")
-      .filter(col("vec_id") < 10L)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    searchIndexedMulti(s, s"$idxDir/batch_0/centroids.parquet",
-      Seq(s"$idxDir/batch_0/index.parquet", s"$idxDir/batch_1/index.parquet"),
-      queries, k = 5, nprobe = 4)
+    val (c, is) = ensureIncremental(s, rehearsal(s, dir, "graft_ivf_delta"))
+    searchIndexedMulti(s, c, is, gateQueries(s, dir), k = 5, nprobe = 4)
   }
 
   /** The MEASURED-RECALL RETRAIN GUARD end-to-end on the gate corpus:
-    * same two-append layout as [[annIvfDelta]] (centroids never saw the
-    * delta third), then [[recallOfIndex]] prices the drift — at sf0.01
-    * the delta artifact measures ~0.54 with the hash-uniform sample
-    * (the pre-r20 lowest-id sample read ~0.74 — it over-weighted the
-    * trained batch), below the 0.95 floor, so the guard retrains over
-    * the full corpus and the probe answers from the retrained index.
-    * The driver's gate then scores THIS entry at the full-trained
-    * recall (~0.90) against a 0.80 bound set ABOVE the un-retrained
-    * artifact's 0.74 gate recall — the gate doesn't just observe the
-    * guard firing, it FAILS if the guard doesn't. The decision and
-    * measured recall are recorded in the artifact (`_guard.txt`) for
-    * post-hoc audit. */
+    * the same two appends as [[annIvfDelta]] (centroids never saw the
+    * delta third), then [[ensureIncrementalGuarded]] prices the drift — at
+    * sf0.01 the delta artifact measures ~0.54 with the hash-uniform sample,
+    * below the 0.95 floor, so the guard retrains over the full corpus and
+    * the probe answers from the retrained index. The oracle gate
+    * (tools/check.py) then scores THIS entry at the full-trained recall (~0.90) against a 0.80
+    * bound set ABOVE the un-retrained artifact's 0.74 gate recall — the
+    * gate doesn't just observe the guard firing, it FAILS if the guard
+    * doesn't. A warm call finds the full-trained artifact and only
+    * re-measures its recall. */
   val annIvfGuarded: QueryFn = (s, dir) => {
-    val idxDir = StandingIndex.artifactDir(dir, "embeddings", "graft_ivf_guard_v1")
-    StandingIndex.ensure(idxDir) { staging =>
-      val emb = t(s, dir, "embeddings")
-      val standing = col("vec_id") % 3 < 2
-      buildIndex(emb.filter(standing), nlist = 16, s"$staging/batch_0")
-      buildDeltaIndex(emb.filter(!standing),
-        s"$staging/batch_0/centroids.parquet", s"$staging/batch_1")
-      val r = recallOfIndex(s, s"$staging/batch_0/centroids.parquet",
-        Seq(s"$staging/batch_0/index.parquet", s"$staging/batch_1/index.parquet"),
-        k = 5, nprobe = 4, sampleN = 10)
-      val retrain = r < 0.95
-      if (retrain) buildIndex(emb, nlist = 16, s"$staging/retrained")
-      java.nio.file.Files.write(java.nio.file.Paths.get(staging, "_guard.txt"),
-        f"recall=$r%.4f retrain=$retrain%n".getBytes("UTF-8"))
-    }
-    val queries = t(s, dir, "embeddings").filter(col("vec_id") < 10L)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    if (java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(idxDir.toString, "retrained")))
-      searchIndexed(s, s"$idxDir/retrained", queries, k = 5, nprobe = 4)
-    else searchIndexedMulti(s, s"$idxDir/batch_0/centroids.parquet",
-      Seq(s"$idxDir/batch_0/index.parquet", s"$idxDir/batch_1/index.parquet"),
-      queries, k = 5, nprobe = 4)
+    val (c, is, _) = ensureIncrementalGuarded(s,
+      rehearsal(s, dir, "graft_ivf_guard"), k = 5, nprobe = 4,
+      recallFloor = 0.95, sampleN = 10)
+    searchIndexedMulti(s, c, is, gateQueries(s, dir), k = 5, nprobe = 4)
   }
+
+  private def rehearsal(s: org.apache.spark.sql.SparkSession, dir: String,
+                        prefix: String): String =
+    DeltaIndex.rehearse(s, dir, "embeddings", prefix,
+      col("vec_id") % 3 < 2)(ensureIncremental(s, _))
+
+  /** The gate's ten query vectors, fetched from the corpus. */
+  private def gateQueries(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings").filter(col("vec_id") < 10L)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
 
   val all: Map[String, QueryFn] = Map(
     "q_ann_ivf" -> annIvf,

@@ -31,10 +31,10 @@ import graft.operators.{t, QueryFn}
   * Identical semantics to the inline pipeline by construction — the same
   * shared helpers end to end — so `q_dedup_minhash_indexed` runs against
   * the SAME DuckDB oracle as `q_dedup_minhash_lsh` and must produce the
-  * same pairs (also pinned directly in MinhashIndexSpec). Build-once
-  * lifecycle, fingerprint freshness and atomic publish come from
-  * [[StandingIndex]]. Corpus×corpus broadcast safety is engine-level
-  * ([[graft.plans.CorpusBroadcastGuard]]).
+  * same pairs (also pinned directly in MinhashIndexSpec). Lifecycle —
+  * per-batch freshness, delta builds, compaction and atomic publish —
+  * comes from [[DeltaIndex]]. Corpus×corpus broadcast safety is
+  * engine-level ([[graft.plans.CorpusBroadcastGuard]]).
   */
 object MinhashIndex {
 
@@ -43,7 +43,7 @@ object MinhashIndex {
     * pass over the text.
     *
     * `outDir` MUST be a private staging directory (publish atomically via
-    * [[StandingIndex.ensure]], as every caller in this repo does): the
+    * [[DeltaIndex.sync]], as every caller in this repo does): the
     * organic branch derives `members.parquet` by re-reading the
     * `signatures.parquet` it just wrote into the same directory, so a
     * build aimed at a LIVE artifact directory would expose a window with
@@ -70,17 +70,32 @@ object MinhashIndex {
     c.members.foreach(graft.Engine.releaseMaterialized)
   }
 
-  /** Near-dup pairs from a standing signature artifact: representative
-    * band candidates from the pruned `(doc_id, sig)` columns, exact
-    * Jaccard from the pruned `(doc_id, sh_sorted)` columns, member
-    * expansion from `members.parquet`. Same output as
-    * [[DedupQueries.minhashPairs]] over the source corpus. */
-  def pairsIndexed(spark: SparkSession, idxDir: String,
-                   threshold: Double = 0.2): DataFrame =
-    pairsIndexedMulti(spark, Seq(idxDir), threshold)
+  /** Representative-level near-dup graph of the UNION of artifact batches:
+    * (signatures, member map, verified rep pairs). Band candidates come
+    * from the pruned `(doc_id, sig)` columns, exact Jaccard from the
+    * pruned `(doc_id, sh_sorted)` columns. */
+  private def repGraph(spark: SparkSession, idxDirs: Seq[String],
+                       threshold: Double): (DataFrame, DataFrame, DataFrame) = {
+    val sig = spark.read.parquet(idxDirs.map(d => s"$d/signatures.parquet"): _*)
+    val members = spark.read.parquet(idxDirs.map(d => s"$d/members.parquet"): _*)
+    val banded = sig
+      .select(col("doc_id"), posexplode(DedupQueries.bandHashes(col("sig"))))
+      .withColumnRenamed("pos", "band_id")
+      .withColumnRenamed("col", "band_hash")
+      .select(col("band_id"), col("band_hash"), col("doc_id"))
+    val repPairs = DedupQueries.verifyJaccard(
+      DedupQueries.bandCandidates(banded),
+      sig.select(col("doc_id"), col("sh_sorted")), threshold)
+    (sig, members, repPairs)
+  }
 
-  /** [[pairsIndexed]] over the UNION of several batch partitions — the
-    * probe side of the incremental lifecycle ([[DeltaIndex]]): each batch
+  /** Near-dup pairs from the standing signature artifact's live batches
+    * (one dir for a single-batch artifact): representative candidates and
+    * Jaccard ([[repGraph]]), member expansion from `members.parquet`. Same
+    * output as [[DedupQueries.minhashPairs]] over the source corpus.
+    *
+    * Batches are the probe side of the incremental lifecycle
+    * ([[DeltaIndex]]): each batch
     * carries the contracted signatures of ITS documents only, and the
     * union is exactly the single-build artifact's relation EXCEPT that an
     * exact-duplicate group split across batches appears as one
@@ -95,40 +110,27 @@ object MinhashIndex {
     * the same DuckDB oracle as the inline sweep. */
   def pairsIndexedMulti(spark: SparkSession, idxDirs: Seq[String],
                         threshold: Double = 0.2): DataFrame = {
-    val sig = spark.read.parquet(idxDirs.map(d => s"$d/signatures.parquet"): _*)
-    val members = spark.read.parquet(idxDirs.map(d => s"$d/members.parquet"): _*)
-    val banded = sig
-      .select(col("doc_id"), posexplode(DedupQueries.bandHashes(col("sig"))))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_hash")
-      .select(col("band_id"), col("band_hash"), col("doc_id"))
-    val repPairs = DedupQueries.verifyJaccard(
-      DedupQueries.bandCandidates(banded),
-      sig.select(col("doc_id"), col("sh_sorted")), threshold)
+    val (_, members, repPairs) = repGraph(spark, idxDirs, threshold)
     DedupQueries.expandPairs(repPairs, members, "jaccard", lit(1.0))
   }
 
-  /** Registry entry: build the artifact once per gate corpus (fingerprint
-    * keyed, amortized across Verify/Bench invocations), probe it. */
-  val minhashIndexed: QueryFn = (s, dir) => {
-    // the _v2 prefix is the artifact FORMAT version (contracted layout:
-    // members.parquet + per-rep signatures.parquet) — the corpus
-    // fingerprint alone cannot see a layout change across code versions
-    val idxDir = StandingIndex.artifactDir(dir, "documents", "graft_minhash_sig_v2")
-    StandingIndex.ensure(idxDir) { staging =>
-      buildSignatures(t(s, dir, "documents"), staging)
-    }
-    pairsIndexed(s, idxDir.toString)
-  }
+  /** Prefix of the artifact root; the version is the artifact FORMAT
+    * (contracted layout: members.parquet + per-rep signatures.parquet). */
+  private[graft] val IncPrefix = "graft_minhash_inc_v1"
 
-  /** PRODUCTION incremental maintenance ([[DeltaIndex]] — the round-19
-    * lead item): reconcile the standing signature artifact with the source
-    * table's current part files, deriving signatures for ONLY the new
-    * files (one delta batch per ingest), and return the live batch dirs
-    * for [[pairsIndexedMulti]]. A daily append costs O(delta) signature
-    * work instead of the fingerprint-keyed artifact's O(corpus) rebuild;
-    * a rewritten corpus still invalidates fully. */
-  /** `maxLiveBatches` > 0 makes the compaction cadence ENGINE-OWNED
+  /** Registry entry: reconcile the artifact with the gate corpus (one
+    * batch, built on first use and reused by every later Verify/Bench
+    * invocation), probe it. */
+  val minhashIndexed: QueryFn = (s, dir) =>
+    pairsIndexedMulti(s, ensureIncremental(s, dir))
+
+  /** Reconcile the standing signature artifact with the source table's
+    * current part files ([[DeltaIndex.sync]]), deriving signatures for
+    * ONLY the new files (one delta batch per ingest), and return the live
+    * batch dirs for [[pairsIndexedMulti]]. A daily append costs O(delta)
+    * signature work; a rewritten corpus invalidates fully.
+    *
+    * `maxLiveBatches` > 0 makes the compaction cadence ENGINE-OWNED
     * (VERDICT r19 task 5): when a sync leaves more than that many live
     * batches, one [[compactIncremental]] rebase fires inline — steady-state
     * probe fan-in stays bounded without the caller scheduling OPTIMIZE.
@@ -136,7 +138,7 @@ object MinhashIndex {
   def ensureIncremental(spark: SparkSession, sourceDir: String,
                         table: String = "documents", maxLiveBatches: Int = 0,
                         retainMillis: Long = 0L): Seq[String] = {
-    val root = DeltaIndex.root(sourceDir, table, "graft_minhash_inc_v1")
+    val root = DeltaIndex.root(sourceDir, table, IncPrefix)
     val live = DeltaIndex.sync(spark, sourceDir, table, root, retainMillis) {
       (delta, staging, _) => buildSignatures(delta, staging)
     }
@@ -161,7 +163,7 @@ object MinhashIndex {
   def compactIncremental(spark: SparkSession, sourceDir: String,
                          table: String = "documents",
                          retainMillis: Long = 0L): Seq[String] = {
-    val root = DeltaIndex.root(sourceDir, table, "graft_minhash_inc_v1")
+    val root = DeltaIndex.root(sourceDir, table, IncPrefix)
     DeltaIndex.compact(spark, root, retainMillis) { (batches, staging) =>
       spark.read.parquet(batches.map(b => s"$b/signatures.parquet"): _*)
         .write.mode("overwrite").parquet(s"$staging/signatures.parquet")
@@ -170,49 +172,30 @@ object MinhashIndex {
     }.map(_.toString)
   }
 
-  /** Two-append REHEARSAL of the incremental artifact on the gate corpus
-    * (which ships as one parquet file, so the file-grained [[DeltaIndex]]
-    * sees a single batch there — the file-level lifecycle is exercised by
-    * DeltaIndexSpec on real two-file corpora and measured by
-    * [[graft.DeltaBench]]): batch 0 indexes ~2/3 of the documents (the
-    * standing corpus), batch 1 the remaining third (the append) — each
-    * build reads only its slice — and the probe unions the two partitions.
-    * Runs the SAME DuckDB oracle as the inline sweep, so the driver
-    * hash-checks that an artifact built in two appends answers exactly
-    * like the one-shot corpus sweep. */
+  /** Two-append REHEARSAL on the gate corpus ([[DeltaIndex.rehearse]]):
+    * batch 0 indexes ~2/3 of the documents (the standing corpus), batch 1
+    * the remaining third (the append) — each build reads only its slice —
+    * and the probe unions the two partitions. Runs the SAME DuckDB oracle
+    * as the inline sweep, so the oracle gate hash-checks that an artifact
+    * built in two appends answers exactly like the one-shot corpus sweep. */
   val minhashDelta: QueryFn = (s, dir) => {
-    val idxDir = StandingIndex.artifactDir(dir, "documents", "graft_minhash_delta_v1")
-    StandingIndex.ensure(idxDir) { staging =>
-      val docs = t(s, dir, "documents")
-      val standing = col("doc_id") % 3 < 2
-      buildSignatures(docs.filter(standing), s"$staging/batch_0")
-      buildSignatures(docs.filter(!standing), s"$staging/batch_1")
-    }
-    pairsIndexedMulti(s, Seq(s"$idxDir/batch_0", s"$idxDir/batch_1"))
+    val src = rehearsal(s, dir, "graft_minhash_delta")
+    pairsIndexedMulti(s, ensureIncremental(s, src))
   }
 
-  /** COMPACTION rehearsal on the gate corpus (single-file table, same
-    * convention as [[minhashDelta]]): build the two-append artifact, then
-    * run the [[compactIncremental]] rebase — payload union of the batch
-    * partitions into ONE batch — and probe ONLY the compacted partition.
-    * Runs the SAME DuckDB oracle as the inline sweep, so the driver
-    * hash-checks that the OPTIMIZE pass loses/duplicates nothing: a
-    * rebase that dropped a batch, doubled one, or broke the cross-batch
-    * duplicate-representative invariant would hash-fail here. */
+  /** COMPACTION rehearsal: the same two appends, then the real
+    * [[compactIncremental]] rebase into ONE batch, probed alone. Same
+    * oracle as the inline sweep, so a rebase that dropped a batch, doubled
+    * one, or broke the cross-batch duplicate-representative invariant
+    * hash-fails here. */
   val minhashCompact: QueryFn = (s, dir) => {
-    val idxDir = StandingIndex.artifactDir(dir, "documents", "graft_minhash_compact_v1")
-    StandingIndex.ensure(idxDir) { staging =>
-      val docs = t(s, dir, "documents")
-      val standing = col("doc_id") % 3 < 2
-      buildSignatures(docs.filter(standing), s"$staging/batch_0")
-      buildSignatures(docs.filter(!standing), s"$staging/batch_1")
-      for (p <- Seq("signatures", "members"))
-        s.read.parquet(s"$staging/batch_0/$p.parquet",
-                       s"$staging/batch_1/$p.parquet")
-          .write.mode("overwrite").parquet(s"$staging/compacted/$p.parquet")
-    }
-    pairsIndexed(s, s"$idxDir/compacted")
+    val src = rehearsal(s, dir, "graft_minhash_compact")
+    pairsIndexedMulti(s, compactIncremental(s, src))
   }
+
+  private def rehearsal(s: SparkSession, dir: String, prefix: String): String =
+    DeltaIndex.rehearse(s, dir, "documents", prefix,
+      col("doc_id") % 3 < 2)(ensureIncremental(s, _))
 
   /** GROUPED answer (doc_id → cluster/survivor, the
     * [[CurationQueries.minhashCluster]] shape) probed from the STANDING
@@ -228,19 +211,10 @@ object MinhashIndex {
     * doc_id, so min-over-reps = min-over-members per component). */
   def clusterIndexed(spark: SparkSession, idxDirs: Seq[String],
                      docs: DataFrame, threshold: Double = 0.2): DataFrame = {
-    val sig = spark.read.parquet(idxDirs.map(d => s"$d/signatures.parquet"): _*)
-    val members = spark.read.parquet(idxDirs.map(d => s"$d/members.parquet"): _*)
-    val banded = sig
-      .select(col("doc_id"), posexplode(DedupQueries.bandHashes(col("sig"))))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_hash")
-      .select(col("band_id"), col("band_hash"), col("doc_id"))
-    val repPairs = DedupQueries.verifyJaccard(
-      DedupQueries.bandCandidates(banded),
-      sig.select(col("doc_id"), col("sh_sorted")), threshold)
-      .select(col("doc_a"), col("doc_b"))
+    val (sig, members, repPairs) = repGraph(spark, idxDirs, threshold)
     val repLabels = CurationQueries
-      .connectedComponents(sig.select(col("doc_id")), repPairs)
+      .connectedComponents(sig.select(col("doc_id")),
+        repPairs.select(col("doc_a"), col("doc_b")))
       .select(col("doc_id").as("rep"), col("label"))
     val memberLabels = members.join(repLabels, Seq("rep"))
       .select(col("doc_id"), col("label"))
@@ -260,13 +234,8 @@ object MinhashIndex {
   /** Registry entry: same standing artifact as [[minhashIndexed]]
     * (amortized across both probes), grouped answer, same DuckDB oracle
     * as the inline grouped sweep. */
-  val minhashClusterIndexed: QueryFn = (s, dir) => {
-    val idxDir = StandingIndex.artifactDir(dir, "documents", "graft_minhash_sig_v2")
-    StandingIndex.ensure(idxDir) { staging =>
-      buildSignatures(t(s, dir, "documents"), staging)
-    }
-    clusterIndexed(s, Seq(idxDir.toString), t(s, dir, "documents"))
-  }
+  val minhashClusterIndexed: QueryFn = (s, dir) =>
+    clusterIndexed(s, ensureIncremental(s, dir), t(s, dir, "documents"))
 
   val all: Map[String, QueryFn] = Map(
     "q_dedup_minhash_indexed" -> minhashIndexed,

@@ -138,12 +138,17 @@ object DocumentsStreaming {
     * every microbatch re-executes the static subtree, i.e. re-tokenizes,
     * re-shingles and re-hashes the whole corpus per batch. Fine at fixture
     * scale; at 100 TB the static side IS the cost, multiplied by batch
-    * count. This variant probes the STANDING signature artifact instead
-    * ([[graft.pipeline.MinhashIndex]] — fingerprint-keyed, built once,
-    * atomic publish): the static side reads the narrow per-representative
-    * (doc_id, sh_sorted, sig) parquet and the (doc_id, rep) member map,
-    * never the corpus text (the spec pins zero text-column reads), so the
-    * per-batch static work is a columnar scan of signature rows.
+    * count. This variant probes the live batches of the STANDING signature
+    * artifact instead ([[graft.pipeline.MinhashIndex.ensureIncremental]] —
+    * the [[graft.pipeline.DeltaIndex]] lifecycle; one dir for a
+    * single-batch artifact): the static side reads the narrow
+    * per-representative (doc_id, sh_sorted, sig) parquet and the
+    * (doc_id, rep) member map, never the corpus text (the spec pins zero
+    * text-column reads), so the per-batch static work is a columnar scan
+    * of signature rows. Batch and streaming probes share ONE index
+    * lifecycle: an ingest append derives a delta partition once, and both
+    * the batch sweep (`pairsIndexedMulti`) and the always-on stream probe
+    * read the same live batch set.
     *
     * Output is the same pair multiset as [[nearDupCandidates]] over the
     * corpus the artifact was built from: the artifact stores one banded
@@ -153,22 +158,10 @@ object DocumentsStreaming {
     * content ⇒ identical banded rows), and the member expansion restores
     * exactly those rows through a thin id join — the same
     * contraction-invariance argument as [[graft.pipeline.DedupQueries]]'s
-    * batch pipelines, pinned by StreamingCurationSpec's equality test. */
-  def nearDupCandidatesIndexed(stream: DataFrame, idxDir: String,
-                               threshold: Double = 0.5): DataFrame =
-    nearDupCandidatesIndexedMulti(stream, Seq(idxDir), threshold)
-
-  /** [[nearDupCandidatesIndexed]] over the UNION of incremental artifact
-    * batches ([[graft.pipeline.DeltaIndex]] /
-    * [[graft.pipeline.MinhashIndex.ensureIncremental]]) — batch and
-    * streaming probes now share ONE index lifecycle: an ingest append
-    * derives a delta partition once, and both the batch sweep
-    * (`pairsIndexedMulti`) and the always-on stream probe read the same
-    * live batch set. Same union-equals-single-build argument as the batch
-    * probe (per-batch representatives of one cross-batch content group
-    * carry identical banded rows, so collisions and member expansion
-    * reproduce the text-derived multiset — StreamingCurationSpec pins
-    * equality and the artifact-only scan set). */
+    * batch pipelines. Per-batch representatives of one cross-batch content
+    * group carry identical banded rows, so the union of batches reproduces
+    * the same multiset — StreamingCurationSpec pins equality and the
+    * artifact-only scan set. */
   def nearDupCandidatesIndexedMulti(stream: DataFrame, idxDirs: Seq[String],
                                     threshold: Double = 0.5): DataFrame = {
     val spark = stream.sparkSession

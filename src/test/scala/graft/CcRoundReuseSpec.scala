@@ -65,4 +65,25 @@ class CcRoundReuseSpec extends SparkSpec {
     Engine.releaseMaterialized(sym)
     Engine.releaseMaterialized(endpoints)
   }
+
+  test("convergence is read from the observed cc_changed metric, never probed") {
+    import spark.implicits._
+    // There is no fallback probe: a chain that converges proves every
+    // round's count came from the checkpoint action's observed metric.
+    val edges = (0L until 15L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val (labels, _) = pipeline.CurationQueries.connectedComponentsCounted(
+      (0L to 15L).toDF("doc_id"), edges)
+    assert(labels.select(col("label")).distinct().as[Long].collect().toSeq == Seq(0L))
+
+    val observed = Seq(true, false, true).toDF("changed")
+      .observe("cc_changed",
+        sum(when(col("changed"), lit(1L)).otherwise(lit(0L))).as("n_changed"))
+    observed.collect()
+    assert(pipeline.CurationQueries.ccRoundChanged(observed) == 2L)
+    // a frame whose plan carries no such metric fails loudly, naming it
+    val e = intercept[IllegalStateException] {
+      pipeline.CurationQueries.ccRoundChanged(Seq(true).toDF("changed"))
+    }
+    assert(e.getMessage.contains("cc_changed"), e.getMessage)
+  }
 }

@@ -5,10 +5,11 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Incremental (delta) maintenance of the standing artifacts
-  * ([[graft.pipeline.DeltaIndex]] + the MinhashIndex/IvfAnn incremental
-  * entry points) — the round-19 lead item. The properties that make the
-  * lifecycle O(delta) instead of O(corpus):
+/** The one lifecycle of the standing artifacts
+  * ([[graft.pipeline.DeltaIndex]] + the MinhashIndex/IvfAnn entry points):
+  * atomic publish, concurrent same-state syncs, the registry rehearsals,
+  * and the properties that make the lifecycle O(delta) instead of
+  * O(corpus):
   *
   *  1. a delta sync READS ONLY THE NEW PART FILES (FactScanSpec-style root-
   *     path pin on the frame handed to the builder);
@@ -174,7 +175,7 @@ class DeltaIndexSpec extends SparkSpec {
     val orphan = root.resolve("batch_999999_dead")
     Files.createDirectories(orphan)
     Files.copy(live.head.resolve("_covered.txt"), orphan.resolve("_covered.txt"))
-    Files.write(graft.pipeline.StandingIndex.readyMarker(orphan), Array.emptyByteArray)
+    Files.write(pipeline.DeltaIndex.readyMarker(orphan), Array.emptyByteArray)
     assert(pipeline.DeltaIndex.liveBatches(root) == live,
       "a dir outside the manifest snapshot must not be probed")
     org.apache.commons.io.FileUtils.deleteDirectory(orphan.toFile)
@@ -407,5 +408,110 @@ class DeltaIndexSpec extends SparkSpec {
       .as[(Long, Int, Long, Double)].collect().toSeq
     assert(multi == single)
     assert(multi.nonEmpty)
+    // the delta batch is visible to the probe: some appended vector surfaces
+    val appended = emb.filter(col("vec_id") % 3 === 2)
+      .select(col("vec_id")).as[Long].collect().toSet
+    assert(multi.exists(r => appended.contains(r._3)),
+      "no appended vector ever surfaces in the probe results")
+  }
+
+  /** `_staging_*` / `_manifest_tmp_*` entries left in `dir`. */
+  private def writerDebris(dir: java.nio.file.Path): Seq[String] = {
+    val s = Files.list(dir)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("_staging_") || n.startsWith("_manifest_tmp_")).toSeq
+    } finally s.close()
+  }
+
+  test("publish self-heals marker-less debris at the target") {
+    val debris = Paths.get(tmp("graft_publish_debris"), "idx")
+    Files.createDirectories(debris)
+    Files.write(debris.resolve("junk"), "half-built".getBytes)
+    // no ready marker — a plain rename would fail here forever
+    pipeline.DeltaIndex.publish(debris) { staging =>
+      Files.createDirectories(Paths.get(staging))
+      Files.write(Paths.get(staging, "payload"), "ok".getBytes)
+    }
+    assert(Files.exists(pipeline.DeltaIndex.readyMarker(debris)),
+      "self-heal must publish the fresh build over the debris")
+    assert(Files.exists(debris.resolve("payload")))
+    assert(!Files.exists(debris.resolve("junk")), "debris must be replaced")
+    assert(writerDebris(debris.getParent).isEmpty)
+  }
+
+  test("publish skips the build when ready, and cleans staging on failure") {
+    val idx = Paths.get(tmp("graft_publish_ready"), "idx")
+    Files.createDirectories(idx)
+    Files.write(pipeline.DeltaIndex.readyMarker(idx), Array.emptyByteArray)
+    pipeline.DeltaIndex.publish(idx) { _ =>
+      fail("build must not run when the marker is present")
+    }
+    // failure path: the staging dir must not leak, nothing is published
+    val idx2 = Paths.get(tmp("graft_publish_fail"), "idx")
+    intercept[RuntimeException] {
+      pipeline.DeltaIndex.publish(idx2) { staging =>
+        Files.createDirectories(Paths.get(staging))
+        throw new RuntimeException("boom")
+      }
+    }
+    assert(writerDebris(idx2.getParent).isEmpty, "failed build leaked its staging dir")
+    assert(!Files.exists(idx2), "failed build must not publish")
+  }
+
+  test("two concurrent syncs of one fresh source agree and leave no staging") {
+    val src = freshSource("graft_delta_concurrent")
+    val a = docs.filter(col("doc_id") % 3 < 2)
+    ingest(src, "documents", a)
+    val root = pipeline.DeltaIndex.root(src, "documents", "graft_spec_concurrent")
+    // Both builds must be in flight at once: the first to publish then
+    // runs its GC while the other is still writing into its staging dir.
+    val bothBuilding = new java.util.concurrent.CyclicBarrier(2)
+    def sync(): Seq[java.nio.file.Path] =
+      pipeline.DeltaIndex.sync(spark, src, "documents", root) { (delta, staging, _) =>
+        bothBuilding.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        delta.select(col("doc_id")).write.parquet(s"$staging/ids.parquet")
+      }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val results =
+      try {
+        val fs = Seq.fill(2)(pool.submit(
+          new java.util.concurrent.Callable[Seq[java.nio.file.Path]] { def call() = sync() }))
+        fs.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      } finally pool.shutdown()
+    assert(results(0) == results(1) && results(0).size == 1,
+      s"concurrent syncs disagree: $results")
+    assert(pipeline.DeltaIndex.liveBatches(root) == results(0))
+    assert(writerDebris(root).isEmpty, s"leftover writer debris: ${writerDebris(root)}")
+    assert(spark.read.parquet(s"${results(0).head}/ids.parquet").count() == a.count())
+  }
+
+  test("registry rehearsals run the real lifecycle: delta, compact, guarded") {
+    import spark.implicits._
+    def live(query: String, table: String, prefix: String, incPrefix: String) = {
+      val rows = SparkEntry.queries(query)(spark, sfDir)
+      val src = pipeline.DeltaIndex.rehearsalDir(sfDir, table, prefix).toString
+      (rows, pipeline.DeltaIndex.liveBatches(pipeline.DeltaIndex.root(src, table, incPrefix)))
+    }
+    val inline = pipeline.DedupQueries.minhashPairs(docs)
+      .as[(Long, Long, Double)].collect().sorted.toSeq
+    val mh = pipeline.MinhashIndex.IncPrefix
+    for ((q, prefix, batches) <- Seq(
+           ("q_dedup_minhash_delta", "graft_minhash_delta", 2),
+           ("q_dedup_minhash_compact", "graft_minhash_compact", 1))) {
+      val (rows, batchDirs) = live(q, "documents", prefix, mh)
+      assert(batchDirs.size == batches, s"$q: live batches $batchDirs")
+      assert(rows.as[(Long, Long, Double)].collect().sorted.toSeq == inline,
+        s"$q diverged from the inline sweep")
+    }
+    val ivf = pipeline.IvfAnn.IncPrefix
+    val (_, delta) = live("q_ann_ivf_delta", "embeddings", "graft_ivf_delta", ivf)
+    assert(delta.size == 2, s"q_ann_ivf_delta: live batches $delta")
+    val (_, guarded) = live("q_ann_ivf_guarded", "embeddings", "graft_ivf_guard", ivf)
+    assert(guarded.size == 1, s"q_ann_ivf_guarded: live batches $guarded")
+    val covered = pipeline.DeltaIndex.coveredKeysOf(guarded.head)
+    assert(covered.size == 2 && pipeline.DeltaIndex.trainedKeysOf(guarded.head) == covered,
+      "the guard must leave one batch trained on both appends")
   }
 }

@@ -32,54 +32,17 @@ class IvfAnnSpec extends SparkSpec {
     val cellDirs = new java.io.File(s"$dir/index.parquet")
       .listFiles.filter(_.getName.startsWith("cell_id="))
     assert(cellDirs.nonEmpty && cellDirs.length <= 16)
-    val viaIndex = IvfAnn.searchIndexed(spark, dir, (0L until 10L), 5, 4)
+    // queries come from the caller (the corpus), not a vec_id filter over
+    // the cell-partitioned index, which would prune nothing
+    val qFrame = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val viaIndex = IvfAnn.searchIndexedMulti(spark, s"$dir/centroids.parquet",
+        Seq(s"$dir/index.parquet"), qFrame, 5, 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     val direct = IvfAnn.search(emb, (0L until 10L), 5, 16, 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(viaIndex.toSeq == direct.toSeq,
       s"indexed search diverged from direct search")
-    // Query-frame overload (the production form: queries come from the
-    // caller, not a vec_id filter over the cell-partitioned index, which
-    // prunes nothing): must be row-equal to the vec_id convenience form.
-    val qFrame = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val viaFrame = IvfAnn.searchIndexed(spark, dir, qFrame, 5, 4)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    assert(viaFrame.toSeq == direct.toSeq,
-      s"query-frame searchIndexed diverged from direct search")
-  }
-
-  test("append lifecycle: appended index is byte-identical to a one-shot " +
-      "assignment of the combined corpus against the standing centroids") {
-    val emb = Tables.table(spark, sfDir, "embeddings")
-    val first = emb.filter(col("vec_id") % 3 =!= 0)   // initial build corpus
-    val batch = emb.filter(col("vec_id") % 3 === 0)   // later ingest batch
-    val dir = tmp("ivfappend")
-    IvfAnn.buildIndex(first, nlist = 16, dir)
-    IvfAnn.appendToIndex(batch, dir)
-
-    // Append must be pure ingest: same rows as assigning the combined
-    // corpus against the SAME standing (first-trained) centroids.
-    val centroids = spark.read.parquet(s"$dir/centroids.parquet")
-    // cell_id comes back as an int partition column from disk but as a
-    // long from assignCells — normalize before comparing
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("vec_id"), col("cell_id").cast("long")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val onDisk = canon(spark.read.parquet(s"$dir/index.parquet"))
-    val oneShot = canon(IvfAnn.assignCells(emb, centroids))
-    assert(onDisk.size == emb.count())
-    assert(onDisk == oneShot, "append changed assignment semantics")
-
-    // Probes over the appended index must surface appended vectors (a
-    // third of the corpus is appended; 10 queries × top-5 finding none
-    // would mean the appended partitions are invisible to the probe join).
-    val viaIndex = IvfAnn.searchIndexed(spark, dir, (0L until 10L), 5, 4)
-    assert(viaIndex.count() > 0)
-    val appendedIds = batch.select("vec_id").collect().map(_.getLong(0)).toSet
-    val retrieved = viaIndex.collect().map(_.getLong(2)).toSet
-    assert(retrieved.exists(appendedIds.contains),
-      "no appended vector ever surfaces in the probe results")
   }
 
   test("q_ann_ivf_indexed registry entry: builds once, reuses the standing " +
@@ -90,8 +53,8 @@ class IvfAnnSpec extends SparkSpec {
     // same (nlist, nprobe, k) ⇒ row-identical to the in-memory form
     assert(first == rows(IvfAnn.annIvf(spark, sfDir)),
       "indexed registry entry diverged from q_ann_ivf")
-    // second call must hit the fingerprint-keyed standing index (the ready
-    // marker exists now) and return the same rows from the on-disk artifact
+    // second call must find the artifact current (a no-op sync) and return
+    // the same rows from the on-disk batch
     assert(rows(IvfAnn.annIvfIndexed(spark, sfDir)) == first,
       "standing-index reuse changed results")
   }

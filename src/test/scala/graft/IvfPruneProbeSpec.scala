@@ -33,7 +33,8 @@ class IvfPruneProbeSpec extends SparkSpec {
     IvfAnn.buildIndex(emb, nlist = 16, dir)
     val queries = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val res = IvfAnn.searchIndexed(spark, dir, queries, k = 5, nprobe = 2)
+    val res = IvfAnn.searchIndexedMulti(spark, s"$dir/centroids.parquet",
+      Seq(s"$dir/index.parquet"), queries, k = 5, nprobe = 2)
     assert(res.collect().nonEmpty)
 
     val scans = allNodes(res.queryExecution.executedPlan).collect {

@@ -1,11 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.functions._
-
-/** The standing MinHash signature artifact ([[graft.pipeline.MinhashIndex]])
-  * and the shared build-once lifecycle ([[graft.pipeline.StandingIndex]]). */
+/** The standing MinHash signature artifact ([[graft.pipeline.MinhashIndex]]);
+  * its lifecycle is pinned in DeltaIndexSpec. */
 class MinhashIndexSpec extends SparkSpec {
 
   private def docs = Tables.table(spark, sfDir, "documents")
@@ -14,7 +10,7 @@ class MinhashIndexSpec extends SparkSpec {
     import spark.implicits._
     val dir = tmp("graft_mh_idx")
     pipeline.MinhashIndex.buildSignatures(docs, dir)
-    val indexed = pipeline.MinhashIndex.pairsIndexed(spark, dir)
+    val indexed = pipeline.MinhashIndex.pairsIndexedMulti(spark, Seq(dir))
       .as[(Long, Long, Double)].collect().sorted.toSeq
     val inline = pipeline.DedupQueries.minhashPairs(docs)
       .as[(Long, Long, Double)].collect().sorted.toSeq
@@ -27,7 +23,7 @@ class MinhashIndexSpec extends SparkSpec {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val dir = tmp("graft_mh_scan")
     pipeline.MinhashIndex.buildSignatures(docs, dir)
-    val plan = pipeline.MinhashIndex.pairsIndexed(spark, dir)
+    val plan = pipeline.MinhashIndex.pairsIndexedMulti(spark, Seq(dir))
       .queryExecution.optimizedPlan
     var tables = Map.empty[String, Int].withDefaultValue(0)
     (plan +: plan.subqueriesAll).foreach(_.foreach {
@@ -52,7 +48,7 @@ class MinhashIndexSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val dir = tmp("graft_mh_prune")
     pipeline.MinhashIndex.buildSignatures(docs, dir)
-    val df = pipeline.MinhashIndex.pairsIndexed(spark, dir)
+    val df = pipeline.MinhashIndex.pairsIndexedMulti(spark, Seq(dir))
     df.collect()
     def flatten(p: SparkPlan): Seq[SparkPlan] = {
       val nested = p match {
@@ -72,56 +68,5 @@ class MinhashIndexSpec extends SparkSpec {
       assert(!(cols.contains("sig") && cols.contains("sh_sorted")),
         s"unpruned artifact scan reads both payloads: $cols")
     }
-  }
-
-  test("ensure() self-heals marker-less debris at the target (ADVICE r17)") {
-    val debris = Paths.get(tmp("graft_mh_debris"), "idx")
-    Files.createDirectories(debris)
-    Files.write(debris.resolve("junk"), "half-built".getBytes)
-    // no ready marker — the old code's rename would fail here forever
-    pipeline.StandingIndex.ensure(debris) { staging =>
-      Files.createDirectories(Paths.get(staging))
-      Files.write(Paths.get(staging, "payload"), "ok".getBytes)
-    }
-    assert(Files.exists(pipeline.StandingIndex.readyMarker(debris)),
-      "self-heal must publish the fresh build over the debris")
-    assert(Files.exists(debris.resolve("payload")))
-    assert(!Files.exists(debris.resolve("junk")), "debris must be replaced")
-  }
-
-  test("ensure() skips the build when the artifact is ready, and cleans staging on failure") {
-    val idx = Paths.get(tmp("graft_mh_ready"), "idx")
-    Files.createDirectories(idx)
-    Files.write(pipeline.StandingIndex.readyMarker(idx), Array.emptyByteArray)
-    pipeline.StandingIndex.ensure(idx) { _ =>
-      fail("build must not run when the marker is present")
-    }
-    // failure path: the staging dir must not leak
-    val idx2 = Paths.get(tmp("graft_mh_fail"), "idx")
-    val tmpdir = Paths.get(sys.props("java.io.tmpdir"))
-    def stagingDirs() = {
-      val s = Files.list(tmpdir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.count(_.getFileName.toString.startsWith("idx_build_"))
-      } finally s.close()
-    }
-    val before = stagingDirs()
-    intercept[RuntimeException] {
-      pipeline.StandingIndex.ensure(idx2) { staging =>
-        Files.createDirectories(Paths.get(staging))
-        throw new RuntimeException("boom")
-      }
-    }
-    assert(stagingDirs() == before, "failed build leaked its staging dir")
-    assert(!Files.exists(idx2), "failed build must not publish")
-  }
-
-  test("artifact fingerprint tracks the source corpus bytes") {
-    val a = pipeline.StandingIndex.artifactDir(sfDir, "documents", "p")
-    val b = pipeline.StandingIndex.artifactDir(sfDir, "documents", "p")
-    assert(a == b, "same corpus must key the same artifact")
-    val other = pipeline.StandingIndex.artifactDir(sfDir, "embeddings", "p")
-    assert(a != other, "different sources must key different artifacts")
   }
 }

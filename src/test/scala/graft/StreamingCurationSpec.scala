@@ -135,7 +135,7 @@ class StreamingCurationSpec extends SparkSpec {
       .sorted.toSeq
 
     val indexedBatch =
-      DocumentsStreaming.nearDupCandidatesIndexed(probes.toDF(), idxDir)
+      DocumentsStreaming.nearDupCandidatesIndexedMulti(probes.toDF(), Seq(idxDir))
     // The static side must read the ARTIFACT only — never the corpus text.
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val scanPaths = indexedBatch.queryExecution.optimizedPlan.collect {
@@ -156,7 +156,7 @@ class StreamingCurationSpec extends SparkSpec {
     // projections, static side the artifact parquet).
     val input = MemoryStream[SDoc]
     val query = DocumentsStreaming
-      .nearDupCandidatesIndexed(input.toDF(), idxDir)
+      .nearDupCandidatesIndexedMulti(input.toDF(), Seq(idxDir))
       .writeStream.outputMode("append")
       .format("memory").queryName("cand_idx_out").start()
     input.addData(probes: _*)
