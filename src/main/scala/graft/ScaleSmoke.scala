@@ -85,7 +85,8 @@ object ScaleSmoke {
     // indexed lzop text, written distributed (one container + index per
     // partition, the layout real lzop writers + the reference's indexer
     // produce), then read back through the block-range split path. The
-    // interesting number is the read: it must scale with splits, not files.
+    // interesting number is the read (which includes lzo1x decompression
+    // of every compressed block): it must scale with splits, not files.
     if (only.forall(_.contains("lzo"))) {
       import org.apache.hadoop.fs.Path
       val lzoDir = s"$out/lineitem_lzo"

@@ -64,7 +64,7 @@ object Tables {
     * (one context per JVM — a real `stop()` would kill every other suite). */
   private[graft] def purgeWhere(dead: SparkSession => Boolean): Unit = {
     tableCache.keySet.removeIf(k => dead(k._1))
-    registeredDirs.removeIf(k => dead(k._1))
+    viewsDir.keySet.removeIf(s => dead(s))
     GraftFunctions.purgeStopped(dead)
   }
 
@@ -91,7 +91,7 @@ object Tables {
                             name: String): DataFrame = {
     val abs = new java.io.File(path).getAbsolutePath
     val tbl = s"graft_bkt_${name}_${Integer.toHexString(abs.hashCode)}"
-    registeredDirs.synchronized {
+    viewsDir.synchronized {
       if (!spark.catalog.tableExists(tbl)) {
         val props = new java.util.Properties()
         val in = new java.io.FileInputStream(new java.io.File(path, BucketMarker))
@@ -160,22 +160,25 @@ object Tables {
 
   /** Registers every table as a temp view so `spark.sql` works (the SQL
     * statement surface of SURVEY §2.11). Idempotent and cached per
-    * (session, dir) — several query builders call this per invocation, and
-    * re-reading ten parquet schemas per statement is pure fixed overhead. */
+    * session — several query builders call this per invocation, and
+    * re-reading ten parquet schemas per statement is pure fixed overhead.
+    * The memo holds the dir the session's views point at NOW: a session
+    * that registers A, then B, then A again must get A's tables back. */
   def registerViews(spark: SparkSession, dir: String): Unit =
-    // mark AFTER success, under a lock: marking first would turn every
-    // retry after a partial failure (one missing parquet path) into a
-    // silent no-op, and a concurrent caller could query half-registered
-    // views
-    registeredDirs.synchronized {
-      if (!registeredDirs.contains((spark, dir))) {
-        all.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
-        registeredDirs.add((spark, dir))
+    if (viewsDir.get(spark) != dir)
+      // mark AFTER success, under a lock: marking first would turn every
+      // retry after a partial failure (one missing parquet path) into a
+      // silent no-op, and a concurrent caller could query half-registered
+      // views
+      viewsDir.synchronized {
+        if (viewsDir.get(spark) != dir) {
+          all.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
+          viewsDir.put(spark, dir)
+        }
       }
-    }
 
-  private val registeredDirs = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]())
+  private val viewsDir =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
 
   private object GraftFunctions {
     private val done = java.util.Collections.newSetFromMap(

@@ -1,5 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.json.JsonWriteFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. The gate runs the
   * engine's own session profile, so it checks the semantics users get. */
@@ -25,27 +31,12 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      // Non-ASCII (the UTF-8 gate corpus carries multilingual literals):
-      // escape to \uXXXX so the dump is pure ASCII and immune to the
-      // consumer's locale default encoding. Java strings hold supplementary
-      // chars as surrogate pairs; escaping each half yields the valid JSON
-      // surrogate-escape form.
-      case c if c > '~' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Non-ASCII escaped (the UTF-8 gate corpus carries multilingual
+    // literals): the dump stays pure ASCII, immune to the consumer's
+    // locale default encoding.
+    JsonMapper.builder().enable(JsonWriteFeature.ESCAPE_NON_ASCII).build()
+      .writeValue(new java.io.File(s"$outDir/oracle_sql.json"),
+        SparkEntry.oracleSql.asJava)
     spark.stop()
   }
 }

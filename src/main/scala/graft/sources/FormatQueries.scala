@@ -77,10 +77,10 @@ object FormatQueries {
       .orderBy("s_suppkey")
   }
 
-  /** Clean-room lzop writer (with hadoop-lzo index) → split LZO scanner.
-    * The 64 KiB block size forces multi-block files so the index-based
-    * split path — not just single-stream decode — is what the oracle
-    * certifies. */
+  /** lzop writer (lzo1x-compressed blocks, hadoop-lzo index) → split LZO
+    * scanner. The 64 KiB block size forces multi-block files so the
+    * index-based split path — not just single-stream decode — is what the
+    * oracle certifies. */
   def lzoRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val src = supplier(spark, dir)
     val out = freshDir("lzo")

@@ -227,8 +227,8 @@ object LegacyFormats {
 
   /** LZO-compressed text tables (`compression_codec: lzo` across the
     * reference's workload matrices; scanner shim
-    * `be/src/exec/hdfs-lzo-text-scanner.cc`) via the clean-room lzop
-    * reader in [[Lzop]]. Parallelism follows the reference's scan-range
+    * `be/src/exec/hdfs-lzo-text-scanner.cc`) via the lzop reader in
+    * [[Lzop]]. Parallelism follows the reference's scan-range
     * model: with a hadoop-lzo `.index` side file, each file splits into
     * block ranges of ~`splitBytes` compressed bytes (one task each, lines
     * spanning a boundary owned by the split where they start); without an

@@ -1,30 +1,23 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream}
+import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException}
 import java.util.zip.Adler32
 
+import io.airlift.compress.MalformedInputException
+import io.airlift.compress.lzo.{LzoCompressor, LzoDecompressor}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-/** Clean-room LZO support: the lzo1x bitstream and the lzop container the
-  * reference's LZO text scanner reads (`be/src/exec/hdfs-lzo-text-scanner
-  * .cc` — a 107-line shim that dlopens the GPL impala-lzo library, which is
-  * why SURVEY §2.1 carried this row as a documented gap). Nothing here
-  * derives from that library: the decompressor is written from the
-  * published lzo1x instruction encoding (the format is documented openly,
-  * e.g. the Linux kernel's lzo.txt), the container from the lzop file
-  * format, and both are validated against the reference's own
-  * lzop-compressed test file whose per-block adler32 checksums act as a
-  * known-answer oracle (LzoSpec).
-  *
-  * The compressor side intentionally emits a single literal run — a valid
-  * lzo1x stream with ratio 1.0 — kept as a decoder test vehicle (LzoSpec
-  * round-trips it through [[Lzo.decompress]]); [[Lzop.writeText]] stores
-  * blocks raw, as real lzop does whenever compression does not help,
-  * because this engine only needs the WRITE path to fabricate fixtures.
-  * Production data arrives compressed by real writers, and the read path
-  * accepts any conforming stream.
-  */
+/** LZO text support: the lzop container the reference's LZO text scanner
+  * reads (`be/src/exec/hdfs-lzo-text-scanner.cc` — a 107-line shim that
+  * dlopens the GPL impala-lzo library). The lzo1x block codec is
+  * aircompressor's (`io.airlift.compress.lzo`, Apache-licensed, shipped
+  * among Spark's own jars); the container is ours ([[Lzop]]), because
+  * aircompressor's whole-file lzop streams do none of what the scanner
+  * needs: header flags, per-block adler32, `.index` block-range splits,
+  * split line ownership and lenient recovery. Both are validated against
+  * the reference's own lzop-compressed test file, whose per-block adler32
+  * checksums act as a known-answer oracle (LzoSpec). */
 object Lzo {
 
   /** The reference scanner's block-size cap; a block header field above
@@ -32,144 +25,16 @@ object Lzo {
     * by LzoSpec against the DataErrorsTest expectation). */
   val MaxBlockSize: Int = 64 * 1024 * 1024
 
+  /** Every corrupt-container and corrupt-stream failure: the one type
+    * lenient recovery ([[Lzop.splitLines]]) catches. */
   final class CorruptLzoException(msg: String) extends RuntimeException(msg)
-
-  /** lzo1x decompression. `srcLen` bytes at `src(srcOff)` must decode to
-    * exactly `dstLen` bytes; anything malformed throws. */
-  def decompress(src: Array[Byte], srcOff: Int, srcLen: Int,
-                 dstLen: Int): Array[Byte] = {
-    val dst = new Array[Byte](dstLen)
-    var ip = srcOff
-    val end = srcOff + srcLen
-    var op = 0
-    var state = 0
-
-    def u(i: Int): Int = src(i) & 0xff
-    def fail(what: String) =
-      throw new CorruptLzoException(s"malformed lzo1x stream: $what at input byte ${ip - srcOff}")
-    // every multi-byte instruction read checks the input bound first, so a
-    // truncated or garbage stream always surfaces as CorruptLzoException —
-    // the lenient scan path recovers from exactly that type, never from an
-    // ArrayIndexOutOfBounds escaping a raw read
-    def need(k: Int): Unit = if (ip + k > end) fail("truncated instruction")
-    def copyMatch(dist: Int, len: Int): Unit = {
-      if (dist > op) fail(s"match distance $dist exceeds output $op")
-      if (op + len > dstLen) fail(s"match of $len overflows output")
-      var from = op - dist
-      var n = len
-      while (n > 0) { dst(op) = dst(from); op += 1; from += 1; n -= 1 }
-    }
-    def literals(n: Int): Unit = {
-      if (ip + n > end || op + n > dstLen) fail(s"literal run of $n overflows")
-      System.arraycopy(src, ip, dst, op, n); ip += n; op += n
-    }
-    def extended(base: Int): Int = {
-      need(1)
-      var n = 0
-      while (u(ip) == 0) {
-        n += 255; ip += 1
-        if (ip >= end) fail("length extension")
-        // a run length beyond the block-size cap is corruption; unchecked
-        // it would overflow Int to a negative length that sneaks past the
-        // literal/match bound guards
-        if (n > MaxBlockSize) fail("length extension exceeds block cap")
-      }
-      n += base + u(ip); ip += 1
-      n
-    }
-
-    // first-byte special cases (stream prologue)
-    if (srcLen <= 0) fail("empty stream")
-    val first = u(ip)
-    if (first > 21) { ip += 1; literals(first - 17); state = 4 }
-    else if (first >= 18) { ip += 1; literals(first - 17); state = first - 17 }
-
-    var done = false
-    while (!done) {
-      if (ip >= end) fail("truncated stream")
-      val t = u(ip); ip += 1
-      if (t < 16) {
-        if (state == 0) { // long literal run
-          val n = if (t == 0) extended(15) else t
-          literals(n + 3)
-          state = 4
-        } else if (state < 4) { // 2-byte match within 1kB
-          need(1)
-          val h = u(ip); ip += 1
-          val dist = (h << 2) + ((t >> 2) & 3) + 1
-          copyMatch(dist, 2)
-          val s = t & 3
-          literals(s); state = s
-        } else { // state == 4: 3-byte match 2..3kB behind
-          need(1)
-          val h = u(ip); ip += 1
-          val dist = (h << 2) + ((t >> 2) & 3) + 2049
-          copyMatch(dist, 3)
-          val s = t & 3
-          literals(s); state = s
-        }
-      } else if (t < 32) { // M4: far match, 16..48kB
-        val len = (if ((t & 7) == 0) extended(7) else t & 7) + 2
-        need(2)
-        val word = u(ip) | (u(ip + 1) << 8); ip += 2
-        val dist = 16384 + (((t >> 3) & 1) << 14) + (word >> 2)
-        if (dist == 16384) { // end-of-stream marker
-          if (len != 3) fail("bad EOF marker")
-          done = true
-        } else {
-          copyMatch(dist, len)
-          val s = word & 3
-          literals(s); state = s
-        }
-      } else if (t < 64) { // M3: match within 16kB
-        val len = (if ((t & 31) == 0) extended(31) else t & 31) + 2
-        need(2)
-        val word = u(ip) | (u(ip + 1) << 8); ip += 2
-        val dist = 1 + (word >> 2)
-        copyMatch(dist, len)
-        val s = word & 3
-        literals(s); state = s
-      } else { // M2: short match within 2kB
-        val len = if (t < 128) 3 + ((t >> 5) & 1) else 5 + ((t >> 5) & 3)
-        need(1)
-        val h = u(ip); ip += 1
-        val dist = (h << 3) + ((t >> 2) & 7) + 1
-        copyMatch(dist, len)
-        val s = t & 3
-        literals(s); state = s
-      }
-    }
-    if (op != dstLen)
-      throw new CorruptLzoException(
-        s"lzo1x stream decoded $op bytes, block header said $dstLen")
-    dst
-  }
-
-  /** A conforming lzo1x stream that encodes `src` as one literal run. */
-  def compressLiteral(src: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(src.length + 8)
-    if (src.length > 0 && src.length <= 238) {
-      out.write(src.length + 17) // prologue literal form (18..255)
-      out.write(src)
-    } else if (src.length > 238) {
-      // long-run instruction: 0, 255-extension zeros, nonzero remainder;
-      // decoded length = 3 + 15 + 255*zeros + remainder
-      out.write(0)
-      var rem = src.length - 3 - 15
-      while (rem > 255) { out.write(0); rem -= 255 }
-      out.write(rem)
-      out.write(src)
-    }
-    out.write(0x11); out.write(0); out.write(0) // EOF marker (M4 dist 16384)
-    out.toByteArray
-  }
 }
 
 /** The lzop container: magic, versioned header with adler32, then
   * [uncompressed-size][compressed-size][checksums][payload] blocks and a
   * zero-size terminator. Blocks whose compressed size equals the
-  * uncompressed size are stored raw (real lzop does this when compression
-  * does not help — and so does [[Lzo.compressLiteral]]'s caller here). */
+  * uncompressed size are stored raw (lzop does this whenever compression
+  * does not shrink the block, and so does [[writeText]]). */
 object Lzop {
 
   private val Magic =
@@ -229,9 +94,7 @@ object Lzop {
     if (cl < ul && (h.flags & FCrc32C) != 0) in.readInt()
     val payload = new Array[Byte](cl)
     in.readFully(payload)
-    val out =
-      if (cl == ul) payload // stored raw
-      else Lzo.decompress(payload, 0, cl, ul)
+    val out = if (cl == ul) payload else decompress(payload, ul) // raw if equal
     if ((h.flags & FAdler32D) != 0) {
       val a = new Adler32; a.update(out)
       if (a.getValue.toInt != adlerD)
@@ -241,6 +104,22 @@ object Lzop {
     Some(out)
   }
 
+  /** One lzo1x block that must decode to exactly `ul` bytes. The block is
+    * untrusted input: the codec's MalformedInputException becomes the
+    * container's corruption type, so lenient recovery sees one kind. */
+  private def decompress(payload: Array[Byte], ul: Int): Array[Byte] = {
+    val out = new Array[Byte](ul)
+    val n =
+      try new LzoDecompressor().decompress(payload, 0, payload.length, out, 0, ul)
+      catch { case e: MalformedInputException =>
+        throw new Lzo.CorruptLzoException(s"malformed lzo1x stream: ${e.getMessage}")
+      }
+    if (n != ul)
+      throw new Lzo.CorruptLzoException(
+        s"lzo1x stream decoded $n bytes, block header said $ul")
+    out
+  }
+
   private def checkSize(n: Int): Unit =
     if (n < 0 || n > Lzo.MaxBlockSize)
       // the reference scanner's exact wording (DataErrorsTest
@@ -248,10 +127,11 @@ object Lzop {
       throw new Lzo.CorruptLzoException(
         s"Blocksize: ${n & 0xffffffffL} is greater than LZO_MAX_BLOCK_SIZE: ${Lzo.MaxBlockSize}")
 
-  /** Write `lines` as an lzop text file in `blockSize` chunks (splitting
-    * only at line boundaries would leak schema into the container, so the
-    * chunking is byte-exact like real lzop: lines MAY span blocks) plus a
-    * hadoop-lzo-style `.index` side file of big-endian block offsets. */
+  /** Write `lines` as an lzop text file of lzo1x-compressed `blockSize`
+    * chunks (splitting only at line boundaries would leak schema into the
+    * container, so the chunking is byte-exact like real lzop: lines MAY
+    * span blocks) plus a hadoop-lzo-style `.index` side file of big-endian
+    * block offsets. */
   def writeText(lines: Iterator[String], file: Path, conf: Configuration,
                 blockSize: Int = 256 * 1024): Unit = {
     val fs = file.getFileSystem(conf)
@@ -273,22 +153,22 @@ object Lzop {
       val all = new ByteArrayOutputStream()
       lines.foreach { l => all.write(l.getBytes("UTF-8")); all.write('\n') }
       val bytes = all.toByteArray
+      val codec = new LzoCompressor()
+      val packed = new Array[Byte](codec.maxCompressedLength(blockSize))
       var off = 0
       var fileOff = 9L + body.length + 4
       while (off < bytes.length) {
         val n = math.min(blockSize, bytes.length - off)
-        val block = java.util.Arrays.copyOfRange(bytes, off, off + n)
-        // stored raw (cl == ul): a literal-only lzo1x stream is always
-        // >= input+4 bytes, so real lzop would store raw here too — and
-        // the read path's DECOMPRESSION is known-answer-tested against a
-        // genuinely compressed reference file, not this writer
+        // lzop's rule: store the block raw (cl == ul) unless compression
+        // shrinks it
+        val cl = math.min(n, codec.compress(bytes, off, n, packed, 0, packed.length))
+        val a = new Adler32; a.update(bytes, off, n)
         idx.writeLong(fileOff)
         out.writeInt(n)
-        out.writeInt(block.length)
-        val a = new Adler32; a.update(block)
+        out.writeInt(cl)
         out.writeInt(a.getValue.toInt)
-        out.write(block)
-        fileOff += 12 + block.length
+        if (cl < n) out.write(packed, 0, cl) else out.write(bytes, off, n)
+        fileOff += 12 + cl
         off += n
       }
       out.writeInt(0) // terminator

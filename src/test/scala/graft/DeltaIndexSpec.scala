@@ -52,6 +52,15 @@ class DeltaIndexSpec extends SparkSpec {
     b.result()
   }
 
+  /** Every `cell_id=` dir of an IVF index path holds exactly one parquet
+    * file (the cell write co-locates each cell in one task). */
+  private def oneFilePerCell(indexPath: String): Boolean = {
+    val cells = new java.io.File(indexPath).listFiles
+      .filter(_.getName.startsWith("cell_id="))
+    cells.nonEmpty &&
+      cells.forall(_.listFiles.count(_.getName.endsWith(".parquet")) == 1)
+  }
+
   test("sync builds from only the new part files, and only when there are any") {
     val src = freshSource("graft_delta_src")
     val a = docs.filter(col("doc_id") % 3 < 2)
@@ -317,6 +326,7 @@ class DeltaIndexSpec extends SparkSpec {
       Paths.get(src, "embeddings.parquet").toFile)
     val (c3, i3) = pipeline.IvfAnn.compactIncremental(spark, src, "embeddings")
     assert(i3.size == 1 && c3 != c2)
+    assert(oneFilePerCell(i3.head))
     val postCentroids = spark.read.parquet(c3)
       .as[(Long, Array[Float])].collect().sortBy(_._1).map(r => (r._1, r._2.toSeq)).toSeq
     assert(postCentroids == preCentroids, "centroids are standing state — byte-carried")
@@ -382,6 +392,7 @@ class DeltaIndexSpec extends SparkSpec {
     ingest(src, "embeddings", emb.filter(col("vec_id") % 3 === 2))
     val (c2, i2) = pipeline.IvfAnn.ensureIncremental(spark, src, "embeddings", nlist = 8)
     assert(i2.size == 2 && c2 == c1, "centroids are standing state of the initial batch")
+    assert(i2.forall(oneFilePerCell))
 
     // assignment parity: union of batch indexes == one assignCells pass of
     // the combined corpus against the standing centroids

@@ -32,6 +32,8 @@ class IvfAnnSpec extends SparkSpec {
     val cellDirs = new java.io.File(s"$dir/index.parquet")
       .listFiles.filter(_.getName.startsWith("cell_id="))
     assert(cellDirs.nonEmpty && cellDirs.length <= 16)
+    // each cell is co-located before the write: one file per cell
+    assert(cellDirs.forall(_.listFiles.count(_.getName.endsWith(".parquet")) == 1))
     // queries come from the caller (the corpus), not a vec_id filter over
     // the cell-partitioned index, which would prune nothing
     val qFrame = emb.filter(col("vec_id") < 10)

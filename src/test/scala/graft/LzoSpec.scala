@@ -10,8 +10,8 @@ import graft.sources.{LegacyFormats, Lzo, Lzop}
 /** The LZO text surface (reference `compression_codec: lzo` dimension;
   * scanner shim hdfs-lzo-text-scanner.cc). Validation layers: a
   * known-answer oracle — the reference's own lzop file, whose per-block
-  * adler32 must match our decompressor's output — plus round-trips and the
-  * DataErrorsTest recovery case. */
+  * adler32 must match the decoded output — plus round-trips through the
+  * compressing writer and the DataErrorsTest recovery case. */
 class LzoSpec extends SparkSpec {
 
   private def badLzo(dir: String): Path = {
@@ -111,28 +111,70 @@ class LzoSpec extends SparkSpec {
     assert(got == Seq(("plain", 7), ("x|y", null)))
   }
 
-  test("literal-only compressor output is a conforming lzo1x stream") {
-    for (n <- Seq(0, 1, 4, 5, 238, 239, 300, 100000)) {
-      val src = Array.tabulate(n)(i => (i * 31 % 251).toByte)
-      val packed = Lzo.compressLiteral(src)
-      if (n > 0)
-        assert(Lzo.decompress(packed, 0, packed.length, n).sameElements(src))
-    }
+  /** The raw (ul, cl, adler32, payload) blocks of an lzop file. */
+  private def rawBlocks(file: String): Seq[(Int, Int, Int, Array[Byte])] = {
+    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+      new java.io.FileInputStream(file)))
+    try {
+      Lzop.readHeader(in)
+      Iterator.continually(in.readInt()).takeWhile(_ != 0).map { ul =>
+        val cl = in.readInt()
+        val adler = in.readInt()
+        val payload = new Array[Byte](cl)
+        in.readFully(payload)
+        (ul, cl, adler, payload)
+      }.toList
+    } finally in.close()
   }
 
-  test("garbage streams fail as CorruptLzoException, never array errors") {
+  test("writeText compresses blocks that shrink and stores the rest raw") {
+    val dir = tmp("graft_lzo_codec")
+    val conf = spark.sessionState.newHadoopConf()
+    // repetitive rows compress; random rows over 93 printable symbols
+    // cannot shrink under lzo1x (no entropy coding), so their blocks must
+    // be stored raw
+    val rnd = new scala.util.Random(3)
+    val printable = (33 to 126).map(_.toChar).filter(_ != '\\')
+    val rows = (0 until 4000).map(i => s"$i|name_$i|${i % 7}") ++
+      Seq.fill(400)(Seq.fill(60)(printable(rnd.nextInt(printable.size))).mkString)
+    Lzop.writeText(rows.iterator, new Path(s"$dir/mixed.lzo"), conf,
+      blockSize = 4096)
+    val blocks = rawBlocks(s"$dir/mixed.lzo")
+    assert(blocks.exists { case (ul, cl, _, _) => cl < ul })
+    assert(blocks.exists { case (ul, cl, _, _) => cl == ul })
+    assert(blocks.forall { case (ul, cl, _, _) => cl <= ul })
+    val got = LegacyFormats.readLzoText(spark, dir,
+      StructType.fromDDL("line STRING"), sep = "\t", splitBytes = 8192)
+      .collect().map(_.getString(0)).toSeq
+    assert(got.sorted == rows.sorted)
+  }
+
+  test("random and truncated block payloads fail as CorruptLzoException") {
     // lenient recovery catches exactly CorruptLzoException; a raw
     // ArrayIndexOutOfBounds would crash the task instead of recovering
-    val rnd = new scala.util.Random(7)
-    for (trial <- 0 until 200; len <- Seq(1, 2, 3, 7, 19)) {
-      val junk = Array.fill(len)(rnd.nextInt(256).toByte)
-      try { Lzo.decompress(junk, 0, len, 64); () }
-      catch { case _: Lzo.CorruptLzoException => () } // anything else fails
+    def readOne(ul: Int, adler: Int, payload: Array[Byte]): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new java.io.DataOutputStream(bos)
+      out.writeInt(ul); out.writeInt(payload.length); out.writeInt(adler)
+      out.write(payload)
+      Lzop.readBlock(new java.io.DataInputStream(
+        new java.io.ByteArrayInputStream(bos.toByteArray)), Lzop.Header(0x01)).get
     }
-    // truncation of a VALID stream mid-instruction must also be Corrupt
-    val good = Lzo.compressLiteral(Array.tabulate(300)(_.toByte))
-    for (cut <- 1 until good.length) {
-      try { Lzo.decompress(good, 0, cut, 300); () }
+    val rnd = new scala.util.Random(7)
+    for (_ <- 0 until 200; len <- Seq(1, 2, 3, 7, 19, 300)) {
+      val junk = Array.fill(len)(rnd.nextInt(256).toByte)
+      intercept[Lzo.CorruptLzoException](readOne(64, 0, junk))
+    }
+    // truncation of a VALID compressed block: Corrupt, or (cut only through
+    // the end marker) exactly the original bytes
+    val dir = tmp("graft_lzo_trunc_block")
+    Lzop.writeText((0 until 200).map(i => s"$i|row_$i").iterator,
+      new Path(s"$dir/b.lzo"), spark.sessionState.newHadoopConf())
+    val (ul, cl, adler, payload) = rawBlocks(s"$dir/b.lzo").head
+    assert(cl < ul)
+    val whole = readOne(ul, adler, payload)
+    for (cut <- 1 until cl) {
+      try assert(readOne(ul, adler, payload.take(cut)).sameElements(whole))
       catch { case _: Lzo.CorruptLzoException => () }
     }
   }

@@ -78,4 +78,17 @@ class TablesSpec extends SparkSpec {
     assert(Tables.table(spark, sfDir, "nation") eq live1,
       "live-session entries must survive the purge (memo hit = same handle)")
   }
+
+  test("views follow the latest registered dir: A, then B, then A reads A") {
+    // a fresh session: temp views are session-scoped, so re-pointing them
+    // here leaves the suite's shared session untouched
+    val s = spark.newSession()
+    val other = s"${new java.io.File(sfDir).getParent}/sf0.01"
+    val want = Tables.table(s, sfDir, "lineitem").count()
+    assert(Tables.table(s, other, "lineitem").count() != want)
+    Tables.registerViews(s, sfDir)
+    Tables.registerViews(s, other)
+    Tables.registerViews(s, sfDir)
+    assert(s.sql("SELECT count(*) FROM lineitem").head().getLong(0) == want)
+  }
 }
