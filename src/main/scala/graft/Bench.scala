@@ -39,6 +39,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * right before its count keeps generated-class cache thrash between
   * queries visible in `compiles:`. A closing `[total]` line gives the
   * warm-up pass's compiles, the summed counts and Metaspace in use.
+  * Because of that warm-up, the lifecycle entries (`q_dedup_minhash_*`,
+  * `q_ann_ivf_*`) are counted against an artifact that is already in
+  * sync: their counts cover the no-op sync and the probe, never a build,
+  * delta sync or compaction, so a change to those paths does not show
+  * here (count a cold lifecycle with a listener of its own).
   *
   * `plan` — `explain("formatted")` per query: to stdout, or with
   * `<outDir> <suffix>` to `<outDir>/<query>_<suffix>.txt` (the evidence

@@ -41,7 +41,7 @@ object Tables {
       // Purge dead-session entries on the MISS path only — misses are rare
       // (ten tables × a handful of dirs per session) so the O(entries) scan
       // never sits on the per-query hot path. Same sweep for the view and
-      // function-registration memos below. TablesMemoSpec pins eviction.
+      // function-registration memos below. TablesSpec pins eviction.
       purgeStoppedSessions()
       if (name == "events") events(spark, dir)
       else {

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   * norms arrive precomputed in the broadcast struct, and the comparison
   * loop allocates nothing.
   *
-  * Exact semantics of the replaced composite (pinned in Round21KernelsSpec
+  * Exact semantics of the replaced composite (pinned in KernelEquivalenceSpec
   * against the literal old construction):
   *
   *  - sim = dot(emb, centroid) / (sqrt(dot(emb, emb)) * cnorm), the same

@@ -64,88 +64,62 @@ object CurationQueries {
 
   private[graft] def dedupClusterFrame(
       s: SparkSession, d0: DataFrame): DataFrame =
-    clusterByEdges(s, d0, dd => AllPairs
+    clusterByEdges(d0, dd => AllPairs
       .jaccardPairs(s, DedupQueries.shingled(dd), lenWindow = 20,
                     threshold = 0.8)
       .select(col("doc_a"), col("doc_b")))
 
   /** The clustering skeleton shared by [[dedupCluster]] (PPJoin exact-
     * Jaccard edges at t = 0.8) and [[minhashCluster]] (MinHash+LSH edges
-    * at t = 0.2): adaptive exact-duplicate contraction, connected
-    * components over the (representative) near-dup graph, label expansion,
-    * and the windowed cluster-size tail. `pairsOf` maps a
-    * (doc_id, lang, text) frame to its undirected (doc_a, doc_b) edge
-    * relation and must be a pure content function (the contraction-
-    * invariance requirement of [[DedupQueries.contractExact]] — every
-    * dedup tier in this repo qualifies). */
+    * at t = 0.2): adaptive exact-duplicate contraction
+    * ([[DedupQueries.contractExact]] — batch frames only, it decides with
+    * one eager corpus aggregate, and the component loop is action-driven
+    * too), connected components over the (representative) near-dup
+    * graph, label expansion ([[expandLabels]]) and the cluster columns
+    * ([[clusterColumns]]). `pairsOf` maps a (doc_id, lang, text) frame to
+    * its undirected (doc_a, doc_b) edge relation and must be a pure
+    * content function (the contraction-invariance requirement of
+    * contractExact — every dedup tier in this repo qualifies).
+    *
+    * On an organic corpus (the skip branch) components run over the
+    * documents themselves and no member map is planned: sub-floor docs
+    * never shingle, so they carry no edge and self-label through
+    * connectedComponents' isolated-node path, and the corpus-sized node
+    * frame is touched once, by that final anti-join (one doc_id-pruned
+    * scan — FactScanSpec pins it). */
   private[graft] def clusterByEdges(
-      s: SparkSession, d0: DataFrame,
-      pairsOf: DataFrame => DataFrame): DataFrame = {
-    // Same eager-decision contract as DedupQueries.contractExact: the
-    // adaptive branch below runs a 1-row corpus aggregate at frame
-    // CONSTRUCTION time (and the label-propagation loop is inherently
-    // action-driven) — batch frames only.
-    require(!d0.isStreaming,
-      "clusterByEdges decides and iterates eagerly; not usable on " +
-        "streaming frames — see DocumentsStreaming for streaming near-dup")
-    val d = d0.select(col("doc_id"), col("lang"), col("text"))
-    val eligible = size(tokens(col("text"))) >= 3 // == shingled()'s floor
-    // Adaptive exact-duplicate contraction, same decision as
-    // DedupQueries.contractExact (duplicate pair mass vs 1% of eligible
-    // cardinality -- see its scaladoc): near-dup edges here are pure
-    // functions of (lang, text), so when duplication is material the
-    // shingling + PPJoin + connected-components loop runs over one
-    // representative per content group and labels expand back through the
-    // thin member map; when the corpus is organic the member map and its
-    // corpus-cardinality joins are skipped outright and the loop runs over
-    // the documents directly (the r17 shape).
-    val withFp = d.select(col("doc_id"),
-      DedupQueries.contentFp(eligible).as("fp")).filter(col("fp").isNotNull)
-    val (nDocs, dupPairs) = DedupQueries.dupPairMass(withFp)
-    val labels =
-      if (dupPairs <= DedupQueries.ContractionFloor * nDocs) {
-        // Organic branch: components over the documents themselves, every
-        // doc a node. Sub-floor docs never shingle, so they carry no edge
-        // and self-label through connectedComponents' isolated-node path —
-        // no separate sub-floor join needed. The loop iterates over
-        // edge-INCIDENT nodes only, so the corpus-sized node frame is
-        // touched exactly once, by the final isolated anti-join (one
-        // doc_id-pruned scan — FactScanSpec pins it; the dup branch reads
-        // its materialized member map instead).
-        connectedComponents(d.select(col("doc_id")), pairsOf(d))
-          .select(col("doc_id"), col("label"))
-      } else {
-        // One narrow shuffle keyed on the 16-byte fingerprint: group -> its
-        // representative (min doc_id). Member map is materialized so the
-        // final expansion plan reads longs, not the corpus.
-        val grp = withFp.groupBy(col("fp")).agg(min(col("doc_id")).as("rep"))
-        val memberMap = graft.Engine.materialize(
-          d.select(col("doc_id"), DedupQueries.contentFp(eligible).as("fp"))
-            .join(grp, Seq("fp"), "left") // null fp never matches: rep
-            .select(col("doc_id"), col("rep"))) // null <=> below the floor
-        // Representatives' text (one pruned fetch by id), then the
-        // organic-size pipeline: the tier's edge relation over the
-        // representatives -> connected components.
-        val repDocs = d.join(
-          memberMap.filter(col("doc_id") === col("rep")).select(col("rep")),
-          col("doc_id") === col("rep")).drop("rep")
-        val repNodes = memberMap.filter(col("doc_id") === col("rep"))
-          .select(col("doc_id"))
-        val repLabels = connectedComponents(repNodes, pairsOf(repDocs))
-          .select(col("doc_id").as("rep"), col("label"))
-        // Expand to members: a group's label is its representative's
-        // component label (= min doc_id across the whole component, since
-        // each group's rep is its own min); shingle-floor docs label
-        // themselves.
-        memberMap
-          .join(repLabels, Seq("rep"), "left")
-          .select(col("doc_id"),
-                  coalesce(col("label"), col("doc_id")).as("label"))
-      }
-    // Shared tail: cluster size as a window count -- one exchange on the
-    // label key and a SINGLE reference to the labels plan (the former
-    // groupBy+join tail referenced it twice, which on the organic branch
-    // would double the corpus scan).
+      d0: DataFrame, pairsOf: DataFrame => DataFrame): DataFrame = {
+    val c = DedupQueries.contractExact(d0)
+    val labels = connectedComponents(c.repIds, pairsOf(c.repDocs))
+    clusterColumns(c.members.fold(labels)(expandLabels(labels, _, d0)))
+  }
+
+  /** Per-document labels from representative-level component labels:
+    * each member of the (doc_id, rep) map takes its representative's
+    * label (= the min doc_id of the whole component, since each group's
+    * rep is its own min), and every document the map leaves out (below
+    * the 3-token shingle floor or with null text: it can never pair)
+    * labels itself, from ONE doc_id-pruned anti-join against `docs`.
+    * Shared by the contracted inline sweep ([[clusterByEdges]]) and the
+    * standing-artifact probe ([[MinhashIndex.clusterIndexed]]), whose
+    * member map unions one map per batch. */
+  private[graft] def expandLabels(repLabels: DataFrame, members: DataFrame,
+                                  docs: DataFrame): DataFrame = {
+    val memberLabels = members
+      .join(repLabels.select(col("doc_id").as("rep"), col("label")),
+            Seq("rep"))
+      .select(col("doc_id"), col("label"))
+    val rest = docs.select(col("doc_id"))
+      .join(members.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("doc_id").as("label"))
+    memberLabels.union(rest)
+  }
+
+  /** The cluster columns of a (doc_id, label) frame: cluster size as a
+    * window count — one exchange on the label key and a SINGLE reference
+    * to the labels plan (a groupBy+join tail would reference it twice,
+    * which on the skip branch would double the corpus scan). */
+  private[graft] def clusterColumns(labels: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
     labels.select(col("doc_id"), col("label").as("cluster_id"),
                   count(lit(1)).over(w).as("cluster_size"),
@@ -174,7 +148,7 @@ object CurationQueries {
 
   private[graft] def minhashClusterFrame(
       s: SparkSession, d0: DataFrame): DataFrame =
-    clusterByEdges(s, d0, dd => DedupQueries.minhashPairsUncontracted(dd)
+    clusterByEdges(d0, dd => DedupQueries.minhashPairsUncontracted(dd)
       .select(col("doc_a"), col("doc_b")))
 
   /** Recursive-CTE oracle over the exact MinHash pair relation: the full

@@ -79,15 +79,15 @@ object DedupQueries {
     // one codegen'd static call (round 21, graft.functions.BandHashes):
     // the transform(sequence(...), xxhash64(element_at...)) form ran an
     // interpreted lambda per band per row; values bit-identical
-    // (Round21KernelsSpec pins the fold against the composite)
+    // (KernelEquivalenceSpec pins the fold against the composite)
     graft.functions.BandHashes(sig, MinhashBands, MinhashRowsPerBand)
 
   /** Exact-Jaccard verification of id-only candidate pairs by back-joining
     * one shingle-set row per doc (never carry arrays through the candidate
     * exchange — the round-17 lesson; [[graft.plans.CorpusBroadcastGuard]]
     * keeps every one of these joins off the broadcast path). */
-  private[pipeline] def verifyJaccard(cand: DataFrame, sh: DataFrame,
-                                      threshold: Double): DataFrame = {
+  private def verifyJaccard(cand: DataFrame, sh: DataFrame,
+                            threshold: Double): DataFrame = {
     val shA = sh.select(col("doc_id").as("doc_a"), col("sh_sorted").as("sh_a"))
     val shB = sh.select(col("doc_id").as("doc_b"), col("sh_sorted").as("sh_b"))
     cand.join(shA, Seq("doc_a"))
@@ -99,7 +99,7 @@ object DedupQueries {
 
   /** Id-only band-collision candidate pairs (doc_a < doc_b, distinct) from
     * a (band_id, band_hash, doc_id) frame. */
-  private[pipeline] def bandCandidates(banded: DataFrame): DataFrame = {
+  private def bandCandidates(banded: DataFrame): DataFrame = {
     val a = banded.select(col("band_id"), col("band_hash"),
                           col("doc_id").as("doc_a"))
     val b = banded.select(col("band_id"), col("band_hash"),
@@ -187,27 +187,35 @@ object DedupQueries {
     * [[ngramJaccard]] additionally pinned in DedupSpec. */
   val minhashLsh: QueryFn = (s, dir) => minhashPairs(t(s, dir, "documents"))
 
-  /** Banded MinHash signatures of any (doc_id, text, lang, ...) frame:
-    * (doc_id, sh_sorted, band_id, band_hash), one row per band. Pure
-    * projections + a posexplode — no shuffle, no state, which also makes it
-    * legal on a STREAMING frame (the stream side of
-    * [[graft.streaming.DocumentsStreaming.nearDupCandidates]]). */
-  private[graft] def bandedSignatures(docs: DataFrame): DataFrame = {
-    val sh = shingled(docs)
-    // One codegen'd pass: shingle hashes are already computed by shingled();
-    // a single tight loop derives all 32 lanes
-    // (graft.functions.MinHashSignature) — the nested-HOF formulation ran
-    // interpreted closures per (shingle, lane) pair and dominated runtime.
-    val sig = sh.select(
-      col("doc_id"), col("sh_sorted"),
+  /** MinHash signatures of any (doc_id, lang, text, ...) frame:
+    * (doc_id, sh_sorted, sig), one row per document above the shingle
+    * floor. The one shingle → signature step: the inline sweep, the
+    * standing artifact's build ([[MinhashIndex.buildSignatures]]) and the
+    * stream probes ([[graft.streaming.DocumentsStreaming]]) all derive
+    * their signatures here. Pure projections, so legal on a STREAMING
+    * frame. Shingle hashes come from shingled(); one codegen'd loop
+    * derives all 32 lanes (graft.functions.MinHashSignature) — the
+    * nested-HOF formulation ran interpreted closures per (shingle, lane)
+    * pair and dominated runtime. */
+  private[graft] def signatures(docs: DataFrame): DataFrame =
+    shingled(docs).select(col("doc_id"), col("sh_sorted"),
       graft.functions.VectorOps.minhashSignature(col("sh_hashes")).as("sig"))
 
-    sig.select(
-      col("doc_id"), col("sh_sorted"),
-      posexplode(bandHashes(col("sig"))))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_hash")
-  }
+  /** Band rows of a signature frame: the `keep` columns plus
+    * (band_id, band_hash), one row per band. A projection and a
+    * posexplode — no shuffle, no state. */
+  private[graft] def bands(sig: DataFrame, keep: Column*): DataFrame =
+    sig.select(keep :+ posexplode(bandHashes(col("sig")))
+      .as(Seq("band_id", "band_hash")): _*)
+
+  /** Verified near-dup pairs (doc_a < doc_b, jaccard) of a
+    * (doc_id, sh_sorted, sig) frame: id-only band-collision candidates,
+    * then the exact-Jaccard back-join. Serves the inline sweep (over
+    * [[signatures]] of the documents) and the standing artifact (over its
+    * per-representative signature rows). */
+  private[graft] def signaturePairs(sig: DataFrame,
+                                    threshold: Double): DataFrame =
+    verifyJaccard(bandCandidates(bands(sig, col("doc_id"))), sig, threshold)
 
   /** Exact-duplicate contraction for content-determined pair pipelines
     * (round-18, the second SF30 lesson): every relation this file computes
@@ -223,7 +231,7 @@ object DedupQueries {
     * (doc_a, doc_b, jaccard) rows scale with duplication — and those are
     * the answer itself.
     *
-    * Returns a [[Contraction]]: (memberMap(doc_id, rep) -- materialized,
+    * Returns a [[Contraction]]: (members(doc_id, rep) -- materialized,
     * eligible docs only -- plus the representatives' (doc_id, lang, text)
     * frame) when duplication is MATERIAL, or the caller's frame untouched
     * when it is not. Grouping is by md5(lang, NUL, text) -- finer than
@@ -270,7 +278,7 @@ object DedupQueries {
     // 1-row collect) at frame-CONSTRUCTION time — fail fast with a clear
     // message on a streaming frame instead of an opaque AnalysisException
     // from inside head(). Streaming near-dup goes through the stateless
-    // bandedSignatures()/stream-static paths (DocumentsStreaming), never
+    // signatures()/bands() stream-static paths (DocumentsStreaming), never
     // through contraction.
     require(!d0.isStreaming,
       "contractExact decides eagerly (one corpus aggregate at plan-build " +
@@ -304,6 +312,10 @@ object DedupQueries {
   private[graft] final case class Contraction(
       members: Option[DataFrame], repDocs: DataFrame) {
     def contracted: Boolean = members.isDefined
+    /** The representatives' ids, read from the member map when there is
+      * one (so a plan over them never goes back to the corpus). */
+    def repIds: DataFrame = members.fold(repDocs.select(col("doc_id")))(
+      _.filter(col("doc_id") === col("rep")).select(col("doc_id")))
     def expand(repPairs: DataFrame, valueCol: String,
                intraValue: Column): DataFrame =
       members.fold(repPairs)(m =>
@@ -313,14 +325,14 @@ object DedupQueries {
   /** Duplicate-pair-mass floor as a fraction of eligible corpus
     * cardinality: contract iff the mass exceeds 1 % of n. See
     * [[contractExact]]'s decision note. */
-  private[graft] val ContractionFloor = 0.01
+  private val ContractionFloor = 0.01
 
   /** (eligible doc count, duplicate pair mass = sum over fingerprint
     * groups of g*(g-1)/2) of a fingerprinted `(doc_id, fp)` frame -- one
     * aggregate pass, 1-row collect. Mass accumulates in Double: it is a
     * threshold statistic, not an answer, and ULP loss above 2^53 cannot
     * meaningfully move a comparison against 1 % of a Long-ranged count. */
-  private[graft] def dupPairMass(withFp: DataFrame): (Long, Double) = {
+  private def dupPairMass(withFp: DataFrame): (Long, Double) = {
     val r = withFp
       .groupBy(col("fp")).agg(count(lit(1)).as("cnt"))
       .agg(coalesce(sum(col("cnt")), lit(0L)).as("n"),
@@ -333,9 +345,9 @@ object DedupQueries {
   /** md5 content fingerprint over (lang, text), null iff ineligible. The
     * NUL separator keeps (lang="a", text="b...") distinct from
     * (lang="ab", text="..."). */
-  private[pipeline] def contentFp(eligible: Column): Column =
+  private def contentFp(eligible: Column): Column =
     when(eligible, md5(concat(coalesce(col("lang"), lit("")),
-      lit(" "), col("text")).cast("binary")))
+      lit("\u0000"), col("text")).cast("binary")))
 
   /** Expand representative-level pairs back to member-level pairs:
     * intra-group = all ordered member pairs at the identical-content value
@@ -396,8 +408,9 @@ object DedupQueries {
     *
     * NOTE: the adaptive contraction decision runs ONE EAGER corpus
     * aggregate when this frame is CONSTRUCTED (not when it is executed) —
-    * batch frames only, and plan-only tooling (explain / PlanAudit) pays
-    * that narrow pass too. See [[contractExact]]. */
+    * batch frames only, and plan-only tooling (explain,
+    * `graft.Bench audit`) pays that narrow pass too. See
+    * [[contractExact]]. */
   def minhashPairs(docs: DataFrame): DataFrame = {
     val c = contractExact(docs)
     c.expand(minhashPairsUncontracted(c.repDocs), "jaccard", lit(1.0))
@@ -405,13 +418,8 @@ object DedupQueries {
 
   /** The raw (uncontracted) pipeline — the shape that runs over the
     * representatives; also the spec oracle for [[minhashPairs]]. */
-  private[graft] def minhashPairsUncontracted(docs: DataFrame): DataFrame = {
-    val sh = shingled(docs)
-    val banded = bandedSignatures(docs)
-      .select(col("band_id"), col("band_hash"), col("doc_id"))
-    verifyJaccard(bandCandidates(banded),
-      sh.select(col("doc_id"), col("sh_sorted")), threshold = 0.2)
-  }
+  private[graft] def minhashPairsUncontracted(docs: DataFrame): DataFrame =
+    signaturePairs(signatures(docs), threshold = 0.2)
 
   /** SimHash near-dup pairs: 64-bit fingerprints from token hashes, banded
     * into 4×16-bit chunks (pigeonhole guarantee for hamming ≤ 3), verified

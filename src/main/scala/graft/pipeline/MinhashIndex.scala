@@ -51,10 +51,6 @@ object MinhashIndex {
     * readers. */
   def buildSignatures(docs: DataFrame, outDir: String): Unit = {
     val c = DedupQueries.contractExact(docs)
-    DedupQueries.shingled(c.repDocs)
-      .select(col("doc_id"), col("sh_sorted"),
-        graft.functions.VectorOps.minhashSignature(col("sh_hashes")).as("sig"))
-      .write.mode("overwrite").parquet(s"$outDir/signatures.parquet")
     // The artifact layout always carries a member map (the probe is
     // branch-free). Below the contraction floor every doc is its own
     // representative, so the map is the identity over the signature rows --
@@ -63,36 +59,42 @@ object MinhashIndex {
     // contracted build would have produced on such a corpus (organic
     // groups are singletons with rep == min == doc_id), so artifacts stay
     // interchangeable across branches and code versions.
-    val members = c.members.getOrElse(
-      docs.sparkSession.read.parquet(s"$outDir/signatures.parquet")
-        .select(col("doc_id"), col("doc_id").as("rep")))
-    members.write.mode("overwrite").parquet(s"$outDir/members.parquet")
+    write(outDir, DedupQueries.signatures(c.repDocs), c.members.getOrElse(
+      read(docs.sparkSession, Seq(outDir), Signatures)
+        .select(col("doc_id"), col("doc_id").as("rep"))))
     c.members.foreach(graft.Engine.releaseMaterialized)
   }
 
-  /** Representative-level near-dup graph of the UNION of artifact batches:
-    * (signatures, member map, verified rep pairs). Band candidates come
-    * from the pruned `(doc_id, sig)` columns, exact Jaccard from the
-    * pruned `(doc_id, sh_sorted)` columns. */
-  private def repGraph(spark: SparkSession, idxDirs: Seq[String],
-                       threshold: Double): (DataFrame, DataFrame, DataFrame) = {
-    val sig = spark.read.parquet(idxDirs.map(d => s"$d/signatures.parquet"): _*)
-    val members = spark.read.parquet(idxDirs.map(d => s"$d/members.parquet"): _*)
-    val banded = sig
-      .select(col("doc_id"), posexplode(DedupQueries.bandHashes(col("sig"))))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_hash")
-      .select(col("band_id"), col("band_hash"), col("doc_id"))
-    val repPairs = DedupQueries.verifyJaccard(
-      DedupQueries.bandCandidates(banded),
-      sig.select(col("doc_id"), col("sh_sorted")), threshold)
-    (sig, members, repPairs)
+  /** The artifact layout: per batch dir, one parquet relation each. */
+  private val Signatures = "signatures.parquet" // (doc_id, sh_sorted, sig)
+  private val Members = "members.parquet" // (doc_id, rep)
+
+  private def read(spark: SparkSession, dirs: Seq[String],
+                   rel: String): DataFrame =
+    spark.read.parquet(dirs.map(d => s"$d/$rel"): _*)
+
+  /** Writes one batch; `members` is evaluated after the signatures are
+    * written (the organic build derives it from them). */
+  private def write(dir: String, sig: DataFrame,
+                    members: => DataFrame): Unit = {
+    sig.write.mode("overwrite").parquet(s"$dir/$Signatures")
+    members.write.mode("overwrite").parquet(s"$dir/$Members")
   }
+
+  /** The artifact over the UNION of `dirs` (its live batches):
+    * (per-representative signatures, member map). The one reader of the
+    * layout: the batch probes, compaction and the stream probe
+    * ([[graft.streaming.DocumentsStreaming.nearDupCandidatesIndexedMulti]])
+    * all read through it. */
+  private[graft] def artifact(spark: SparkSession,
+                              dirs: Seq[String]): (DataFrame, DataFrame) =
+    (read(spark, dirs, Signatures), read(spark, dirs, Members))
 
   /** Near-dup pairs from the standing signature artifact's live batches
     * (one dir for a single-batch artifact): representative candidates and
-    * Jaccard ([[repGraph]]), member expansion from `members.parquet`. Same
-    * output as [[DedupQueries.minhashPairs]] over the source corpus.
+    * Jaccard ([[DedupQueries.signaturePairs]]), member expansion from the
+    * member map. Same output as [[DedupQueries.minhashPairs]] over the
+    * source corpus.
     *
     * Batches are the probe side of the incremental lifecycle
     * ([[DeltaIndex]]): each batch
@@ -110,8 +112,9 @@ object MinhashIndex {
     * the same DuckDB oracle as the inline sweep. */
   def pairsIndexedMulti(spark: SparkSession, idxDirs: Seq[String],
                         threshold: Double = 0.2): DataFrame = {
-    val (_, members, repPairs) = repGraph(spark, idxDirs, threshold)
-    DedupQueries.expandPairs(repPairs, members, "jaccard", lit(1.0))
+    val (sig, members) = artifact(spark, idxDirs)
+    DedupQueries.expandPairs(DedupQueries.signaturePairs(sig, threshold),
+      members, "jaccard", lit(1.0))
   }
 
   /** Prefix of the artifact root; the version is the artifact FORMAT
@@ -165,10 +168,8 @@ object MinhashIndex {
                          retainMillis: Long = 0L): Seq[String] = {
     val root = DeltaIndex.root(sourceDir, table, IncPrefix)
     DeltaIndex.compact(spark, root, retainMillis) { (batches, staging) =>
-      spark.read.parquet(batches.map(b => s"$b/signatures.parquet"): _*)
-        .write.mode("overwrite").parquet(s"$staging/signatures.parquet")
-      spark.read.parquet(batches.map(b => s"$b/members.parquet"): _*)
-        .write.mode("overwrite").parquet(s"$staging/members.parquet")
+      val (sig, members) = artifact(spark, batches.map(_.toString))
+      write(staging, sig, members)
     }.map(_.toString)
   }
 
@@ -208,27 +209,16 @@ object MinhashIndex {
     * sweep — same oracle — because the artifact's rep-level band/Jaccard
     * relation is the contraction of the corpus relation and component
     * labels are contraction-invariant (each group's rep is its min
-    * doc_id, so min-over-reps = min-over-members per component). */
+    * doc_id, so min-over-reps = min-over-members per component). A group
+    * split across batches has one rep per batch; the reps' Jaccard-1.0
+    * pair joins them into one component (DeltaIndexSpec pins it). */
   def clusterIndexed(spark: SparkSession, idxDirs: Seq[String],
                      docs: DataFrame, threshold: Double = 0.2): DataFrame = {
-    val (sig, members, repPairs) = repGraph(spark, idxDirs, threshold)
-    val repLabels = CurationQueries
-      .connectedComponents(sig.select(col("doc_id")),
-        repPairs.select(col("doc_a"), col("doc_b")))
-      .select(col("doc_id").as("rep"), col("label"))
-    val memberLabels = members.join(repLabels, Seq("rep"))
-      .select(col("doc_id"), col("label"))
-    // Docs the artifact excludes (below the 3-token shingle floor / null
-    // text) can never pair: singleton self-labels from ONE doc_id-pruned
-    // corpus scan.
-    val rest = docs.select(col("doc_id"))
-      .join(members.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("label"))
-    val labels = memberLabels.union(rest)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
-    labels.select(col("doc_id"), col("label").as("cluster_id"),
-                  count(lit(1)).over(w).as("cluster_size"),
-                  (col("doc_id") === col("label")).as("is_canonical"))
+    val (sig, members) = artifact(spark, idxDirs)
+    val repLabels = CurationQueries.connectedComponents(
+      sig.select(col("doc_id")), DedupQueries.signaturePairs(sig, threshold))
+    CurationQueries.clusterColumns(
+      CurationQueries.expandLabels(repLabels, members, docs))
   }
 
   /** Registry entry: same standing artifact as [[minhashIndexed]]

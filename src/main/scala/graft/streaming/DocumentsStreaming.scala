@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.pipeline.{DedupQueries, TextQueries}
+import graft.pipeline.{DedupQueries, MinhashIndex, TextQueries}
 
 /** Structured Streaming over a DOCUMENT ingest stream — the streaming face
   * of the curation tier. The reference engine has no streaming surface
@@ -120,13 +120,9 @@ object DocumentsStreaming {
     * the right place for the distinct is the consumer's batch side). */
   def nearDupCandidates(stream: DataFrame, corpus: DataFrame,
                         threshold: Double = 0.5): DataFrame = {
-    val idx = DedupQueries.bandedSignatures(corpus)
-      .select(col("band_id"), col("band_hash"),
-              col("doc_id").as("corpus_doc"), col("sh_sorted").as("sh_b"))
-    val probe = DedupQueries.bandedSignatures(stream)
-      .select(col("band_id"), col("band_hash"),
-              col("doc_id").as("stream_doc"), col("sh_sorted").as("sh_a"))
-    probe.join(idx, Seq("band_id", "band_hash"))
+    val idx = DedupQueries.bands(DedupQueries.signatures(corpus),
+      col("doc_id").as("corpus_doc"), col("sh_sorted").as("sh_b"))
+    probeBands(stream).join(idx, Seq("band_id", "band_hash"))
       .filter(col("stream_doc") =!= col("corpus_doc"))
       .select(col("stream_doc"), col("corpus_doc"),
         round(graft.functions.VectorOps.jaccard(col("sh_a"), col("sh_b")), 6)
@@ -164,18 +160,10 @@ object DocumentsStreaming {
     * artifact-only scan set. */
   def nearDupCandidatesIndexedMulti(stream: DataFrame, idxDirs: Seq[String],
                                     threshold: Double = 0.5): DataFrame = {
-    val spark = stream.sparkSession
-    val sig = spark.read.parquet(idxDirs.map(d => s"$d/signatures.parquet"): _*)
-    val members = spark.read.parquet(idxDirs.map(d => s"$d/members.parquet"): _*)
-    val idx = sig.select(
-        col("doc_id").as("rep"), col("sh_sorted").as("sh_b"),
-        posexplode(DedupQueries.bandHashes(col("sig"))))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "band_hash")
-    val probe = DedupQueries.bandedSignatures(stream)
-      .select(col("band_id"), col("band_hash"),
-              col("doc_id").as("stream_doc"), col("sh_sorted").as("sh_a"))
-    val repHits = probe.join(idx, Seq("band_id", "band_hash"))
+    val (sig, members) = MinhashIndex.artifact(stream.sparkSession, idxDirs)
+    val idx = DedupQueries.bands(sig,
+      col("doc_id").as("rep"), col("sh_sorted").as("sh_b"))
+    val repHits = probeBands(stream).join(idx, Seq("band_id", "band_hash"))
       .select(col("stream_doc"), col("rep"),
         round(graft.functions.VectorOps.jaccard(col("sh_a"), col("sh_b")), 6)
           .as("jaccard"))
@@ -185,4 +173,10 @@ object DocumentsStreaming {
               col("jaccard"))
       .filter(col("stream_doc") =!= col("corpus_doc"))
   }
+
+  /** The arriving documents' band rows (a stateless projection):
+    * (stream_doc, sh_a, band_id, band_hash). */
+  private def probeBands(stream: DataFrame): DataFrame =
+    DedupQueries.bands(DedupQueries.signatures(stream),
+      col("doc_id").as("stream_doc"), col("sh_sorted").as("sh_a"))
 }

@@ -382,6 +382,49 @@ class DeltaIndexSpec extends SparkSpec {
     assert(inline.nonEmpty, "fixture corpus should contain near-dup pairs")
   }
 
+  test("grouped probe over two batches: a content group split across batches clusters like the inline sweep") {
+    import spark.implicits._
+    // One identical-content group straddles the two appends, with enough
+    // copies in each that both batch builds contract it (duplicate pair
+    // mass over 1% of the batch's documents): each batch then
+    // holds its OWN representative of the group. The planted text shares
+    // no shingle with the corpus, so only the two reps' own band
+    // collision (Jaccard 1.0) can reconnect the halves.
+    val base = docs.select("doc_id", "lang", "text")
+    val l0 = base.filter($"doc_id" === 0).head().getAs[String]("lang")
+    val t0 = (1 to 12).map(i => s"qzx$i").mkString(" ")
+    def plants(ids: Long*) = ids.map(i => (i, l0, t0)).toDF("doc_id", "lang", "text")
+    val partA = base.filter(col("doc_id") % 3 < 2).union(plants(9001L to 9006L: _*))
+      .union(Seq((9101L, l0, "xy")).toDF("doc_id", "lang", "text"))
+    val partB = base.filter(col("doc_id") % 3 === 2).union(plants(9007L to 9010L: _*))
+    val src = freshSource("graft_delta_mh_cluster")
+    ingest(src, "documents", partA)
+    pipeline.MinhashIndex.ensureIncremental(spark, src)
+    ingest(src, "documents", partB)
+    val dirs = pipeline.MinhashIndex.ensureIncremental(spark, src)
+    assert(dirs.size == 2)
+
+    val (_, members) = pipeline.MinhashIndex.artifact(spark, dirs)
+    val groupReps = members.filter(col("doc_id").between(9001L, 9010L))
+      .select("rep").distinct().as[Long].collect().sorted.toSeq
+    assert(groupReps == Seq(9001L, 9007L),
+      s"each batch must contract the group to its own representative: $groupReps")
+
+    val all = partA.union(partB)
+    val probed = pipeline.MinhashIndex.clusterIndexed(spark, dirs, all)
+      .as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
+    val inline = pipeline.CurationQueries.minhashClusterFrame(spark, all)
+      .as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
+    assert(probed == inline,
+      s"cross-batch grouped probe diverged:\n got=${probed.filterNot(inline.contains)}\n " +
+        s"want=${inline.filterNot(probed.contains)}")
+    val byId = probed.map(r => r._1 -> r).toMap
+    assert((9001L to 9010L).forall(i => byId(i)._2 == 9001L && byId(i)._3 == 10L),
+      "both batches' copies must form one cluster labelled by the min copy")
+    assert(byId(9101L)._2 == 9101L && byId(9101L)._3 == 1L,
+      "a sub-shingle-floor doc stays a singleton")
+  }
+
   test("incremental IVF: delta batch rows are byte-identical to a combined assign; probe = single-build probe") {
     import spark.implicits._
     val emb = Tables.table(spark, sfDir, "embeddings")

@@ -118,8 +118,11 @@ class FactScanSpec extends SparkSpec {
       // corpus-cardinality map it doesn't need, >1 that the window-count
       // tail lost its single-reference shape or the loop lineage is being
       // replayed per downstream action. (On duplicate-heavy corpora the
-      // contract branch plans 0 — its member map IS materialized, by
-      // design; CurationSpec covers that branch.)
+      // contract branch plans 1 too, a different one: members take their
+      // representative's label through contractExact's materialized
+      // member map, and the docs that map leaves out self-label from the
+      // same doc_id-pruned anti-join q_dedup_minhash_cluster_indexed
+      // runs; CurationSpec covers that branch.)
       "q_dedup_cluster" -> ("documents", 1),
       // Grouped probe from the standing artifact: components run eagerly
       // over the artifact's rep graph (zero corpus-text reads); the single

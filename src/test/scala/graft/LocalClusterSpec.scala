@@ -173,10 +173,10 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // stable storage. What legitimately SURVIVES the loop is exactly the
     // cuts the returned plan still reads: the final round's jumped frame
     // and the edge-incident endpoints frame (feeds the isolated-node
-    // anti-join) — plus, only on duplicate-heavy corpora, dedupCluster's
-    // contraction member map (this ORGANIC corpus takes the adaptive skip
-    // branch, which plans no member map) — ≤ 3 frames, O(1), never
-    // O(rounds).
+    // anti-join) — plus, only on duplicate-heavy corpora, contractExact's
+    // member map, which the label expansion reads (this ORGANIC corpus
+    // takes the adaptive skip branch, which plans no member map) — ≤ 3
+    // frames, O(1), never O(rounds).
     def rddDirs(f: File): Seq[File] =
       Option(f.listFiles()).toSeq.flatten.flatMap { c =>
         if (c.isDirectory)
