@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.pipeline.{IvfAnn, SimilarityQueries}
+import graft.pipeline.SimilarityQueries.recall
 
 /** Maintenance tool: ANN-tier scale rehearsal with RECALL measurement.
   *
@@ -21,9 +23,14 @@ import org.apache.spark.sql.functions._
   *  - brute-force exact top-k (the ground truth + the O(n·q) baseline time);
   *  - IVF recall@k + wall for nprobe ∈ {1, 2, 4, 8} at nlist ~ √n
   *    (the nprobe sensitivity curve VERDICT r11 asked for);
-  *  - hyperplane-LSH recall@k + wall.
+  *  - hyperplane-LSH recall@k, wall and candidate count (distinct query ×
+  *    candidate pairs, the cost the knobs spend) over a (tables, probes)
+  *    grid: the recall-vs-cost curve the registered q_ann_lsh default is
+  *    the knee of.
   *
-  * Run: `... graft.AnnScale [sfDir] [factor] [k]`; prints one line per
+  * Run: `... graft.AnnScale [sfDir] [factor] [k] [mode]`, mode one of
+  * `all` (default: ivf, ivfidx and lsh), `ivf`, `ivfidx`, `drift` or
+  * `lsh`; factor 1 measures the corpus itself. Prints one line per
   * measurement; takeaways are recorded in BASELINE.md's scale section.
   */
 object AnnScale {
@@ -71,25 +78,23 @@ object AnnScale {
     }
 
     // Ground truth: exact brute-force top-k per query (rounded cosine,
-    // vec_id tie-break — the q_ann_brute kernel over the amplified frame).
-    val truth = timed(s"brute top-$k (truth)") {
-      graft.pipeline.SimilarityQueries.bruteTopKFrame(emb, queryIds, k)
-        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    // vec_id tie-break — the q_ann_brute kernel over the corpus), computed
+    // once per corpus and held as a local relation for every recall.
+    def truthOf(corpus: DataFrame): DataFrame = {
+      val brute = SimilarityQueries.bruteTopKFrame(corpus, queryIds, k)
+      SimilarityQueries.local(brute, brute.collect())
     }
-
-    def recall(got: Set[(Long, Long)]): Double =
-      if (truth.isEmpty) 1.0 else truth.count(got.contains).toDouble / truth.size
+    val truth = timed(s"brute top-$k (truth)")(truthOf(emb))
 
     val mode = args.lift(3).getOrElse("all")
 
     if (mode == "all" || mode == "ivf") {
       val nlist = math.max(16, math.sqrt(n.toDouble).toInt / 2)
       for (nprobe <- Seq(1, 2, 4, 8)) {
-        val got = timed(f"ivf nlist=$nlist nprobe=$nprobe") {
-          graft.pipeline.IvfAnn.search(emb, queryIds, k, nlist, nprobe)
-            .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+        val r = timed(f"ivf nlist=$nlist nprobe=$nprobe") {
+          recall(IvfAnn.search(emb, queryIds, k, nlist, nprobe), truth)
         }
-        println(f"[annscale]   -> ivf recall@$k nprobe=$nprobe: ${recall(got)}%.2f")
+        println(f"[annscale]   -> ivf recall@$k nprobe=$nprobe: $r%.2f")
       }
     }
 
@@ -99,22 +104,20 @@ object AnnScale {
       // nprobe cells' partitions.
       val nlist = math.max(16, math.sqrt(n.toDouble).toInt / 2)
       timed(s"ivf buildIndex nlist=$nlist (once)") {
-        graft.pipeline.IvfAnn.buildIndex(emb, nlist, s"$out/ivf")
+        IvfAnn.buildIndex(emb, nlist, s"$out/ivf")
       }
       // Query frame from the CORPUS, not the index: the index is
       // partitioned by cell_id, so a vec_id filter over it scans every
       // cell — the corpus parquet serves the 10-row fetch with a pushed
       // vec_id predicate instead.
-      val qFrame = emb.filter(col("vec_id").isin(queryIds: _*))
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      val qFrame = SimilarityQueries.queryFrame(emb, queryIds)
       for (nprobe <- Seq(1, 8)) {
-        val got = timed(f"ivf probe (standing) nprobe=$nprobe") {
-          graft.pipeline.IvfAnn.searchIndexedMulti(spark,
+        val r = timed(f"ivf probe (standing) nprobe=$nprobe") {
+          recall(IvfAnn.searchIndexedMulti(spark,
               s"$out/ivf/centroids.parquet", Seq(s"$out/ivf/index.parquet"),
-              qFrame, k, nprobe)
-            .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+              qFrame, k, nprobe), truth)
         }
-        println(f"[annscale]   -> indexed recall@$k nprobe=$nprobe: ${recall(got)}%.2f")
+        println(f"[annscale]   -> indexed recall@$k nprobe=$nprobe: $r%.2f")
       }
     }
 
@@ -137,24 +140,17 @@ object AnnScale {
       val nlist = math.max(16, math.sqrt(n.toDouble).toInt / 2)
       val nprobe = 8
       timed(f"drift buildIndex on $nInit vectors nlist=$nlist") {
-        graft.pipeline.IvfAnn.buildIndex(initial, nlist, s"$out/drift")
+        IvfAnn.buildIndex(initial, nlist, s"$out/drift")
       }
-      val qFrame = emb.filter(col("vec_id").isin(queryIds: _*))
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      val qFrame = SimilarityQueries.queryFrame(emb, queryIds)
       var centroids = s"$out/drift/centroids.parquet"
       var indexPaths = Seq(s"$out/drift/index.parquet")
       def recallNow(hi: Long, label: String): Unit = {
-        val corpus = emb.filter(copyOf < hi)
-        val truthNow = graft.pipeline.SimilarityQueries
-          .bruteTopKFrame(corpus, queryIds, k)
-          .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-        val got = timed(f"$label probe nprobe=$nprobe") {
-          graft.pipeline.IvfAnn
-            .searchIndexedMulti(spark, centroids, indexPaths, qFrame, k, nprobe)
-            .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+        val truthNow = truthOf(emb.filter(copyOf < hi))
+        val r = timed(f"$label probe nprobe=$nprobe") {
+          recall(IvfAnn.searchIndexedMulti(spark, centroids, indexPaths,
+            qFrame, k, nprobe), truthNow)
         }
-        val r = if (truthNow.isEmpty) 1.0
-                else truthNow.count(got.contains).toDouble / truthNow.size
         println(f"[annscale]   -> drift $label recall@$k: $r%.2f")
       }
       recallNow(half, f"appended 0%%")
@@ -165,30 +161,37 @@ object AnnScale {
         val hi = math.min(factor.toLong, lo + per)
         val batch = emb.filter(copyOf >= lo && copyOf < hi)
         timed(f"append copies $lo..${hi - 1} (${batch.count()} vectors)") {
-          graft.pipeline.IvfAnn.buildDeltaIndex(batch, centroids, s"$out/drift_$lo")
+          IvfAnn.buildDeltaIndex(batch, centroids, s"$out/drift_$lo")
         }
         indexPaths :+= s"$out/drift_$lo/index.parquet"
         recallNow(hi, f"appended ${(hi - half) * 100 / (factor - half)}%%")
         lo = hi
       }
       timed(f"drift full rebuild nlist=$nlist") {
-        graft.pipeline.IvfAnn.buildIndex(emb, nlist, s"$out/drift_full")
+        IvfAnn.buildIndex(emb, nlist, s"$out/drift_full")
       }
       centroids = s"$out/drift_full/centroids.parquet"
       indexPaths = Seq(s"$out/drift_full/index.parquet")
       recallNow(factor.toLong, "rebuilt 100%")
     }
 
-    // Table-count sensitivity: at fixed 8-bit buckets, tables is the
-    // recall knob that must grow as neighbor cosine falls with corpus size.
-    // Gated like the IVF sections: a mode=ivf/ivfidx run must not pay
-    // three full LSH passes over the amplified corpus.
-    if (mode == "all" || mode == "lsh") for (tables <- Seq(4, 8, 16)) {
-      val gotLsh = timed(s"lsh $tables tables x 8-bit buckets") {
-        graft.pipeline.SimilarityQueries.lshTopKFrame(emb, queryIds, k, tables)
-          .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    // LSH recall-vs-cost curve over (tables, probes) at fixed 8-bit
+    // buckets: tables is the knob that must grow as neighbor cosine falls
+    // with corpus size, multi-probe the one that keeps a sparse corpus's
+    // recall alive. Gated like the IVF sections: a mode=ivf/ivfidx run
+    // must not pay the LSH passes over the amplified corpus.
+    if (mode == "all" || mode == "lsh") {
+      val grid = (for (tables <- Seq(2, 4, 8); probes <- Seq(1, 9, 17, 25, 37))
+        yield (tables, probes)) :+ ((16, 25))
+      for ((tables, probes) <- grid) {
+        val r = timed(s"lsh tables=$tables probes=$probes") {
+          recall(SimilarityQueries.lshTopKFrame(emb, queryIds, k, tables, probes),
+            truth)
+        }
+        val cands = SimilarityQueries.lshCandidateCount(emb, queryIds, tables, probes)
+        println(f"[annscale]   -> lsh recall@$k tables=$tables probes=$probes: " +
+          f"$r%.3f candidates=$cands")
       }
-      println(f"[annscale]   -> lsh recall@$k tables=$tables: ${recall(gotLsh)}%.2f")
     }
     spark.stop()
   }

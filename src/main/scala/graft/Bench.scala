@@ -32,7 +32,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `counts` — deterministic work counters per query: jobs, stages, tasks
   * and records read (input + shuffle) from a SparkListener over one warm
   * execution, plus generated classes compiled (`CodegenMetrics`) and JVM
-  * classes loaded. This host's wall clock drifts 1.3–2.6× within a session,
+  * classes loaded. Each counted query runs in a job group of its own and
+  * only that group's jobs and their stages are counted, read after the
+  * listener bus has drained: a late job of an earlier query is never
+  * counted with the next one. This host's wall clock drifts 1.3–2.6× within a session,
   * so structural claims ("one exchange removed") are checked with these
   * load-invariant counts against the before and after classes. The whole
   * list runs once uncounted first; warming the list rather than each query
@@ -237,33 +240,44 @@ object Bench {
 
   private def counts(spark: SparkSession, names: Seq[String],
       query: String => DataFrame): Unit = {
+    val sc = spark.sparkContext
+    val group = new java.util.concurrent.atomic.AtomicReference[String]("")
+    val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
     val recs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
+    sc.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
             js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
+          if (Option(js.properties).exists(
+                _.getProperty("spark.jobGroup.id") == group.get)) {
+            jobs.incrementAndGet()
+            js.stageIds.foreach(groupStages.add)
+          }
         override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          stages.incrementAndGet()
-          tasks.addAndGet(sc.stageInfo.numTasks)
-          recs.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.recordsRead +
-            sc.stageInfo.taskMetrics.shuffleReadMetrics.recordsRead)
-        }
+            done: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+          if (groupStages.contains(done.stageInfo.stageId)) {
+            stages.incrementAndGet()
+            tasks.addAndGet(done.stageInfo.numTasks)
+            recs.addAndGet(done.stageInfo.taskMetrics.inputMetrics.recordsRead +
+              done.stageInfo.taskMetrics.shuffleReadMetrics.recordsRead)
+          }
       })
     val compilations = CodegenMetrics.METRIC_COMPILATION_TIME
     val classLoading = ManagementFactory.getClassLoadingMXBean
     val warm0 = compilations.getCount
     names.foreach(n => noop(query(n)))
     val warmCompiles = compilations.getCount - warm0
-    Thread.sleep(500)
+    org.apache.spark.sql.graft.ListenerBusBridge.drain(sc)
     var totalCompiles = 0L
     var totalClasses = 0L
     for (name <- names) {
       jobs.set(0); stages.set(0); tasks.set(0); recs.set(0L)
+      groupStages.clear()
+      group.set(s"graft-bench-counts-$name")
+      sc.setJobGroup(group.get, name)
       val compiles0 = compilations.getCount
       val classes0 = classLoading.getTotalLoadedClassCount
       noop(query(name))
@@ -271,7 +285,8 @@ object Bench {
       val classes = classLoading.getTotalLoadedClassCount - classes0
       totalCompiles += compiles
       totalClasses += classes
-      Thread.sleep(500) // let the listener bus drain before reading
+      sc.clearJobGroup()
+      org.apache.spark.sql.graft.ListenerBusBridge.drain(sc)
       println(s"[$name] jobs: ${jobs.get()} stages: ${stages.get()} " +
         s"tasks: ${tasks.get()} recordsRead: ${recs.get()} " +
         s"compiles: $compiles classes: $classes")

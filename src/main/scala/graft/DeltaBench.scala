@@ -131,8 +131,7 @@ object DeltaBench {
     // VERDICT r19 task 5): the live batch set oscillates in [1, 4] instead
     // of growing one batch per ingest, and the probe — what a serving
     // deployment pays per request — stays flat across the window.
-    val probeQ = emb0.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val probeQ = pipeline.SimilarityQueries.queryFrame(emb0, 0L until 8L)
     val cadence = (0 until 6).map { j =>
       addBatch("embeddings", embCopy(nextCopy), s"cad$j"); nextCopy += 1
       val (cc, ci) = pipeline.IvfAnn.ensureIncremental(

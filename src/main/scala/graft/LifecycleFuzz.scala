@@ -274,8 +274,7 @@ object LifecycleFuzz {
       combined.write.mode("overwrite").partitionBy("cell_id")
         .parquet(s"$full/index.parquet")
       val qIds = (0L until math.min(3L, nextId))
-      val queries = corpus.filter(col("vec_id").isin(qIds: _*))
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      val queries = pipeline.SimilarityQueries.queryFrame(corpus, qIds)
       val multi = pipeline.IvfAnn
         .searchIndexedMulti(spark, c, i, queries, 3, 2)
         .as[(Long, Int, Long, Double)].collect().toSeq

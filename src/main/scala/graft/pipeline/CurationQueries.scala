@@ -154,12 +154,14 @@ object CurationQueries {
   /** Recursive-CTE oracle over the exact MinHash pair relation: the full
     * [[DedupQueries.minhashLshSql]] construction (fnv shingles, fmix64
     * lanes, band collisions, exact Jaccard ≥ 0.2) nested as a derived
-    * table, then the same reachability closure as [[dedupClusterSql]]. */
+    * table, then the same reachability closure as [[dedupClusterSql]].
+    * `mp` and `edges` are MATERIALIZED: otherwise DuckDB re-evaluates the
+    * whole pair construction inside every step of the recursion. */
   val minhashClusterSql: String =
-    s"""WITH RECURSIVE mp AS (
+    s"""WITH RECURSIVE mp AS MATERIALIZED (
        |${DedupQueries.minhashLshSql}
        |),
-       |edges AS (
+       |edges AS MATERIALIZED (
        |  SELECT doc_a AS a, doc_b AS b FROM mp
        |  UNION ALL SELECT doc_b, doc_a FROM mp),
        |reach AS (

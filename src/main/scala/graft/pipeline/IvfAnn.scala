@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 import graft.operators.{t, QueryFn}
+import SimilarityQueries.{cosine, cosineTopK, local, normD, queryFrame, rankTopK}
 
 /** IVF (inverted-file) approximate nearest neighbor — the second ANN scale
   * path next to [[SimilarityQueries.annLsh]]: partition the corpus into
@@ -72,7 +73,7 @@ object IvfAnn {
   def assignCells(emb: DataFrame, centroids: DataFrame): DataFrame = {
     val cents = centroids
       .select(col("cell_id").as("id"), col("centroid"),
-        sqrt(VectorOps.dot(col("centroid"), col("centroid"))).as("cnorm"))
+        normD(col("centroid")).as("cnorm"))
       .agg(collect_list(
         struct(col("id"), col("centroid"), col("cnorm"))).as("cents"))
     emb.crossJoin(broadcast(cents))
@@ -105,23 +106,17 @@ object IvfAnn {
     // once per (query, centroid); the broadcast is a plan barrier, so the
     // norm column provably computes once per centroid. Same double
     // arithmetic in the same order — values bit-identical.
-    val centroidsN = centroids.withColumn("cnorm",
-      sqrt(VectorOps.dot(col("centroid"), col("centroid"))))
+    val centroidsN = centroids.withColumn("cnorm", normD(col("centroid")))
     val assignment = queries.crossJoin(broadcast(centroidsN))
       .select(col("query_id"), col("cell_id"),
         (VectorOps.dot(col("q_emb"), col("centroid")) /
-          (sqrt(VectorOps.dot(col("q_emb"), col("q_emb"))) * col("cnorm")))
+          (normD(col("q_emb")) * col("cnorm")))
           .as("sim"))
       .withColumn("rn", row_number().over(wProbe))
       .filter(col("rn") <= nprobe)
       .select(col("query_id"), col("cell_id"))
     val assignedRows = assignment.collect()
-    val spark = queries.sparkSession
-    val assignedLocal = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        java.util.Arrays.asList(assignedRows: _*)),
-      assignment.schema)
-    val probed = queries.join(broadcast(assignedLocal), Seq("query_id"))
+    val probed = queries.join(broadcast(local(assignment, assignedRows)), Seq("query_id"))
       .select(col("query_id"), col("q_emb"), col("cell_id"))
 
     // STATIC cell pruning: Spark's dynamic partition pruning does NOT
@@ -135,39 +130,21 @@ object IvfAnn {
     // partitioned layout exists for at 100 TB.
     val probedCells = assignedRows.map(_.get(1)).distinct.toSeq
     val prunedIndex = index.filter(col("cell_id").isin(probedCells: _*))
-    // Final per-query top-k through the bounded-heap operator
-    // (plans/TopKPerGroup), NOT a row_number window: the window variant
-    // funnels each query's whole candidate set (∝ corpus·nprobe/nlist)
-    // into one task for a full sort. The heap pass reduces map-side, so
-    // the shuffle carries ≤ k rows per query; the rank is then a window
-    // over that already-k-bounded result (k·|queries| rows total).
+    // Final per-query top-k through [[SimilarityQueries.rankTopK]]'s
+    // bounded heap: a row_number window would funnel each query's whole
+    // candidate set (∝ corpus·nprobe/nlist) into one task for a full sort.
     // Norms hoisted out of the per-candidate kernel (round 21): cosine()
     // spelled per pair computed THREE dim-length dots per (query, candidate)
     // — dot(q,q) and dot(e,e) alongside the one that matters. q_norm lands
-    // below the probe side's broadcast, v_norm below the join on the
+    // below the probe side's broadcast, norm below the join on the
     // streamed index side (both plan barriers, so each computes once per
     // row); the scoring loop now runs one dot per candidate. Same ops, same
     // order — bit-identical cosines.
-    val probedN = probed.withColumn("q_norm",
-      sqrt(VectorOps.dot(col("q_emb"), col("q_emb"))))
-    val prunedN = prunedIndex.withColumn("v_norm",
-      sqrt(VectorOps.dot(col("embedding"), col("embedding"))))
-    val scored = probedN.join(prunedN, Seq("cell_id"))
+    val probedN = probed.withColumn("q_norm", normD(col("q_emb")))
+    val prunedN = prunedIndex.withColumn("norm", normD(col("embedding")))
+    rankTopK(probedN.join(prunedN, Seq("cell_id"))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(VectorOps.dot(col("q_emb"), col("embedding")) /
-                (col("q_norm") * col("v_norm")), 6).as("cosine"))
-    val top = graft.plans.TopKPerGroup.topK(
-      scored, Seq(col("query_id")),
-      // ties (rounded cosine) break toward the lowest vec_id, same as the
-      // previous ORDER BY cosine DESC, vec_id — negate for descending
-      struct(col("cosine"), (-col("vec_id")).as("tb")), k)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    top
-      .withColumn("rn", row_number().over(w))
-      .select(col("query_id"), col("rn"), col("vec_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+      .select(col("query_id"), col("vec_id"), cosine), k)
   }
 
   /** Top-k within the nprobe nearest cells per query — self-contained form
@@ -183,14 +160,9 @@ object IvfAnn {
     // repeated search() calls would pin storage memory for the session
     // lifetime. nlist rows × one float vector is kilobytes.
     val trained = trainCentroids(emb, nlist)
-    val centroids = emb.sparkSession.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        java.util.Arrays.asList(trained.collect(): _*)),
-      trained.schema)
-    val index = assignCells(emb, centroids)
-    val queries = emb.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    probeTopK(index, centroids, queries, k, nprobe)
+    val centroids = local(trained, trained.collect())
+    probeTopK(assignCells(emb, centroids), centroids, queryFrame(emb, queryIds),
+      k, nprobe)
   }
 
   /** Build the IVF index ONCE as a standing artifact under `indexDir`:
@@ -326,9 +298,8 @@ object IvfAnn {
     val n = index.count()
     val stride = math.max(1L, n / math.max(1, sampleN))
     val h = abs(xxhash64(col("vec_id")))
-    index.filter(pmod(h, lit(stride)) === 0)
-      .orderBy(h, col("vec_id")).limit(sampleN)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    SimilarityQueries.asQueries(index.filter(pmod(h, lit(stride)) === 0)
+      .orderBy(h, col("vec_id")).limit(sampleN))
   }
 
   def recallOfIndex(spark: org.apache.spark.sql.SparkSession,
@@ -340,29 +311,10 @@ object IvfAnn {
     // sampleN in-memory rows makes both consumers read the identical set
     // by construction instead of by determinism of re-evaluation.
     val sampled = sampleRecallQueries(index, sampleN)
-    val qs = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        java.util.Arrays.asList(sampled.collect(): _*)),
-      sampled.schema)
-    // same norm hoisting as probeTopK's scoring join (round 21): v_norm
-    // once per streamed index row, q_norm once per broadcast query row
-    val indexN = index.withColumn("v_norm",
-      sqrt(graft.functions.VectorOps.dot(col("embedding"), col("embedding"))))
-    val qsN = qs.withColumn("q_norm",
-      sqrt(graft.functions.VectorOps.dot(col("q_emb"), col("q_emb"))))
-    val scored = indexN.crossJoin(broadcast(qsN))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(graft.functions.VectorOps.dot(col("q_emb"), col("embedding")) /
-                (col("q_norm") * col("v_norm")), 6).as("cosine"))
-    val brute = graft.plans.TopKPerGroup.topK(scored, Seq(col("query_id")),
-        struct(col("cosine"), (-col("vec_id")).as("tb")), k)
-      .select(col("query_id"), col("vec_id"))
-    val nTruth = brute.count()
-    if (nTruth == 0) return 1.0
-    val got = searchIndexedMulti(spark, centroidsPath, indexPaths, qs, k, nprobe)
-      .select(col("query_id"), col("vec_id"))
-    got.join(brute, Seq("query_id", "vec_id")).count().toDouble / nTruth
+    val qs = local(sampled, sampled.collect())
+    SimilarityQueries.recall(
+      searchIndexedMulti(spark, centroidsPath, indexPaths, qs, k, nprobe),
+      cosineTopK(qs, index, k))
   }
 
   /** [[ensureIncremental]] with the retrain decision ENGINE-OWNED: after
@@ -501,8 +453,7 @@ object IvfAnn {
 
   /** The gate's ten query vectors, fetched from the corpus. */
   private def gateQueries(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").filter(col("vec_id") < 10L)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    queryFrame(t(s, dir, "embeddings"), 0L until 10L)
 
   val all: Map[String, QueryFn] = Map(
     "q_ann_ivf" -> annIvf,

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{t, QueryFn}
@@ -9,12 +9,16 @@ import graft.operators.{t, QueryFn}
   *
   *  - [[annBrute]]: exact cosine top-k — the correctness baseline. A
   *    broadcast of the (small) query set against a full scan of the corpus:
-  *    one pass, no shuffle of the corpus, per-partition top-k via window.
+  *    one pass, no shuffle of the corpus, per-query top-k via bounded heap.
   *  - [[annLsh]]: random-hyperplane LSH (4 tables × 8 bits). Signatures are
   *    one projection pass; the candidate join keys on (table, bucket), so
   *    at 100 TB the corpus never cross-joins — cost is bucket-collision
   *    volume, tunable by bits/tables. This is the scale path; recall vs
   *    [[annBrute]] is measured in SimilaritySpec.
+  *
+  * Every tier, here and in [[IvfAnn]], shares the same steps: the query
+  * frame ([[queryFrame]]), exact cosine scoring ([[cosineTopK]]), the
+  * per-query ranking ([[rankTopK]]) and recall ([[recall]]).
   *
   * Hyperplane weights are pseudo-random ±1 derived from integer mixing of
   * (table, plane, dim) — deterministic across engines and runs, no RNG
@@ -28,7 +32,7 @@ object SimilarityQueries {
   private def dotD(a: Column, b: Column): Column =
     graft.functions.VectorOps.dot(a, b)
 
-  private def normD(a: Column): Column =
+  private[pipeline] def normD(a: Column): Column =
     sqrt(graft.functions.VectorOps.dot(a, a))
 
   /** 8-bit bucket signature of an embedding under hash table `tbl` — the
@@ -45,38 +49,81 @@ object SimilarityQueries {
       // similarities) — exclude it here and in the oracles' norm CTE
       .where(col("norm") > 0)
 
-  /** Exact brute-force cosine top-5 for query vectors vec_id < 10. */
-  val annBrute: QueryFn = (s, dir) =>
-    bruteTopKFrame(t(s, dir, "embeddings"), (0L until 10L), 5)
+  /** The rounded cosine of a (q_emb, q_norm) × (embedding, norm) pair. */
+  private[pipeline] def cosine: Column =
+    round(dotD(col("q_emb"), col("embedding")) / (col("q_norm") * col("norm")), 6)
+      .as("cosine")
 
-  /** Exact brute top-k over any (vec_id, embedding) frame — the ground
-    * truth the approximate tiers' recall is measured against (specs +
-    * [[graft.AnnScale]]). Queries broadcast; per-query top-k through the
-    * bounded-heap [[graft.plans.TopKPerGroup]] (map-side reduction, ≤ k
-    * rows per query shuffled) rather than a row_number window, which would
-    * funnel each query's full n scored rows into one task at corpus
-    * scale. Same rounded-cosine + lowest-vec_id tie-break as the window
-    * form, so the registered query's oracle is unchanged. */
-  def bruteTopKFrame(embRaw: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val e = withNorm(embRaw)
-    val q = broadcast(
-      e.filter(col("vec_id").isin(queryIds: _*))
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-                col("norm").as("q_norm")))
-    val scored = q.crossJoin(e)
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dotD(col("q_emb"), col("embedding")) / (col("q_norm") * col("norm")), 6)
-          .as("cosine"))
+  /** The query side of every ANN search: `(query_id, q_emb)` for the
+    * vectors of `emb` whose vec_id is in `ids`. */
+  def queryFrame(emb: DataFrame, ids: Seq[Long]): DataFrame =
+    asQueries(emb.filter(col("vec_id").isin(ids: _*)))
+
+  /** Every (vec_id, embedding) row of `emb` as a `(query_id, q_emb)` query. */
+  private[pipeline] def asQueries(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+
+  /** `rows`, collected from `df`, as a local relation with `df`'s schema:
+    * a small frame read more than once is then the same rows by
+    * construction, and a session-lifetime cache is never pinned. */
+  private[graft] def local(df: DataFrame, rows: Array[Row]): DataFrame =
+    df.sparkSession.createDataFrame(
+      new java.util.ArrayList[Row](java.util.Arrays.asList(rows: _*)), df.schema)
+
+  /** Per-query ranking of a scored `(query_id, vec_id, cosine)` frame →
+    * `(query_id, rn, vec_id, cosine)`, the top `k` per query ordered by
+    * (cosine desc, vec_id). The top-k runs through the bounded-heap
+    * [[graft.plans.TopKPerGroup]] (map-side reduction, ≤ k rows per query
+    * shuffled), not a row_number window, which would funnel each query's
+    * full scored set into one task for a full sort; the rank is then a
+    * window over the already-k-bounded frame. Ties (rounded cosine) break
+    * toward the lowest vec_id — the heap orders by -vec_id. */
+  def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val top = graft.plans.TopKPerGroup.topK(
       scored, Seq(col("query_id")),
       struct(col("cosine"), (-col("vec_id")).as("tb")), k)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
     top.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
       .select(col("query_id"), col("rn"), col("vec_id"), col("cosine"))
       .orderBy(col("query_id"), col("rn"))
+  }
+
+  /** Exact cosine top-k of each `(query_id, q_emb)` query against a
+    * `(vec_id, embedding)` corpus, ranked by [[rankTopK]]. The queries
+    * broadcast, so the corpus is scanned once and never shuffled; each
+    * side's norm is computed once per row (a plan barrier sits between it
+    * and the pair loop), so scoring runs one dot product per pair. A query
+    * never matches itself. */
+  def cosineTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val q = queries.withColumn("q_norm", normD(col("q_emb")))
+    val c = corpus.withColumn("norm", normD(col("embedding")))
+    rankTopK(broadcast(q).crossJoin(c)
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), cosine), k)
+  }
+
+  /** Recall of `got` against `truth` (both carrying `(query_id, vec_id)`,
+    * each pair at most once): the fraction of truth pairs `got` also
+    * returns, 1.0 when the truth is empty (`got` is then not evaluated). */
+  def recall(got: => DataFrame, truth: DataFrame): Double = {
+    val pair = Seq("query_id", "vec_id")
+    val nTruth = truth.count()
+    if (nTruth == 0) 1.0
+    else got.select(pair.map(col): _*)
+      .join(truth.select(pair.map(col): _*), pair).count().toDouble / nTruth
+  }
+
+  /** Exact brute-force cosine top-5 for query vectors vec_id < 10. */
+  val annBrute: QueryFn = (s, dir) =>
+    bruteTopKFrame(t(s, dir, "embeddings"), (0L until 10L), 5)
+
+  /** Exact brute top-k over any (vec_id, embedding) frame — the ground
+    * truth the approximate tiers' recall is measured against (specs +
+    * [[graft.AnnScale]]): [[cosineTopK]] behind the [[withNorm]] fence. */
+  def bruteTopKFrame(embRaw: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
+    val e = withNorm(embRaw).select(col("vec_id"), col("embedding"))
+    cosineTopK(queryFrame(e, queryIds), e, k)
   }
   val annBruteSql: String =
     """WITH n AS (
@@ -122,10 +169,17 @@ object SimilarityQueries {
     * recall alive on SPARSE corpora (n ≲ 2^b leaves <1 vector per bucket:
     * at sf0.01's 200 vectors, exact-bucket recall was 0.04 — caught by
     * check.py's tolerance gate — vs 0.42 at Hamming-1 and 0.74 at the
-    * round-19 default below; `graft.LshCurve` prints the measured
-    * recall-vs-candidates curve that picked it). */
+    * round-19 default below; `graft.AnnScale`'s `lsh` mode prints the
+    * measured recall-vs-candidates curve that picked it). */
   def lshTopKFrame(embRaw: DataFrame, queryIds: Seq[Long], k: Int,
-                   tables: Int = 4, probes: Int = 25): DataFrame = {
+                   tables: Int = 4, probes: Int = 25): DataFrame =
+    rankTopK(lshCandidates(embRaw, queryIds, tables, probes)
+      .select(col("query_id"), col("vec_id"), cosine), k)
+
+  /** Distinct (query, candidate) pairs of the probe configuration, with
+    * both vectors and norms — what [[lshTopKFrame]] scores. */
+  private def lshCandidates(embRaw: DataFrame, queryIds: Seq[Long],
+                            tables: Int, probes: Int): DataFrame = {
     val planes = graft.functions.HyperplaneLsh.Planes
     val maxProbes = 1 + planes + planes * (planes - 1) / 2
     require(probes >= 1 && probes <= maxProbes,
@@ -153,36 +207,19 @@ object SimilarityQueries {
       .select(col("tbl"), explode(probeBuckets).as("bucket"),
               col("vec_id").as("query_id"),
               col("embedding").as("q_emb"), col("norm").as("q_norm"))
-    val cands = q.join(sigs, Seq("tbl", "bucket"))
+    q.join(sigs, Seq("tbl", "bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("q_emb"), col("q_norm"),
               col("embedding"), col("norm"))
       .distinct()
-    lshScoreTopK(cands, k)
   }
 
   /** Distinct (query, candidate) count of the probe configuration — the
-    * COST side of the recall-vs-cost curve ([[graft.LshCurve]]): exact-
-    * scoring work and bucket-join output both scale with it. */
+    * COST side of the recall-vs-cost curve (`graft.AnnScale` `lsh` mode):
+    * exact-scoring work and bucket-join output both scale with it. */
   private[graft] def lshCandidateCount(embRaw: DataFrame, queryIds: Seq[Long],
-                                       tables: Int, probes: Int): Long = {
-    // Reuse the full pipeline's candidate set by scoring with k large
-    // enough to keep every candidate: the scored frame is exactly one row
-    // per distinct candidate pair.
-    lshTopKFrame(embRaw, queryIds, Int.MaxValue, tables, probes).count()
-  }
-
-  private def lshScoreTopK(cands: DataFrame, k: Int): DataFrame = {
-    val scored = cands.select(col("query_id"), col("vec_id"),
-      round(dotD(col("q_emb"), col("embedding")) / (col("q_norm") * col("norm")), 6)
-        .as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("vec_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
-  }
+                                       tables: Int, probes: Int): Long =
+    lshCandidates(embRaw, queryIds, tables, probes).count()
 
   /** Per-vector symmetric int8 quantization: scale = max|xᵢ|/127, qᵢ =
     * floor(xᵢ/scale + 0.5) ∈ [-127, 127]. floor(x+0.5) rather than a
@@ -226,26 +263,12 @@ object SimilarityQueries {
       e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
                 col("qnorm").as("q_qnorm")))
-    val scored = q.crossJoin(e)
+    rankTopK(q.crossJoin(e)
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(graft.functions.VectorOps.dotLong(col("q_qv"), col("qv")).cast("double")
                 / (col("q_qnorm") * col("qnorm")), 6)
-          .as("cosine"))
-    // Per-query top-k through the bounded-heap TopKPerGroup, same as
-    // [[bruteTopKFrame]]: the heap reduces map-side so the shuffle carries
-    // ≤ k rows per query; a row_number window here would funnel each
-    // query's full n scored rows into one task for a full sort. The final
-    // window runs over the already-k-bounded frame (k·|queries| rows).
-    val top = graft.plans.TopKPerGroup.topK(
-      scored, Seq(col("query_id")),
-      struct(col("cosine"), (-col("vec_id")).as("tb")), 5)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    top.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("query_id"), col("rn"), col("vec_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+          .as("cosine")), 5)
   }
   val annInt8Sql: String =
     """WITH sc AS (

@@ -75,10 +75,8 @@ class IvfAnnSpec extends SparkSpec {
     }
     // Recall@5 vs brute force: nprobe=4 of nlist=16 scans ~1/4 of a
     // near-uniform corpus; demand better than random-subset recall.
-    val brute = pipeline.SimilarityQueries.annBrute(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val got = ivf.map(r => (r.getLong(0), r.getLong(2))).toSet
-    val recall = brute.count(got.contains).toDouble / brute.size
+    val recall = pipeline.SimilarityQueries.recall(df,
+      pipeline.SimilarityQueries.annBrute(spark, sfDir))
     info(f"IVF recall@5 vs brute: $recall%.2f")
     assert(recall >= 0.2, f"recall collapsed: $recall%.2f")
   }

@@ -21,32 +21,54 @@ class SimilaritySpec extends SparkSpec {
     // per query shuffled) — a row_number window here would funnel each
     // query's FULL scored corpus into one task for a full sort. Any
     // SortExec may only sit ABOVE the heap (over the k-bounded frame).
+    // Every ANN tier ranks through the same step (SimilarityQueries
+    // .rankTopK), so each one is checked here, not int8 alone. The one
+    // sort allowed below the heap is a sort-merge join's own input sort
+    // (LSH's bucket join): it orders candidates by join key, not by score.
     // Assert on the EXECUTED tree (AQE final plan after an action),
     // expanding the leaf QueryStageExec wrappers — a printed-tree string
     // walk could go vacuously green on a formatting change (ADVICE r13).
-    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.{InputAdapter, SortExec, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val df = pipeline.SimilarityQueries.annInt8(spark, sfDir)
-    df.collect()
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     def expand(p: SparkPlan): SparkPlan = p match {
       case a: AdaptiveSparkPlanExec => expand(a.executedPlan)
       case q: QueryStageExec => expand(q.plan)
+      case other => other
+    }
+    // the operator under any codegen wrappers
+    def unwrap(p: SparkPlan): SparkPlan = expand(p) match {
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case i: InputAdapter => unwrap(i.child)
       case other => other
     }
     def subtree(p: SparkPlan): Seq[SparkPlan] = {
       val e = expand(p)
       e +: e.children.flatMap(subtree)
     }
-    val nodes = subtree(df.queryExecution.executedPlan)
-    val heaps = nodes.collect { case h: plans.TopKPerGroupExec => h }
-    assert(heaps.nonEmpty,
-      s"no TopKPerGroupExec in:\n${df.queryExecution.executedPlan}")
-    heaps.foreach { h =>
-      val below = h.children.flatMap(subtree)
-      assert(below.nonEmpty, "heap subtree empty — nothing was asserted on")
-      val sorts = below.collect { case s: SortExec => s }
-      assert(sorts.isEmpty,
-        s"SortExec below the bounded heap:\n${df.queryExecution.executedPlan}")
+    val tiers = Seq(
+      "q_ann_int8" -> pipeline.SimilarityQueries.annInt8,
+      "q_ann_brute" -> pipeline.SimilarityQueries.annBrute,
+      "q_ann_lsh" -> pipeline.SimilarityQueries.annLsh,
+      "q_ann_ivf" -> pipeline.IvfAnn.annIvf)
+    for ((name, query) <- tiers) {
+      val df = query(spark, sfDir)
+      df.collect()
+      val nodes = subtree(df.queryExecution.executedPlan)
+      val heaps = nodes.collect { case h: plans.TopKPerGroupExec => h }
+      assert(heaps.nonEmpty,
+        s"$name: no TopKPerGroupExec in:\n${df.queryExecution.executedPlan}")
+      heaps.foreach { h =>
+        val below = h.children.flatMap(subtree)
+        assert(below.nonEmpty, s"$name: heap subtree empty — nothing was asserted on")
+        val joinInputs = below.collect { case j: SortMergeJoinExec => j.children }
+          .flatten.map(unwrap)
+        val sorts = below.collect {
+          case s: SortExec if !joinInputs.exists(_ eq s) => s
+        }
+        assert(sorts.isEmpty,
+          s"$name: SortExec below the bounded heap:\n${df.queryExecution.executedPlan}")
+      }
     }
   }
 

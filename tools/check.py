@@ -269,8 +269,9 @@ TOLERANCE = {
                                 # retrained index measures 0.90
     "lsh_recall_min": 0.50,     # hamming-2 multi-probe (tables=4,
                                 # probes=25) is the pinned operating point
-                                # since r19 — the knee of graft.LshCurve's
-                                # measured curve (0.62 at sf0.01); a
+                                # since r19 — the knee of the curve
+                                # graft.AnnScale's lsh mode measures
+                                # (0.62 at sf0.01); a
                                 # regression to hamming-1 (0.42) or
                                 # exact-bucket (0.04) FAILs
 }

@@ -2,7 +2,7 @@
 """WRITE-path differential fuzzer (NOT part of the library): generates seeded
 multi-statement scripts — CTAS, INSERT INTO append, static and DYNAMIC
 partition INSERT OVERWRITE — runs them through the engine session
-(graft.WriteFuzzRunner) and replays the equivalent table mutations in DuckDB,
+(graft.SqlRunner) and replays the equivalent table mutations in DuckDB,
 then hash-compares the read-back table contents.
 
 DuckDB has no partition-overwrite, so the twin spells the SEMANTICS out:
@@ -266,7 +266,7 @@ def main():
         cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
     cmd += ["-Xmx8g", "-Dspark.sql.session.timeZone=UTC",
             "-cp", f"{REPO}/target/scala-2.13/classes:/opt/spark/jars/*",
-            "graft.WriteFuzzRunner", args.sf, sfile, args.out]
+            "graft.SqlRunner", args.sf, sfile, args.out]
     r = subprocess.run(cmd, capture_output=True, text=True)
     if r.returncode != 0:
         print(r.stderr[-3000:])
