@@ -32,6 +32,7 @@ import graft.pipeline.SimilarityQueries.recall
   * `all` (default: ivf, ivfidx and lsh), `ivf`, `ivfidx`, `drift` or
   * `lsh`; factor 1 measures the corpus itself. Prints one line per
   * measurement; takeaways are recorded in BASELINE.md's scale section.
+  * The amplified corpus lives in a temp dir deleted at exit.
   */
 object AnnScale {
 
@@ -53,7 +54,20 @@ object AnnScale {
               .otherwise(-x))).as("embedding"))
   }
 
-  def main(args: Array[String]): Unit = {
+  /** The [[amplified]] corpus written under `dir` and read back: the
+    * rehearsals' working copy. */
+  def staged(spark: SparkSession, sfDir: String, factor: Int,
+             dir: String): DataFrame = {
+    amplified(spark, sfDir, factor)
+      .repartition(math.max(32, factor / 8))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    spark.read.parquet(s"$dir/embeddings.parquet")
+  }
+
+  def main(args: Array[String]): Unit =
+    ScaleData.withTempDir("graft_annscale")(run(args, _))
+
+  private def run(args: Array[String], out: String): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(750)
     val k = args.lift(2).map(_.toInt).getOrElse(5)
@@ -61,12 +75,8 @@ object AnnScale {
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val out = java.nio.file.Files.createTempDirectory("graft_annscale").toString
     val t0 = System.nanoTime()
-    amplified(spark, sfDir, factor)
-      .repartition(math.max(32, factor / 8))
-      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    val emb = spark.read.parquet(s"$out/embeddings.parquet")
+    val emb = staged(spark, sfDir, factor, out)
     val n = emb.count()
     println(f"[annscale] corpus x$factor = $n vectors in ${(System.nanoTime() - t0) / 1e9}%.1f s -> $out")
 

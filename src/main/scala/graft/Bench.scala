@@ -4,6 +4,7 @@ import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -50,7 +51,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * `plan` — `explain("formatted")` per query: to stdout, or with
   * `<outDir> <suffix>` to `<outDir>/<query>_<suffix>.txt` (the evidence
-  * artifacts committed under `plans/`).
+  * artifacts committed under `plans/`). The text is run-stable
+  * ([[stablePlan]]), so two builds' plans compare with a plain `diff`.
   *
   * `audit` — one line per query: join strategies, exchanges,
   * whole-stage-codegen spans and scans with pushed filters, so a dimension
@@ -302,8 +304,8 @@ object Bench {
       suffix: Option[String], query: String => DataFrame): Unit = {
     outDir.foreach(d => Files.createDirectories(Paths.get(d)))
     names.foreach { name =>
-      val txt = query(name).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val txt = stablePlan(query(name).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
       (outDir, suffix) match {
         case (Some(d), Some(s)) =>
           Files.write(Paths.get(d, s"${name}_$s.txt"), txt.getBytes("UTF-8"))
@@ -312,6 +314,37 @@ object Bench {
           println(s"== $name ==\n$txt")
       }
     }
+  }
+
+  private val ExprId = """#\d+""".r
+  private val PlanId = """plan_id=\d+""".r
+  private val RddId = """(?<=RDD)\[\d+\]""".r
+  private val LambdaVar = """(?<=lambda )([A-Za-z]\w*?)_\d+(?=#)""".r
+  private val IdentityHash = """([\w$]+(?:[./][\w$]+)+)@[0-9a-f]{1,8}\b""".r
+  private val LambdaClass = """\$\$Lambda(?:\$\d+)?(?:/0x[0-9a-f]+)?""".r
+  private val SourceLine = """(?<=\.scala):\d+""".r
+
+  /** `explain` text that reads the same in every run: expression, plan and
+    * RDD ids and lambda-variable suffixes (session-global counters) are
+    * renumbered by first appearance, so the plan still traces within
+    * itself; JVM lambda class suffixes, identity hashes and the source
+    * line numbers of RDD call sites (which move with any edit) are
+    * dropped. */
+  private[graft] def stablePlan(txt: String): String = {
+    def renumber(s: String, re: Regex)(name: (Regex.Match, Int) => String) = {
+      val seen = scala.collection.mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(s, m => Regex.quoteReplacement(
+        name(m, seen.getOrElseUpdate(m.matched, seen.size + 1))))
+    }
+    val dropped = Seq[(Regex, Regex.Match => String)](
+        IdentityHash -> (_.group(1)), LambdaClass -> (_ => "$$Lambda"),
+        SourceLine -> (_ => ""))
+      .foldLeft(txt) { case (s, (re, keep)) =>
+        re.replaceAllIn(s, m => Regex.quoteReplacement(keep(m))) }
+    val exprs = renumber(dropped, ExprId)((_, n) => s"#$n")
+    val plans = renumber(exprs, PlanId)((_, n) => s"plan_id=$n")
+    val rdds = renumber(plans, RddId)((_, n) => s"[$n]")
+    renumber(rdds, LambdaVar)((m, n) => s"${m.group(1)}_$n")
   }
 
   private def audit(names: Seq[String], query: String => DataFrame): Unit = {

@@ -22,14 +22,20 @@ import org.apache.spark.sql.functions._
   * the copies and understate build cost.
   *
   * Run: `sbt "runMain graft.DeltaBench [srcDir] [workDir]"` (or plain java
-  * with the verify-skill --add-opens list). Prints one JSON line; a
-  * GRAFT_RECORD=1 run writes BENCH_DELTA.json in cwd.
+  * with the verify-skill --add-opens list); without a `workDir` it works in
+  * a temp dir deleted at exit. Prints one JSON line; a GRAFT_RECORD=1 run
+  * writes BENCH_DELTA.json in cwd.
   */
 object DeltaBench {
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val workDir = args.lift(1).getOrElse(
-      Files.createTempDirectory("graft_delta_bench").toString)
+    args.lift(1) match {
+      case Some(workDir) => run(srcDir, workDir)
+      case None => ScaleData.withTempDir("graft_delta_bench")(run(srcDir, _))
+    }
+  }
+
+  private def run(srcDir: String, workDir: String): Unit = {
     val initialFactor = sys.env.getOrElse("GRAFT_DELTA_INITIAL", "16").toInt
     val deltaFactors = sys.env.getOrElse("GRAFT_DELTA_STEPS", "1,2,4")
       .split(",").map(_.trim.toInt).toSeq

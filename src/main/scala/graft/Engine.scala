@@ -34,9 +34,13 @@ import org.apache.spark.sql.SparkSession
 object Engine {
 
   /** JVM-unique warehouse for managed tables (CTAS/DDL tests): keeps runs
-    * isolated — a killed JVM can't poison the next one's table locations. */
-  private lazy val warehouseDir: String =
-    java.nio.file.Files.createTempDirectory("graft-warehouse").toString
+    * isolated — a killed JVM can't poison the next one's table locations.
+    * Deleted when the JVM exits. */
+  private lazy val warehouseDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-warehouse")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    dir.toString
+  }
 
   /** The master a main runs on: `SPARK_GRAFT_MASTER` (e.g.
     * `local-cluster[2,4,4096]`, see [[ClusterMode]]), else

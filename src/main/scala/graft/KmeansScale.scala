@@ -4,7 +4,7 @@ package graft
   * scale (VERDICT r12 #6) — K=256 over ~1.5 M sign-decorrelated vectors is
   * the scale the semantic-dedup tier would run at SF10-equivalent corpora.
   *
-  * Reuses [[AnnScale.amplified]] (deterministic per-copy sign flips: every
+  * Reuses [[AnnScale.staged]] (deterministic per-copy sign flips: every
   * copy is a distinct direction, so the clustering problem genuinely grows
   * with the factor instead of collapsing onto bit-identical twins). Prints
   * per round: wall seconds and the spherical inertia Σ(1−cosine) — the
@@ -13,7 +13,10 @@ package graft
   * Run: `graft.KmeansScale [sfDir] [factor] [k] [maxIters]`.
   */
 object KmeansScale {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    ScaleData.withTempDir("graft_kmscale")(run(args, _))
+
+  private def run(args: Array[String], out: String): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(750)
     val k = args.lift(2).map(_.toInt).getOrElse(256)
@@ -21,11 +24,7 @@ object KmeansScale {
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val out = java.nio.file.Files.createTempDirectory("graft_kmscale").toString
-    AnnScale.amplified(spark, sfDir, factor)
-      .repartition(math.max(32, factor / 8))
-      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    val emb = spark.read.parquet(s"$out/embeddings.parquet")
+    val emb = AnnScale.staged(spark, sfDir, factor, out)
     println(s"[kmscale] corpus x$factor = ${emb.count()} vectors, k=$k")
 
     var last = System.nanoTime()

@@ -49,6 +49,15 @@ object ScaleData {
     "embeddings" -> Seq("vec_id"),
     "events" -> Seq("event_id", "user_id"))
 
+  /** Runs `body` on a fresh directory under `java.io.tmpdir` (the scale
+    * rehearsals' amplified corpora) and deletes it afterwards, whether or
+    * not `body` succeeded. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   /** Shared dimensions: copied through unamplified (as dbgen does). */
   val fixed: Seq[String] = Seq("region", "nation")
 

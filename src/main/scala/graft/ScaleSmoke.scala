@@ -9,15 +9,17 @@ import org.apache.spark.sql.functions._
   * and dedup behave as on genuinely larger data) and runs the heavy
   * pipelines at that scale — a local stand-in for the 100 TB question
   * "does the plan survive a 10× scale-up" (shuffle sizing, AQE behavior,
-  * no driver-side collapse). Run:
+  * no driver-side collapse). The amplified copy is deleted at exit. Run:
   * `... graft.ScaleSmoke [sfDir] [factor]`
   */
 object ScaleSmoke {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    ScaleData.withTempDir("graft_scale")(run(args, _))
+
+  private def run(args: Array[String], out: String): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val spark = Engine.session()
-    val out = java.nio.file.Files.createTempDirectory("graft_scale").toString
 
     // One amplifier for the repo: ScaleData's disjoint-universe key shift
     // (every PK+FK per copy), rather than a drifting local variant — the

@@ -2,28 +2,21 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
-/** Codegen'd argmax-cosine assignment kernel (round 21) — the per-row
-  * nearest-centroid step of the k-means and IVF tiers, replacing
+/** Argmax-cosine assignment kernel: the per-row nearest-centroid step of
+  * the k-means and IVF tiers and the streaming router, one static call
+  * inside whole-stage codegen ([[GraftFunctions.kernel]]). The row norm is
+  * computed once per row, centroid norms arrive precomputed in the
+  * broadcast struct, and the comparison loop allocates nothing.
+  *
+  * Semantics are those of
   *
   * {{{ array_max(transform(cents, c => struct(sim, -id, id))) }}}
   *
-  * which paid, per row: an interpreted lambda dispatch per centroid (HOFs
-  * are CodegenFallback), one ordering-struct allocation per centroid, and —
-  * in the IVF form, which had no precomputed norm columns — a re-computed
-  * `sqrt(dot(emb, emb))` per centroid and `sqrt(dot(centroid, centroid))`
-  * per (row, centroid) pair. This expression runs one static call inside
-  * whole-stage codegen: the row norm is computed ONCE per row, centroid
-  * norms arrive precomputed in the broadcast struct, and the comparison
-  * loop allocates nothing.
-  *
-  * Exact semantics of the replaced composite (pinned in KernelEquivalenceSpec
-  * against the literal old construction):
+  * pinned in ArgmaxSimSpec against that literal construction:
   *
   *  - sim = dot(emb, centroid) / (sqrt(dot(emb, emb)) * cnorm), the same
   *    index-order double arithmetic ([[VectorOps.dotF]]/[[VectorOps.dotDbl]]),
@@ -35,7 +28,7 @@ import org.apache.spark.sql.types._
   *    descending is compared without the `-id` negation, so the kernel is
   *    also safe at Long.MinValue where the negation trick overflows);
   *  - a null `emb` yields null sims for every centroid, so the winner is
-  *    the lowest id with a null sim (the old struct compare's behavior);
+  *    the lowest id with a null sim;
   *  - an empty or null centroid array yields a null result (array_max of
   *    an empty array).
   *
@@ -50,11 +43,12 @@ object ArgmaxSim {
     else java.math.BigDecimal.valueOf(v)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** `emb` may be null (null sims, lowest id wins); `cents` must be
-    * non-null (the expression handles null), empty → null. Struct fields
-    * by POSITION: (id: long, centroid: array, cnorm: double). */
+  /** `emb` may be null (null sims, lowest id wins); null or empty `cents`
+    * → null. Struct fields by POSITION: (id: long, centroid: array,
+    * cnorm: double). */
   def argmax(emb: ArrayData, cents: ArrayData,
              doubleElems: Boolean, roundTo6: Boolean): InternalRow = {
+    if (cents == null) return null
     val n = cents.numElements()
     if (n == 0) return null
     var vnorm = 0.0
@@ -76,7 +70,7 @@ object ArgmaxSim {
         if (emb != null && !st.isNullAt(1) && !st.isNullAt(2)) {
           val cent = st.getArray(1)
           // Spark's non-ANSI Divide returns NULL on a ZERO divisor (for
-          // doubles too — this is what the old composite produced for a
+          // doubles too — this is what the composite produces for a
           // zero-norm centroid or zero-norm vector, and why "null sim"
           // ordering exists at all); a NaN divisor still divides to NaN.
           val den = vnorm * st.getDouble(2)
@@ -119,78 +113,21 @@ object ArgmaxSim {
         if (bestIdNull) null else java.lang.Long.valueOf(bestId)))
   }
 
-  def apply(emb: Column, cents: Column, roundTo6: Boolean): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      ArgmaxSimExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(emb),
-        org.apache.spark.sql.graft.ColumnBridge.expression(cents),
-        roundTo6))
-}
-
-/** argmax_sim(array<float|double>, array<struct<id, centroid, cnorm>>) →
-  * struct<sim: double, id: bigint>. */
-case class ArgmaxSimExpression(left: Expression, right: Expression,
-                               roundTo6: Boolean)
-    extends BinaryExpression {
-
-  private def doubleElems: Boolean = left.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def dataType: DataType = StructType(Seq(
+  private val Result = StructType(Seq(
     StructField("sim", DoubleType, nullable = true),
     StructField("id", LongType, nullable = true)))
 
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val elem = left.dataType match {
-      case ArrayType(FloatType, _) => Some(FloatType)
-      case ArrayType(DoubleType, _) => Some(DoubleType)
-      case _ => None
-    }
-    (elem, right.dataType) match {
-      case (Some(e), ArrayType(StructType(Array(
-          StructField(_, LongType, _, _),
-          StructField(_, ArrayType(ce, _), _, _),
-          StructField(_, DoubleType, _, _))), _)) if ce == e =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"argmax_sim expects (array<float|double>, array<struct<id: " +
-            s"bigint, centroid: array<same elem>, cnorm: double>>), got " +
-            s"(${left.dataType}, ${right.dataType})")
-    }
+  /** `argmax_sim(emb, cents)`; `doubleElems` says whether `emb` and the
+    * centroids are double arrays (k-means, streaming router) or float
+    * arrays (IVF). */
+  def apply(emb: Column, cents: Column, doubleElems: Boolean,
+            roundTo6: Boolean): Column = {
+    val vec = ArrayType(if (doubleElems) DoubleType else FloatType)
+    val centroids = ArrayType(StructType(Seq(StructField("id", LongType),
+      StructField("centroid", vec), StructField("cnorm", DoubleType))))
+    GraftFunctions.kernel(this, "argmax", Result,
+      Seq(emb -> vec, cents -> centroids,
+        lit(doubleElems) -> BooleanType, lit(roundTo6) -> BooleanType),
+      nullIn = true, nullOut = true)
   }
-
-  override def eval(input: InternalRow): Any = {
-    val c = right.eval(input)
-    if (c == null) null
-    else {
-      val e = left.eval(input)
-      ArgmaxSim.argmax(
-        if (e == null) null else e.asInstanceOf[ArrayData],
-        c.asInstanceOf[ArrayData], doubleElems, roundTo6)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val embGen = left.genCode(ctx)
-    val centsGen = right.genCode(ctx)
-    val resultCode =
-      s"""InternalRow ${ev.value} = null;
-         |boolean ${ev.isNull} = true;
-         |if (!${centsGen.isNull}) {
-         |  ${ev.value} = graft.functions.ArgmaxSim.argmax(
-         |    ${embGen.isNull} ? null : ${embGen.value},
-         |    ${centsGen.value}, $doubleElems, $roundTo6);
-         |  ${ev.isNull} = ${ev.value} == null;
-         |}""".stripMargin
-    ev.copy(code = embGen.code + centsGen.code + code"$resultCode")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArgmaxSimExpression =
-    copy(left = l, right = r)
-  override def prettyName: String = "argmax_sim"
 }

@@ -1,19 +1,17 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
-/** Codegen'd LSH band hashes (round 21): the 8 per-band `xxhash64` keys of
-  * a 32-lane MinHash signature in one static call.
+/** LSH band hashes: the per-band `xxhash64` keys of a MinHash signature in
+  * one static call inside whole-stage codegen ([[GraftFunctions.kernel]]);
+  * a null signature gives null.
   *
-  * Replaces `transform(sequence(0, bands−1), bnd => xxhash64(element_at
-  * (sig, bnd·rows+1), ..., element_at(sig, bnd·rows+rows)))` — an
-  * interpreted lambda per band per row (HOFs are CodegenFallback), each
-  * evaluating `rows` interpreted `element_at` calls plus the xxhash fold.
-  * Values are bit-identical: Spark's `xxhash64(c1..c4)` is a LEFT FOLD of
+  * Values equal `transform(sequence(0, bands−1), bnd => xxhash64(element_at
+  * (sig, bnd·rows+1), ..., element_at(sig, bnd·rows+rows)))` (pinned in
+  * KernelEquivalenceSpec): Spark's `xxhash64(c1..c4)` is a LEFT FOLD of
   * `XXH64.hashLong(value, acc)` from seed 42, skipping null inputs — the
   * exact loop below (out-of-range lanes behave like element_at's null:
   * skipped). */
@@ -40,38 +38,11 @@ object BandHashes {
     new GenericArrayData(out)
   }
 
-  def apply(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      BandHashesExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(sig),
-        bands, rowsPerBand))
-}
-
-/** band_hashes(array<bigint>, bands, rowsPerBand) → array<bigint>. */
-case class BandHashesExpression(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
-  require(bands >= 1 && rowsPerBand >= 1,
-    s"band_hashes: bands=$bands rowsPerBand=$rowsPerBand must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"band_hashes expects array<bigint>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    BandHashes.eval(v.asInstanceOf[ArrayData], bands, rowsPerBand)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.BandHashes.eval($c, $bands, $rowsPerBand)")
-
-  override protected def withNewChildInternal(newChild: Expression): BandHashesExpression =
-    copy(child = newChild)
-  override def prettyName: String = "band_hashes"
+  def apply(sig: Column, bands: Int, rowsPerBand: Int): Column = {
+    require(bands >= 1 && rowsPerBand >= 1,
+      s"band_hashes: bands=$bands rowsPerBand=$rowsPerBand must be positive")
+    GraftFunctions.kernel(this, "eval", ArrayType(LongType, containsNull = false),
+      Seq(sig -> ArrayType(LongType), lit(bands) -> IntegerType,
+        lit(rowsPerBand) -> IntegerType))
+  }
 }

@@ -51,6 +51,9 @@ object FnvHash {
       FnvHashExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
 }
 
+/** fnv_hash(x) → bigint. A class of its own, not a [[GraftFunctions.kernel]]:
+  * it picks the hash method from the resolved input type (12 SQL types),
+  * and it is SQL-visible as `fnv_hash`. */
 case class FnvHashExpression(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true

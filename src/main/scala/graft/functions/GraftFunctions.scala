@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
@@ -15,6 +16,8 @@ import org.apache.spark.sql.types._
   * `org.apache.spark.sql.functions`; this object registers the names Spark
   * lacks, each as a *builder of stock Catalyst expressions* (or our own
   * codegen'd expressions) so nothing here leaves whole-stage codegen.
+  * The engine's per-row kernels are static methods called through
+  * [[kernel]].
   *
   * Registration is idempotent and works both via [[graft.GraftExtensions]]
   * (sessions we build) and [[register]] (sessions built by an external
@@ -24,6 +27,24 @@ object GraftFunctions {
 
   private[graft] def toCol(e: Expression): Column = ColumnBridge.column(e)
   private[graft] def toExpr(c: Column): Expression = ColumnBridge.expression(c)
+
+  /** A per-row kernel as a Catalyst expression: Spark's [[StaticInvoke]] of
+    * `owner.method(args)`, where `owner` is a Scala object and the call goes
+    * to the static forwarder scalac emits for it. Generated code calls the
+    * method directly, once per row, so the kernel stays inside whole-stage
+    * codegen; with codegen off the same method runs through reflection.
+    *
+    * Each argument carries the type the analyzer checks it against.
+    * `nullIn = false`: a null argument gives a null result and the method
+    * never sees it; `nullIn = true`: nulls reach the method, which owns the
+    * null case. `nullOut`: the method may return null for non-null inputs. */
+  private[functions] def kernel(
+      owner: AnyRef, method: String, result: DataType,
+      args: Seq[(Column, DataType)],
+      nullIn: Boolean = false, nullOut: Boolean = false): Column =
+    toCol(StaticInvoke(owner.getClass, result, method,
+      args.map(a => toExpr(a._1)), args.map(_._2),
+      propagateNull = !nullIn, returnNullable = nullOut))
 
   /** name -> Catalyst expression builder (arity-checked at build time). */
   val injections: Seq[(String, FunctionBuilder)] = Seq(

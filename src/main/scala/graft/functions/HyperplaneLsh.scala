@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
@@ -18,12 +15,10 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * identical to Spark's `hash()` on an int) — so signatures are stable
   * across engines/runs with no RNG state and no broadcast of planes. Weights
   * are memoized per (table, dim-count): the per-row cost is exactly the
-  * 8×dims multiply-adds, fused into whole-stage codegen via a static call.
-  *
-  * This replaces a nested interpreted-HOF formulation
-  * (`aggregate(transform(...))` with a per-(plane,dim) hash expression)
-  * whose lambda interpretation cost ~20× per row — the bucket values are
-  * bit-identical by construction.
+  * 8×dims multiply-adds, fused into whole-stage codegen via a static call
+  * ([[GraftFunctions.kernel]]); a null embedding gives null. The bucket
+  * values are bit-identical to the nested `aggregate(transform(...))`
+  * formulation with a per-(plane, dim) hash expression.
   */
 object HyperplaneLsh {
   val Planes = 8
@@ -54,8 +49,7 @@ object HyperplaneLsh {
   }
 
   /** 8-bit signature; accumulation is index-order double arithmetic (same
-    * IEEE order as the HOF formulation it replaced). Null elements
-    * contribute 0. */
+    * IEEE order as the HOF formulation). Null elements contribute 0. */
   def signature(emb: ArrayData, tbl: Int, isFloat: Boolean): Int = {
     val n = emb.numElements()
     val w = weights(tbl, n)
@@ -77,45 +71,11 @@ object HyperplaneLsh {
     bucket
   }
 
-  def apply(emb: Column, tbl: Column): Column =
-    ColumnBridge.column(HyperplaneSignature(
-      ColumnBridge.expression(emb), ColumnBridge.expression(tbl)))
-}
-
-case class HyperplaneSignature(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "hyperplane_signature"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), IntegerType) =>
-        // the weight matrices memoize per (tbl, dims) in a process-wide
-        // cache; a per-row tbl would grow it without bound, so the hash
-        // table index must be a literal (it is the LSH table number, a
-        // configuration constant, never data)
-        if (right.foldable) TypeCheckResult.TypeCheckSuccess
-        else TypeCheckResult.TypeCheckFailure(
-          "hyperplane_signature: the table index must be a literal")
-      case other =>
-        TypeCheckResult.TypeCheckFailure(
-          s"hyperplane_signature expects (array<float|double>, int), got $other")
-    }
-
-  private lazy val isFloat =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(emb: Any, tbl: Any): Any =
-    HyperplaneLsh.signature(
-      emb.asInstanceOf[ArrayData], tbl.asInstanceOf[Int], isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, t) =>
-      s"graft.functions.HyperplaneLsh.signature($a, $t, $isFloat)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HyperplaneSignature =
-    copy(left = newLeft, right = newRight)
+  /** Bucket of `emb` (float or double elements, per `isFloat`) under hash
+    * table `tbl`. The table index is a constant, never data: the weight
+    * cache grows by one matrix per (tbl, dims). */
+  def apply(emb: Column, tbl: Int, isFloat: Boolean): Column =
+    GraftFunctions.kernel(this, "signature", IntegerType,
+      Seq(emb -> ArrayType(if (isFloat) FloatType else DoubleType),
+        lit(tbl) -> IntegerType, lit(isFloat) -> BooleanType))
 }

@@ -1,22 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Codegen'd word-n-gram kernels (round 21) — the [[TopRunFrac]] treatment
-  * applied to n-gram CONSTRUCTION itself.
-  *
-  * The composable builder ran as `transform(sequence(0, L−n),
-  * i -> concat_ws(" ", toks[i+1..i+n]))`: higher-order functions are
-  * CodegenFallback, so every gram paid an interpreted lambda dispatch plus
-  * n interpreted `element_at` + `concat_ws` evaluations — per gram window,
-  * per row, on every shingling pass (and the dedup tiers shingle the corpus
-  * up to three times per query). These expressions compute the identical
-  * values in one static-call pass inside whole-stage codegen:
+/** Word-n-gram kernels, each one static-call pass inside whole-stage
+  * codegen ([[GraftFunctions.kernel]]). They compute the values of the
+  * composable builder `transform(sequence(0, L−n), i -> concat_ws(" ",
+  * toks[i+1..i+n]))` (pinned in KernelEquivalenceSpec) without its
+  * interpreted lambda per gram window:
   *
   *  - [[WordNgrams]]: the gram STRINGS — byte-identical to
   *    `concat_ws(" ", ...)` including its null-skipping (a null token
@@ -38,38 +32,21 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object NgramKernels {
 
+  /** The gram kernels' result for a NULL token array, and for L < n: the
+    * composite ran under the engine's `ansi=false` sessions where legacy
+    * `size(null)` is −1, so its `when(size(toks) < n, ...)` guard mapped a
+    * NULL token array to an EMPTY gram array (never null) — these kernels
+    * must do the same or null-text rows flip the oracle hash
+    * (q_text_repetition's per-window fractions read 0.0 off the empty
+    * array). */
   private val EmptyArray = new GenericArrayData(new Array[Any](0))
 
-  /** Null-input result of the gram kernels: the replaced composite ran
-    * under the engine's `ansi=false` sessions where legacy `size(null)`
-    * is −1, so its `when(size(toks) < n, ...)` guard mapped a NULL token
-    * array to an EMPTY gram array (never null) — these kernels must do the
-    * same or null-text rows flip the oracle hash (q_text_repetition's
-    * per-window fractions read 0.0 off the empty array). */
-  def emptyArray(): ArrayData = EmptyArray
-
-  /** Codegen for the null→empty gram expressions: evaluate the child, then
-    * one ternary into a never-null ArrayData slot. */
-  private[functions] def genNullToEmpty(
-      ctx: CodegenContext, ev: ExprCode, child: Expression,
-      call: String => String): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val resultCode =
-      s"org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = " +
-        s"${childGen.isNull} ? graft.functions.NgramKernels.emptyArray() : " +
-        s"${call(childGen.value.toString)};"
-    ev.copy(
-      code = childGen.code + code"$resultCode",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
   /** Exact `concat_ws(" ", window)` grams; `distinct` keeps first
-    * occurrences (array_distinct semantics). Caller guarantees non-null
-    * input; L < n yields an empty array. */
+    * occurrences (array_distinct semantics). A null input or L < n yields
+    * an empty array. */
   def grams(a: ArrayData, n: Int, distinct: Boolean): ArrayData = {
+    if (a == null || a.numElements() < n) return EmptyArray
     val len = a.numElements()
-    if (len < n) return EmptyArray
     val toks = new Array[UTF8String](len)
     var i = 0
     while (i < len) {
@@ -108,10 +85,11 @@ object NgramKernels {
     * first-occurrence order, computed without building the gram string:
     * the fold walks each non-null token's UTF-8 bytes with one 0x20
     * separator byte between consecutive non-null tokens (an all-null
-    * window hashes like the empty string — the FNV basis). */
+    * window hashes like the empty string — the FNV basis). A null input or
+    * L < n yields an empty array. */
   def gramFnv(a: ArrayData, n: Int): ArrayData = {
+    if (a == null || a.numElements() < n) return EmptyArray
     val len = a.numElements()
-    if (len < n) return EmptyArray
     val toks = new Array[Array[Byte]](len)
     var i = 0
     while (i < len) {
@@ -175,113 +153,32 @@ object NgramKernels {
 }
 
 /** word_ngrams(array<string>, n, distinct) → array<string>; a null token
-  * array yields the EMPTY gram array (see [[NgramKernels.emptyArray]]). */
-case class WordNgramsExpression(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression {
-  require(n >= 1, s"word_ngrams: n must be >= 1, got $n")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"word_ngrams expects array<string>, got $other")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) NgramKernels.emptyArray()
-    else NgramKernels.grams(v.asInstanceOf[ArrayData], n, distinct)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    NgramKernels.genNullToEmpty(ctx, ev, child,
-      c => s"graft.functions.NgramKernels.grams($c, $n, $distinct)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgramsExpression =
-    copy(child = newChild)
-  override def prettyName: String = "word_ngrams"
-}
-
+  * array yields the EMPTY gram array (see [[NgramKernels.grams]]). */
 object WordNgrams {
-  def apply(toks: Column, n: Int, distinct: Boolean): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      WordNgramsExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(toks), n, distinct))
+  def apply(toks: Column, n: Int, distinct: Boolean): Column = {
+    require(n >= 1, s"word_ngrams: n must be >= 1, got $n")
+    GraftFunctions.kernel(NgramKernels, "grams",
+      ArrayType(StringType, containsNull = false),
+      Seq(toks -> ArrayType(StringType), lit(n) -> IntegerType,
+        lit(distinct) -> BooleanType), nullIn = true)
+  }
 }
 
 /** ngram_fnv(array<string>, n) → array<bigint> (distinct gram hashes,
   * first-occurrence order); null token array → empty, like [[WordNgrams]]. */
-case class NgramFnvExpression(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n >= 1, s"ngram_fnv: n must be >= 1, got $n")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ngram_fnv expects array<string>, got $other")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) NgramKernels.emptyArray()
-    else NgramKernels.gramFnv(v.asInstanceOf[ArrayData], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    NgramKernels.genNullToEmpty(ctx, ev, child,
-      c => s"graft.functions.NgramKernels.gramFnv($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): NgramFnvExpression =
-    copy(child = newChild)
-  override def prettyName: String = "ngram_fnv"
-}
-
 object NgramFnv {
-  def apply(toks: Column, n: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      NgramFnvExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(toks), n))
-}
-
-/** fnv_hash_array(array<string>) → array<bigint> (elementwise fnv_hash). */
-case class FnvHashArrayExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = child.dataType match {
-    case ArrayType(_, containsNull) => ArrayType(LongType, containsNull)
-    case _ => ArrayType(LongType, containsNull = true)
+  def apply(toks: Column, n: Int): Column = {
+    require(n >= 1, s"ngram_fnv: n must be >= 1, got $n")
+    GraftFunctions.kernel(NgramKernels, "gramFnv",
+      ArrayType(LongType, containsNull = false),
+      Seq(toks -> ArrayType(StringType), lit(n) -> IntegerType), nullIn = true)
   }
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"fnv_hash_array expects array<string>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    NgramKernels.fnvArray(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NgramKernels.fnvArray($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): FnvHashArrayExpression =
-    copy(child = newChild)
-  override def prettyName: String = "fnv_hash_array"
 }
 
+/** fnv_hash_array(array<string>) → array<bigint> (elementwise fnv_hash;
+  * null array → null). */
 object FnvHashArray {
   def apply(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      FnvHashArrayExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+    GraftFunctions.kernel(NgramKernels, "fnvArray", ArrayType(LongType),
+      Seq(c -> ArrayType(StringType)))
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** PPJoin position-filter bound (Xiao et al., "Efficient Similarity Joins
@@ -21,8 +20,9 @@ import org.apache.spark.sql.types._
   * spelled out as `cast(least(..)+1)+ε >= t·(na+nb)/(1+t)` inside a join
   * condition, Catalyst's constraint propagation / canonicalization over the
   * large comparison tree cost ~4 s of planning per query build (measured at
-  * sf0.1, round 20). As a single quaternary predicate it contributes one
-  * small constraint and compiles to a static call.
+  * sf0.1, round 20). As a single predicate it contributes one small
+  * constraint and compiles to a static call ([[GraftFunctions.kernel]]);
+  * a null argument gives null.
   */
 object PpjoinPositionOk {
   def ok(nsha: Int, pa: Int, nshb: Int, pb: Int, tEff: Double): Boolean =
@@ -30,42 +30,8 @@ object PpjoinPositionOk {
       tEff * (nsha + nshb) / (1.0 + tEff)
 
   def apply(nsha: Column, pa: Column, nshb: Column, pb: Column,
-            threshold: Double): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(PpjoinPositionOkExpression(
-      ColumnBridge.expression(nsha), ColumnBridge.expression(pa),
-      ColumnBridge.expression(nshb), ColumnBridge.expression(pb),
-      threshold - 5e-7))
-  }
-}
-
-/** ppjoin_position_ok(int, int, int, int; tEff) → boolean. */
-case class PpjoinPositionOkExpression(
-    first: Expression, second: Expression, third: Expression,
-    fourth: Expression, tEff: Double) extends QuaternaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Seq(first, second, third, fourth).map(_.dataType) match {
-      case Seq(IntegerType, IntegerType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ppjoin_position_ok expects four ints, got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    PpjoinPositionOk.ok(a.asInstanceOf[Int], b.asInstanceOf[Int],
-      c.asInstanceOf[Int], d.asInstanceOf[Int], tEff)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) =>
-      s"graft.functions.PpjoinPositionOk.ok($a, $b, $c, $d, ${tEff}D)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): PpjoinPositionOkExpression =
-    copy(first = f, second = s, third = t, fourth = q)
-  override def prettyName: String = "ppjoin_position_ok"
+            threshold: Double): Column =
+    GraftFunctions.kernel(this, "ok", BooleanType,
+      Seq(nsha -> IntegerType, pa -> IntegerType, nshb -> IntegerType,
+        pb -> IntegerType, lit(threshold - 5e-7) -> DoubleType))
 }

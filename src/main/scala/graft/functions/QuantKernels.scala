@@ -1,14 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Codegen'd kernels for the int8 quantization tier (round 21) — the two
-  * interpreted-HOF passes of [[graft.pipeline.SimilarityQueries.int8Quantized]]
-  * as static calls:
+/** Kernels of the int8 quantization tier — the two passes of
+  * [[graft.pipeline.SimilarityQueries.int8Quantized]] as static calls
+  * inside whole-stage codegen (values pinned in KernelEquivalenceSpec):
   *
   *  - [[AbsMax]]: `array_max(transform(emb, x => abs(cast(x as double))))`
   *    — max |xᵢ| as double, null elements skipped (array_max semantics),
@@ -68,7 +68,10 @@ object QuantKernels {
   }
 }
 
-/** abs_max(array<float>) → double (null for empty/all-null). */
+/** abs_max(array<float>) → double (null for empty/all-null). A class of
+  * its own, not a [[GraftFunctions.kernel]]: the result is a primitive
+  * double that is null for some non-null inputs, which `StaticInvoke`
+  * cannot return. */
 case class AbsMaxExpression(child: Expression) extends UnaryExpression {
   override def dataType: DataType = DoubleType
 
@@ -108,40 +111,10 @@ object AbsMax {
       AbsMaxExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
 }
 
-/** int8_quantize(array<float>, s: double) → array<bigint>. */
-case class Int8QuantizeExpression(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = left.dataType match {
-    case ArrayType(_, containsNull) => ArrayType(LongType, containsNull)
-    case _ => ArrayType(LongType, containsNull = true)
-  }
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), DoubleType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"int8_quantize expects (array<float>, double), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, s: Any): Any =
-    QuantKernels.quantize(a.asInstanceOf[ArrayData], s.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, s) => s"graft.functions.QuantKernels.quantize($a, $s)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Int8QuantizeExpression =
-    copy(left = l, right = r)
-  override def prettyName: String = "int8_quantize"
-}
-
+/** int8_quantize(array<float>, s: double) → array<bigint>; null in, null
+  * out. */
 object Int8Quantize {
   def apply(emb: Column, s: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      Int8QuantizeExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(emb),
-        org.apache.spark.sql.graft.ColumnBridge.expression(s)))
+    GraftFunctions.kernel(QuantKernels, "quantize", ArrayType(LongType),
+      Seq(emb -> ArrayType(FloatType), s -> DoubleType))
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -15,8 +13,9 @@ import org.apache.spark.sql.types._
   *
   * Input: `array<bigint>` of feature hashes (e.g. `transform(tokens,
   * xxhash64)`), so the hashing itself stays in Spark's codegen'd builtins.
-  * This expression does only the 64-counter vote loop — O(64·n) integer ops
-  * per row, no allocation, whole-stage-codegen'd via a static call.
+  * This kernel does only the 64-counter vote loop — O(64·n) integer ops
+  * per row, no allocation, whole-stage-codegen'd via a static call
+  * ([[GraftFunctions.kernel]]).
   */
 object SimHash {
   def simhash64(hashes: Array[Long]): Long = {
@@ -51,32 +50,8 @@ object SimHash {
     simhash64(out.result())
   }
 
+  /** simhash64(array<bigint>) → bigint; null in, null out. */
   def apply(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      SimHashExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-}
-
-case class SimHashExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash64 expects array<bigint>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    SimHash.fromArrayData(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHash.fromArrayData($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashExpression =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash64"
+    GraftFunctions.kernel(this, "fromArrayData", LongType,
+      Seq(c -> ArrayType(LongType)))
 }

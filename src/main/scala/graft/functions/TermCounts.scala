@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * INSIDE the row against a document-sized map and exploding the already
   * aggregated map emits one row per DISTINCT term instead, deletes the
   * aggregate entirely, and keeps the whole pass in the scan stage's
-  * whole-stage codegen (static call, same pattern as [[SimHash]]).
+  * whole-stage codegen (a static call, [[GraftFunctions.kernel]]).
   *
   * Count is `bigint` for drop-in parity with the `count(1)` it replaces.
   * Null tokens are skipped (a null feature counts nothing, matching the
@@ -52,31 +50,9 @@ object TermCounts {
     new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
   }
 
+  /** term_counts(array<string>) → map<string, bigint>; null in, null out. */
   def apply(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      TermCountsExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-}
-
-case class TermCountsExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    MapType(StringType, LongType, valueContainsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"term_counts expects array<string>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    TermCounts.fromArrayData(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TermCounts.fromArrayData($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TermCountsExpression =
-    copy(child = newChild)
+    GraftFunctions.kernel(this, "fromArrayData",
+      MapType(StringType, LongType, valueContainsNull = false),
+      Seq(c -> ArrayType(StringType)))
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Codegen'd token-set hit counter (round 21):
+/** Codegen'd token-set hit counter:
   * `size(filter(toks, tk => tk.isInCollection(words)))` in one static call.
   *
   * The composite ran an interpreted lambda (an In over the word list) per
@@ -44,7 +44,9 @@ object TokenSetHits {
 }
 
 /** token_set_hits(array<string>, words) → int (−1 for a null array, the
-  * legacy size(null) the replaced composite produced). */
+  * legacy size(null) the composite produces). A class of its own, not a
+  * [[GraftFunctions.kernel]]: it holds the word set as a per-expression
+  * reference object that generated code reads. */
 case class TokenSetHitsExpression(child: Expression, words: Seq[String])
     extends UnaryExpression {
 

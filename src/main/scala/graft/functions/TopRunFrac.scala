@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -11,13 +9,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * the Gopher/MassiveText `top_ngram_frac` kernel of
   * [[graft.pipeline.TextQueries.repetitionFrame]].
   *
-  * Replaces the `aggregate(array_sort(g), ...)` longest-equal-run fold
-  * (round 20): higher-order functions evaluate their lambda per element
-  * through the interpreted expression walker, and this kernel runs L lambda
-  * steps per row over three gram windows — the dominant per-row cost of
-  * q_text_repetition. The value is order-independent (the longest equal
+  * The value is that of the `aggregate(array_sort(g), ...)` longest-equal-
+  * run fold (pinned in KernelEquivalenceSpec), which runs an interpreted
+  * lambda step per element. It is order-independent (the longest equal
   * run of ANY total order is the max multiplicity), so one hash-count pass
-  * inside whole-stage codegen computes it exactly:
+  * inside whole-stage codegen ([[GraftFunctions.kernel]]) computes it
+  * exactly:
   *
   *  - empty array → 0.0 (the old `when(size = 0)` guard, folded in);
   *  - null elements never equal anything (the old fold's null-comparison
@@ -47,32 +44,8 @@ object TopRunFrac {
     best.toDouble / n
   }
 
+  /** top_run_frac(array<string>) → double; null in, null out. */
   def apply(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      TopRunFracExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-}
-
-/** top_run_frac(array<string>) → double. */
-case class TopRunFracExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"top_run_frac expects array<string>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    TopRunFrac.fromArrayData(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TopRunFrac.fromArrayData($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TopRunFracExpression =
-    copy(child = newChild)
-  override def prettyName: String = "top_run_frac"
+    GraftFunctions.kernel(this, "fromArrayData", DoubleType,
+      Seq(c -> ArrayType(StringType)))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Codegen'd vector primitives for embedding similarity.
@@ -12,12 +9,16 @@ import org.apache.spark.sql.types._
   * The composable alternative (`aggregate(zip_with(a, b, _*_), 0d, _+_)`)
   * is semantically identical but runs interpreted lambda closures per
   * element — ~20× slower on the all-pairs similarity joins, where the dot
-  * product IS the workload (n² pairs × dim multiplies). These expressions
-  * evaluate as a single static-call tight loop inside whole-stage codegen,
-  * with the same index-order double arithmetic (results are bit-identical
-  * to the HOF formulation, so DuckDB oracles are unaffected).
+  * product IS the workload (n² pairs × dim multiplies). These kernels
+  * evaluate as a single static-call tight loop inside whole-stage codegen
+  * ([[GraftFunctions.kernel]]), with the same index-order double
+  * arithmetic (results are bit-identical to the HOF formulation, so DuckDB
+  * oracles are unaffected). A null argument gives a null result.
   */
 object VectorOps {
+  private val Floats = ArrayType(FloatType)
+  private val Doubles = ArrayType(DoubleType)
+  private val Longs = ArrayType(LongType)
 
   /** Σ aᵢ·bᵢ over float arrays, accumulated in index order as double. */
   def dotF(a: ArrayData, b: ArrayData): Double = {
@@ -88,19 +89,20 @@ object VectorOps {
   }
 
   def jaccard(a: Column, b: Column): Column =
-    ColumnBridge.column(JaccardSorted(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    GraftFunctions.kernel(this, "jaccardSorted", DoubleType,
+      Seq(a -> Longs, b -> Longs))
 
   def dot(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductF(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    GraftFunctions.kernel(this, "dotF", DoubleType, Seq(a -> Floats, b -> Floats))
 
   /** Σ aᵢ·bᵢ over long arrays, accumulated as long — EXACT integer math
     * (the primitive a quantized-embedding tier scores with: int8 values
     * bound each product by 127², so a 2⁴⁸-dim vector still can't overflow).
     * Guarded with `Math.multiplyExact`/`addExact` (JIT intrinsics, no cost
     * on the non-overflow path) so a caller that feeds unquantized longs
-    * fails loudly with ArithmeticException instead of silently wrapping. */
+    * fails loudly with ArithmeticException instead of silently wrapping.
+    * Not registered as a SQL function: its only caller is the int8 ANN
+    * tier, whose quantizer-bounded values never reach the overflow throw. */
   def dotLL(a: ArrayData, b: ArrayData): Long = {
     val n = math.min(a.numElements(), b.numElements())
     var acc = 0L
@@ -113,8 +115,7 @@ object VectorOps {
   }
 
   def dotLong(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductL(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    GraftFunctions.kernel(this, "dotLL", LongType, Seq(a -> Longs, b -> Longs))
 
   /** Σ aᵢ·bᵢ over double arrays, accumulated in index order as double —
     * same deterministic fold as [[dotF]], for vectors that are already
@@ -131,145 +132,10 @@ object VectorOps {
   }
 
   def dotDouble(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductD(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    GraftFunctions.kernel(this, "dotDbl", DoubleType,
+      Seq(a -> Doubles, b -> Doubles))
 
   def minhashSignature(hashes: Column): Column =
-    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(hashes)))
-}
-
-/** dot(array<float>, array<float>) → double. */
-case class DotProductF(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dot expects (array<float>, array<float>), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dotF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.dotF($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductF =
-    copy(left = l, right = r)
-  override def prettyName: String = "dot"
-}
-
-/** dot(array<double>, array<double>) → double. */
-case class DotProductD(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dot_double expects (array<double>, array<double>), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dotDbl(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.dotDbl($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductD =
-    copy(left = l, right = r)
-  override def prettyName: String = "dot_double"
-}
-
-/** dot_long(array<bigint>, array<bigint>) → bigint (exact; throws
-  * ArithmeticException on 64-bit overflow — intended for quantized-domain
-  * vectors, e.g. int8 embeddings, where products are bounded by 127²).
-  * NOT registered in the SQL function registry (GraftExtensions): the only
-  * caller is the int8 ANN tier, whose values are quantizer-bounded, so no
-  * user SQL or fuzz production can reach the overflow throw. Registering
-  * it for SQL would require documenting the exception in the registry
-  * help text first. */
-case class DotProductL(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dot_long expects (array<bigint>, array<bigint>), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dotLL(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.dotLL($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductL =
-    copy(left = l, right = r)
-  override def prettyName: String = "dot_long"
-}
-
-/** jaccard_sorted(array<bigint>, array<bigint>) → double. */
-case class JaccardSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"jaccard_sorted expects (array<bigint>, array<bigint>), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.jaccardSorted($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardSorted =
-    copy(left = l, right = r)
-  override def prettyName: String = "jaccard_sorted"
-}
-
-/** minhash32(array<bigint>) → array<bigint> (32 lanes). */
-case class MinHashSignature(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash32 expects array<bigint>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    VectorOps.minhash32(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VectorOps.minhash32($c)")
-
-  override protected def withNewChildInternal(c: Expression): MinHashSignature =
-    copy(child = c)
-  override def prettyName: String = "minhash32"
+    GraftFunctions.kernel(this, "minhash32",
+      ArrayType(LongType, containsNull = false), Seq(hashes -> Longs))
 }

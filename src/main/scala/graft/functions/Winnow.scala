@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,7 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * makes the set a sound local-similarity index (overlap detection without
   * positions, robust to insertions far from the match).
   *
-  * Single codegen'd pass, O(n) via a monotonic-deque window minimum; the
+  * Single codegen'd pass ([[GraftFunctions.kernel]]), O(n) via a
+  * monotonic-deque window minimum; the
   * output is the SORTED distinct fingerprint array, a canonical form both
   * engines can produce independently (selection ties pick identical VALUE
   * sets whatever position rule is used, so the value-set output needs no
@@ -86,32 +85,9 @@ object Winnow {
     new GenericArrayData(out)
   }
 
+  /** winnow(string) → array<bigint>: sorted distinct winnowing
+    * fingerprints; null in, null out. */
   def apply(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      WinnowExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-}
-
-/** winnow(string) → array<bigint>: sorted distinct winnowing fingerprints. */
-case class WinnowExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"winnow expects string, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    Winnow.fingerprints(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Winnow.fingerprints($c)")
-
-  override protected def withNewChildInternal(c: Expression): WinnowExpression =
-    copy(child = c)
-  override def prettyName: String = "winnow"
+    GraftFunctions.kernel(this, "fingerprints",
+      ArrayType(LongType, containsNull = false), Seq(c -> StringType))
 }

@@ -194,7 +194,7 @@ object DedupQueries {
     * stream probes ([[graft.streaming.DocumentsStreaming]]) all derive
     * their signatures here. Pure projections, so legal on a STREAMING
     * frame. Shingle hashes come from shingled(); one codegen'd loop
-    * derives all 32 lanes (graft.functions.MinHashSignature) — the
+    * derives all 32 lanes (graft.functions.VectorOps.minhash32) — the
     * nested-HOF formulation ran interpreted closures per (shingle, lane)
     * pair and dominated runtime. */
   private[graft] def signatures(docs: DataFrame): DataFrame =

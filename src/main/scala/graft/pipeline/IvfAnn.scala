@@ -79,7 +79,7 @@ object IvfAnn {
     emb.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("embedding"),
         graft.functions.ArgmaxSim(col("embedding"), col("cents"),
-          roundTo6 = false).as("best"))
+          doubleElems = false, roundTo6 = false).as("best"))
       .select(col("vec_id"), col("embedding"),
               col("best.id").as("cell_id"))
   }

@@ -26,21 +26,22 @@ import graft.operators.{t, QueryFn}
   */
 object SimilarityQueries {
 
-  // Codegen'd single-call dot product (graft.functions.DotProductF): same
-  // index-order double accumulation as the HOF formulation (bit-identical
-  // results, DuckDB oracle unaffected), ~20x faster on all-pairs joins.
+  // Codegen'd single-call dot product (graft.functions.VectorOps.dotF):
+  // same index-order double accumulation as the HOF formulation
+  // (bit-identical results, DuckDB oracle unaffected), ~20x faster on
+  // all-pairs joins.
   private def dotD(a: Column, b: Column): Column =
     graft.functions.VectorOps.dot(a, b)
 
   private[pipeline] def normD(a: Column): Column =
     sqrt(graft.functions.VectorOps.dot(a, a))
 
-  /** 8-bit bucket signature of an embedding under hash table `tbl` — the
-    * codegen'd [[graft.functions.HyperplaneLsh]] expression (deterministic
-    * ±1 hyperplanes from integer mixing of (table, plane, dim); bit-compatible
-    * with the interpreted-HOF formulation it replaced, ~20× cheaper/row). */
-  private def lshBucket(emb: Column, tbl: Column): Column =
-    graft.functions.HyperplaneLsh(emb, tbl)
+  /** 8-bit bucket signature of a float embedding under hash table `tbl` —
+    * the codegen'd [[graft.functions.HyperplaneLsh]] kernel (deterministic
+    * ±1 hyperplanes from integer mixing of (table, plane, dim);
+    * bit-compatible with the interpreted-HOF formulation, ~20× cheaper/row). */
+  private def lshBucket(emb: Column, tbl: Int): Column =
+    graft.functions.HyperplaneLsh(emb, tbl, isFloat = true)
 
   private def withNorm(e: DataFrame): DataFrame =
     e.select(col("vec_id"), col("embedding"), normD(col("embedding")).as("norm"))
@@ -105,13 +106,16 @@ object SimilarityQueries {
 
   /** Recall of `got` against `truth` (both carrying `(query_id, vec_id)`,
     * each pair at most once): the fraction of truth pairs `got` also
-    * returns, 1.0 when the truth is empty (`got` is then not evaluated). */
+    * returns, 1.0 when the truth is empty (`got` is then not evaluated).
+    * The truth is evaluated once: its pairs (at most k per query) are
+    * collected, counted and joined as a local relation. */
   def recall(got: => DataFrame, truth: DataFrame): Double = {
     val pair = Seq("query_id", "vec_id")
-    val nTruth = truth.count()
-    if (nTruth == 0) 1.0
+    val t = truth.select(pair.map(col): _*)
+    val rows = t.collect()
+    if (rows.isEmpty) 1.0
     else got.select(pair.map(col): _*)
-      .join(truth.select(pair.map(col): _*), pair).count().toDouble / nTruth
+      .join(local(t, rows), pair).count().toDouble / rows.length
   }
 
   /** Exact brute-force cosine top-5 for query vectors vec_id < 10. */
@@ -189,7 +193,7 @@ object SimilarityQueries {
     // would drop the codegen'd signature expression back to interpreted eval)
     val sigs = e.select(col("vec_id"), col("embedding"), col("norm"),
       posexplode(array((0 until tables).map(i =>
-        lshBucket(col("embedding"), lit(i))): _*)))
+        lshBucket(col("embedding"), i)): _*)))
       .withColumnRenamed("pos", "tbl")
       .withColumnRenamed("col", "bucket")
     // query-side probe set: own bucket, the single-bit flips, then the

@@ -107,7 +107,8 @@ object DocumentsStreaming {
       .withColumn("norm", sqrt(VectorOps.dotDouble(col("emb"), col("emb"))))
       .where(col("norm") > 0)
       .withColumn("best",
-        graft.functions.ArgmaxSim(col("emb"), centArr, roundTo6 = true))
+        graft.functions.ArgmaxSim(col("emb"), centArr,
+          doubleElems = true, roundTo6 = true))
       .select(col("vec_id"), col("best.id").as("cluster_id"),
               col("best.sim").as("cosine"))
   }

@@ -63,8 +63,8 @@ class ArgmaxSimSpec extends SparkSpec {
   test("ArgmaxSim matches array_max(transform(...)) — float, unrounded") {
     val df = fixture("float")
     val got = df.select(
-      graft.functions.ArgmaxSim(col("emb"), col("cents"), roundTo6 = false)
-        .as("nw"),
+      graft.functions.ArgmaxSim(col("emb"), col("cents"),
+        doubleElems = false, roundTo6 = false).as("nw"),
       oldArgmax(col("emb"), col("cents"), dbl = false, rnd = false)
         .getField("sim").as("old_sim"),
       oldArgmax(col("emb"), col("cents"), dbl = false, rnd = false)
@@ -79,8 +79,8 @@ class ArgmaxSimSpec extends SparkSpec {
   test("ArgmaxSim matches array_max(transform(...)) — double, round6") {
     val df = fixture("double")
     val got = df.select(
-      graft.functions.ArgmaxSim(col("emb"), col("cents"), roundTo6 = true)
-        .as("nw"),
+      graft.functions.ArgmaxSim(col("emb"), col("cents"),
+        doubleElems = true, roundTo6 = true).as("nw"),
       oldArgmax(col("emb"), col("cents"), dbl = true, rnd = true)
         .getField("sim").as("old_sim"),
       oldArgmax(col("emb"), col("cents"), dbl = true, rnd = true)
@@ -99,7 +99,8 @@ class ArgmaxSimSpec extends SparkSpec {
         expr("CAST(array() AS array<struct<id: bigint, " +
           "centroid: array<float>, cnorm: double>>)"))
     val r1 = empty.select(
-      graft.functions.ArgmaxSim(col("emb"), col("cents"), roundTo6 = false))
+      graft.functions.ArgmaxSim(col("emb"), col("cents"),
+        doubleElems = false, roundTo6 = false))
       .collect()
     assert(r1.head.isNullAt(0))
     val nul = Seq(Tuple1(Seq(1.0f, 2.0f))).toDF("emb")
@@ -107,7 +108,8 @@ class ArgmaxSimSpec extends SparkSpec {
         expr("CAST(NULL AS array<struct<id: bigint, " +
           "centroid: array<float>, cnorm: double>>)"))
     val r2 = nul.select(
-      graft.functions.ArgmaxSim(col("emb"), col("cents"), roundTo6 = false))
+      graft.functions.ArgmaxSim(col("emb"), col("cents"),
+        doubleElems = false, roundTo6 = false))
       .collect()
     assert(r2.head.isNullAt(0))
   }

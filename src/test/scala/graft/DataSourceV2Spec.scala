@@ -4,41 +4,6 @@ import org.apache.spark.sql.functions._
 
 class DataSourceV2Spec extends SparkSpec {
 
-  private val fmt = "graft.sources.RangeDataSource"
-
-  test("reads the synthesized range with configured parallelism") {
-    val df = spark.read.format(fmt)
-      .option("n", "1000").option("partitions", "8").load()
-    assert(df.count() == 1000)
-    assert(df.rdd.getNumPartitions == 8)
-    assert(df.filter(col("tag") === "even").count() == 500)
-  }
-
-  test("range predicates are pushed into the source, residuals stay in Spark") {
-    val df = spark.read.format(fmt).option("n", "1000").load()
-      .filter(col("id") >= 100 && col("id") < 200 && col("tag") === "odd")
-    assert(df.count() == 50)
-    val scan = df.queryExecution.executedPlan.toString
-    // id bounds consumed by the source (the scan description reports the
-    // shrunken range), tag filter evaluated by Spark above it.
-    assert(scan.contains("graft_range[100,200)"), s"id range not pushed:\n$scan")
-    assert(scan.contains("Filter (tag"), s"tag residual missing:\n$scan")
-    assert(!scan.contains("Filter (id"), s"id filter should be consumed:\n$scan")
-    val ids = df.agg(min("id"), max("id")).head()
-    assert(ids.getLong(0) == 101 && ids.getLong(1) == 199)
-  }
-
-  test("joins and aggregates compose over the custom source") {
-    val df = spark.read.format(fmt).option("n", "100").load()
-    val n = Tables.table(spark, sfDir, "nation")
-    val joined = df.join(n, df("id") === n("n_nationkey"))
-    assert(joined.count() == 25)
-    val agg = df.groupBy("tag").agg(sum("id").as("s"))
-      .orderBy("tag").collect()
-    assert(agg.map(_.getString(0)).toSeq == Seq("even", "odd"))
-    assert(agg.map(_.getLong(1)).sum == (0L until 100).sum)
-  }
-
   // ---- AllTypesDataSource: the planner-test external source ----
   // (reference ext-data-source/test/.../AllTypesDataSource.java; plan-shape
   // parity lives in PlannerGoldenSpec's data-source-tables.test — these pin

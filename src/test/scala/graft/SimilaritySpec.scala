@@ -104,6 +104,23 @@ class SimilaritySpec extends SparkSpec {
     assert(neighbors.contains(9001L),
       s"planted near-dup not retrieved: $neighbors")
   }
+
+  test("recall evaluates its truth frame once, and never `got` on an empty truth") {
+    import graft.pipeline.SimilarityQueries.recall
+    // one increment per truth row each time the truth frame is computed
+    val evals = spark.sparkContext.longAccumulator("truth rows evaluated")
+    val counted = udf((_: Long) => { evals.add(1); true }).asNondeterministic()
+    val truth = spark.range(0, 4, 1, 1)
+      .select((col("id") % 2).as("query_id"), col("id").as("vec_id"))
+      .filter(counted(col("vec_id")))
+    val got = spark.range(0, 6, 2, 1)
+      .select((col("id") % 2).as("query_id"), col("id").as("vec_id"))
+    assert(recall(got, truth) == 0.5) // (0, 0) and (0, 2) of 4 truth pairs
+    assert(evals.value == 4, s"truth evaluated ${evals.value / 4.0} times")
+    var gotEvaluated = false
+    val empty = recall({ gotEvaluated = true; got }, truth.filter(lit(false)))
+    assert(empty == 1.0 && !gotEvaluated)
+  }
 }
 
 object SimilarityTestHarness {
