@@ -61,7 +61,7 @@ object AnnScale {
     amplified(spark, sfDir, factor)
       .repartition(math.max(32, factor / 8))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    Tables.readParquet(spark, s"$dir/embeddings.parquet")
   }
 
   def main(args: Array[String]): Unit =

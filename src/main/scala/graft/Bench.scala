@@ -39,15 +39,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * counted with the next one. This host's wall clock drifts 1.3–2.6× within a session,
   * so structural claims ("one exchange removed") are checked with these
   * load-invariant counts against the before and after classes. The whole
-  * list runs once uncounted first; warming the list rather than each query
-  * right before its count keeps generated-class cache thrash between
-  * queries visible in `compiles:`. A closing `[total]` line gives the
-  * warm-up pass's compiles, the summed counts and Metaspace in use.
-  * Because of that warm-up, the lifecycle entries (`q_dedup_minhash_*`,
-  * `q_ann_ivf_*`) are counted against an artifact that is already in
-  * sync: their counts cover the no-op sync and the probe, never a build,
-  * delta sync or compaction, so a change to those paths does not show
-  * here (count a cold lifecycle with a listener of its own).
+  * list runs once first (the warm-up pass); warming the list rather than
+  * each query right before its count keeps generated-class cache thrash
+  * between queries visible in `compiles:`. The warm-up pass is counted the
+  * same way, one job group per query, and printed as `cold jobs:` and
+  * `cold stages:`: a lifecycle entry (`q_dedup_minhash_*`, `q_ann_ivf_*`)
+  * builds, syncs or compacts its artifact there, while its warm count
+  * covers only the no-op sync and the probe. The artifacts live under
+  * `java.io.tmpdir` and outlive the JVM, so the cold counts include the
+  * build only on a fresh `-Djava.io.tmpdir`. A closing `[total]` line gives
+  * the warm-up pass's compiles, the summed counts and Metaspace in use.
   *
   * `plan` — `explain("formatted")` per query: to stdout, or with
   * `<outDir> <suffix>` to `<outDir>/<query>_<suffix>.txt` (the evidence
@@ -267,31 +268,35 @@ object Bench {
               done.stageInfo.taskMetrics.shuffleReadMetrics.recordsRead)
           }
       })
+    // runs one query in a job group of its own; (jobs, stages, tasks, records)
+    def counted(name: String, pass: String): (Int, Int, Int, Long) = {
+      jobs.set(0); stages.set(0); tasks.set(0); recs.set(0L)
+      groupStages.clear()
+      group.set(s"graft-bench-counts-$pass-$name")
+      sc.setJobGroup(group.get, name)
+      try noop(query(name)) finally sc.clearJobGroup()
+      org.apache.spark.sql.graft.ListenerBusBridge.drain(sc)
+      (jobs.get(), stages.get(), tasks.get(), recs.get())
+    }
     val compilations = CodegenMetrics.METRIC_COMPILATION_TIME
     val classLoading = ManagementFactory.getClassLoadingMXBean
     val warm0 = compilations.getCount
-    names.foreach(n => noop(query(n)))
+    val cold = names.map(n => n -> counted(n, "cold")).toMap
     val warmCompiles = compilations.getCount - warm0
-    org.apache.spark.sql.graft.ListenerBusBridge.drain(sc)
     var totalCompiles = 0L
     var totalClasses = 0L
     for (name <- names) {
-      jobs.set(0); stages.set(0); tasks.set(0); recs.set(0L)
-      groupStages.clear()
-      group.set(s"graft-bench-counts-$name")
-      sc.setJobGroup(group.get, name)
       val compiles0 = compilations.getCount
       val classes0 = classLoading.getTotalLoadedClassCount
-      noop(query(name))
+      val (j, st, t, r) = counted(name, "warm")
       val compiles = compilations.getCount - compiles0
       val classes = classLoading.getTotalLoadedClassCount - classes0
       totalCompiles += compiles
       totalClasses += classes
-      sc.clearJobGroup()
-      org.apache.spark.sql.graft.ListenerBusBridge.drain(sc)
-      println(s"[$name] jobs: ${jobs.get()} stages: ${stages.get()} " +
-        s"tasks: ${tasks.get()} recordsRead: ${recs.get()} " +
-        s"compiles: $compiles classes: $classes")
+      val (coldJobs, coldStages, _, _) = cold(name)
+      println(s"[$name] jobs: $j stages: $st tasks: $t recordsRead: $r " +
+        s"compiles: $compiles classes: $classes " +
+        s"cold jobs: $coldJobs cold stages: $coldStages")
     }
     val metaspaceMb = ManagementFactory.getMemoryPoolMXBeans.asScala
       .find(_.getName == "Metaspace")

@@ -43,8 +43,8 @@ object DeltaBench {
     val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val docs0 = spark.read.parquet(s"$srcDir/documents.parquet")
-    val emb0 = spark.read.parquet(s"$srcDir/embeddings.parquet")
+    val docs0 = Tables.readParquet(spark, s"$srcDir/documents.parquet")
+    val emb0 = Tables.readParquet(spark, s"$srcDir/embeddings.parquet")
 
     /** One disjoint-universe copy: ids shifted, text perturbed per copy so
       * content stays organic (no cross-copy exact duplicates). */
@@ -83,7 +83,7 @@ object DeltaBench {
     // ---- initial corpus + initial builds --------------------------------
     addBatch("documents", union((0 until initialFactor).map(docCopy)), "init")
     addBatch("embeddings", union((0 until initialFactor).map(embCopy)), "init")
-    val nDocsInit = spark.read.parquet(s"$workDir/documents.parquet").count()
+    val nDocsInit = Tables.readParquet(spark, s"$workDir/documents.parquet").count()
 
     val mhInit = timeSec(pipeline.MinhashIndex.ensureIncremental(spark, workDir))
     val ivfInit = timeSec(
@@ -156,7 +156,7 @@ object DeltaBench {
         org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
     deleteTree(pipeline.DeltaIndex.root(workDir, "documents", "graft_minhash_inc_v1"))
     deleteTree(pipeline.DeltaIndex.root(workDir, "embeddings", pipeline.IvfAnn.IncPrefix))
-    val nDocsAll = spark.read.parquet(s"$workDir/documents.parquet").count()
+    val nDocsAll = Tables.readParquet(spark, s"$workDir/documents.parquet").count()
     val mhFull = timeSec(pipeline.MinhashIndex.ensureIncremental(spark, workDir))
     val ivfFull = timeSec(
       pipeline.IvfAnn.ensureIncremental(spark, workDir, nlist = 64))

@@ -154,7 +154,7 @@ object LifecycleFuzz {
       val got = pipeline.MinhashIndex.pairsIndexedMulti(spark, dirs)
         .as[(Long, Long, Double)].collect().sorted.toSeq
       val want = pipeline.DedupQueries
-        .minhashPairs(spark.read.parquet(table.toString))
+        .minhashPairs(Tables.readParquet(spark, table.toString))
         .as[(Long, Long, Double)].collect().sorted.toSeq
       check(got == want, seed,
         s"$tag: probe=${got.size} pairs, inline=${want.size}; " +
@@ -257,9 +257,9 @@ object LifecycleFuzz {
       * (2) the multi-batch probe answers row-for-row like a single-dir
       *     index built from that combined assignment. */
     def checkArtifact(tag: String, c: String, i: Seq[String]): Unit = {
-      val corpus = spark.read.parquet(table.toString)
-      val centroids = spark.read.parquet(c)
-      val unioned = i.map(spark.read.parquet(_)).reduce(_ unionByName _)
+      val corpus = Tables.readParquet(spark, table.toString)
+      val centroids = Tables.readParquet(spark, c)
+      val unioned = i.map(Tables.readParquet(spark, _)).reduce(_ unionByName _)
         .select(col("vec_id"), col("cell_id").cast("long"))
         .as[(Long, Long)].collect().sorted.toSeq
       val combined = pipeline.IvfAnn.assignCells(corpus, centroids)

@@ -92,7 +92,7 @@ object ScaleSmoke {
     if (only.forall(_.contains("lzo"))) {
       import org.apache.hadoop.fs.Path
       val lzoDir = s"$out/lineitem_lzo"
-      val li = spark.read.parquet(s"$out/lineitem.parquet")
+      val li = Tables.readParquet(spark, s"$out/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_quantity")
       val serConf = new org.apache.spark.util.SerializableConfiguration(
         spark.sessionState.newHadoopConf())

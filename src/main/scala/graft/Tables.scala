@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Test-corpus table access.
   *
@@ -24,16 +30,16 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     GraftFunctions.registered(spark)
     // Memoized per (session, dir, name) — a PLAN handle, not data: every
-    // action still scans the parquet. `spark.read.parquet` pays schema
-    // inference (footer read) + a fresh InMemoryFileIndex listing on every
-    // call, and the registry's 175 queries × 3 bench passes re-derive the
-    // same ten immutable corpus tables hundreds of times per run — pure
-    // fixed overhead, same rationale as the registerViews cache below.
+    // action still scans the parquet. Opening a table ([[readParquet]])
+    // reads one footer and lists the table's files on every call, and the
+    // registry's 175 queries × 3 bench passes re-derive the same ten
+    // immutable corpus tables hundreds of times per run — pure fixed
+    // overhead, same rationale as the registerViews cache below.
     // Correctness note: the cached frame freezes the FILE LISTING, which is
     // exactly right for the driver-contract corpora (immutable per sfDir);
     // everything that mutates and re-reads its own parquet in one session
-    // (DeltaIndex batches, fuzzers, staging dirs) goes through
-    // spark.read.parquet directly, never through here.
+    // (DeltaIndex batches, fuzzers, staging dirs) calls readParquet
+    // directly, never through here.
     tableCache.computeIfAbsent((spark, dir, name), _ => {
       // Retention fence (round 21): entries are keyed by SparkSession and a
       // long-lived multi-session service would otherwise pin every stopped
@@ -48,9 +54,76 @@ object Tables {
         val path = s"$dir/$name.parquet"
         if (new java.io.File(path, BucketMarker).isFile)
           bucketedTable(spark, path, name)
-        else spark.read.parquet(path)
+        else readParquet(spark, path)
       }
     })
+  }
+
+  /** The one way the engine opens parquet: `spark.read.parquet(paths*)`
+    * without the Spark job its schema inference runs. Spark infers a
+    * parquet schema through `SchemaMergeUtils.mergeSchemasInParallel`,
+    * which runs `parallelize(...).collect()` even for the one footer it
+    * reads, so a fresh session paid ten one-task jobs just to open the
+    * corpus, and every artifact sync, probe and compaction paid more.
+    *
+    * This reads that same footer on the driver: the file Spark's
+    * `ParquetUtils.inferSchema` picks with mergeSchema off
+    * (`_common_metadata`, else `_metadata`, else the first data file in
+    * path order), from the same listing (names starting `_` or `.` are
+    * skipped unless they hold a `=` or name a summary file). It is
+    * converted by Spark's own `ParquetFileFormat.readSchemaFromFooter`,
+    * with the converter flags Spark's inference uses, and handed to the
+    * reader as its schema. Partition columns (IVF's `cell_id`) are still
+    * discovered from the directory names and appended last, so the
+    * relation is the one `spark.read.parquet` builds.
+    *
+    * Spark's own read keeps the cases only it decides: mergeSchema on
+    * (every footer is merged), and no readable footer — a missing path, a
+    * directory with no data file or a corrupt footer raise Spark's own
+    * errors. ParquetOpenSpec pins both the equality and the zero jobs. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame = {
+    val schema =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else footerSchema(spark, paths)
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
+  }
+
+  private def footerSchema(spark: SparkSession,
+                           paths: Seq[String]): Option[StructType] = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    // Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName),
+    // applied to every listed name, never to a root directory's own name
+    def hidden(name: String): Boolean =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+        !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+    def leaves(fs: FileSystem, path: Path): Seq[FileStatus] =
+      fs.listStatus(path).toSeq.filterNot(s => hidden(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) leaves(fs, s.getPath) else Seq(s))
+    val files = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoopConf)
+      Option(fs.globStatus(path)).toSeq.flatten.flatMap(r => leaves(fs, r.getPath))
+    }.sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val pick = named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find(f => !Set("_common_metadata", "_metadata")(f.getPath.getName)))
+    pick.flatMap { f =>
+      val conf = spark.sessionState.conf
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+      // the exceptions Spark's footer read turns into its own error (or,
+      // under ignoreCorruptFiles, skips): Spark's read then decides
+      try Some(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(f.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)),
+        converter))
+      catch { case _: RuntimeException | _: java.io.IOException => None }
+    }
   }
 
   private val tableCache =
@@ -100,7 +173,7 @@ object Tables {
         val n = props.getProperty("buckets").toInt
         val sort = props.getProperty("sort", key)
         require(key != null && n > 0, s"malformed $BucketMarker in $path")
-        val ddl = spark.read.parquet(abs).schema.toDDL
+        val ddl = readParquet(spark, abs).schema.toDDL
         spark.sql(s"""CREATE TABLE `$tbl` ($ddl) USING parquet
                      |CLUSTERED BY ($key) SORTED BY ($sort) INTO $n BUCKETS
                      |LOCATION '$abs'""".stripMargin)
@@ -121,7 +194,7 @@ object Tables {
     * `window()`, watermarking) all assume the normalized type. */
   private def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventsTs(spark.read.parquet(s"$dir/events.parquet"))
+    normalizeEventsTs(readParquet(spark, s"$dir/events.parquet"))
   }
 
   /** Normalize an events frame's `ts` to µs TimestampType, whatever the

@@ -5,6 +5,7 @@ import java.nio.file.{FileSystemException, Files, Path, Paths, StandardCopyOptio
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.Tables
 
 /** The one lifecycle for standing on-disk artifacts (the MinHash signature
   * table, the IVF ANN index): the artifact is partitioned by INGEST BATCH,
@@ -27,7 +28,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *    rebuild from scratch); no change → no build at all.
   *  - Probe = UNION of batch partitions: readers resolve the live batch
   *    dirs through the `_manifest.txt` snapshot pointer ([[liveBatches]])
-  *    and read `spark.read.parquet(batches.map(_ + "/payload.parquet"))`.
+  *    and read every batch's `payload.parquet` in one `Tables.readParquet`.
   *  - Every batch — a sync's delta, a [[compact]] rebase, a [[retrain]] —
   *    is published by [[publish]]: built in a private staging dir beside
   *    its target, marker-stamped, and moved into place by one
@@ -319,7 +320,7 @@ object DeltaIndex {
         f"batch_${live.size}%06d_${contentKey(fresh.map(_._2))}")
       val initial = live.headOption
       publish(target) { staging =>
-        build(spark.read.parquet(fresh.map(_._1.toString): _*), staging, initial)
+        build(Tables.readParquet(spark, fresh.map(_._1.toString): _*), staging, initial)
         Files.write(Paths.get(staging, "_covered.txt"),
           fresh.map(_._2).mkString("\n").getBytes("UTF-8"))
       }
@@ -455,7 +456,7 @@ object DeltaIndex {
     val keys = current.map(_._2)
     val target = root.resolve(s"batch_000000_${contentKey("trained-full" +: keys)}")
     publish(target) { staging =>
-      build(spark.read.parquet(current.map(_._1.toString): _*), staging)
+      build(Tables.readParquet(spark, current.map(_._1.toString): _*), staging)
       Files.write(Paths.get(staging, "_covered.txt"),
         keys.mkString("\n").getBytes("UTF-8"))
       writeTrained(staging, keys.toSet)
@@ -484,7 +485,7 @@ object DeltaIndex {
     * Returns the private source dir. */
   def rehearse(spark: SparkSession, dir: String, table: String, prefix: String,
                standing: Column)(sync: String => Unit): String = {
-    val docs = graft.Tables.table(spark, dir, table)
+    val docs = Tables.table(spark, dir, table)
     val src = rehearsalDir(dir, table, prefix)
     val tableDir = src.resolve(s"$table.parquet")
     for ((slice, i) <- Seq(standing, !standing).zipWithIndex) {

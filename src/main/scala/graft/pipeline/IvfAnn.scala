@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.functions.VectorOps
 import graft.operators.{t, QueryFn}
 import SimilarityQueries.{cosine, cosineTopK, local, normD, queryFrame, rankTopK}
@@ -179,7 +180,7 @@ object IvfAnn {
   def buildIndex(emb: DataFrame, nlist: Int, indexDir: String): Unit = {
     val trained = trainCentroids(emb, nlist)
     trained.write.mode("overwrite").parquet(s"$indexDir/centroids.parquet")
-    val centroids = emb.sparkSession.read.parquet(s"$indexDir/centroids.parquet")
+    val centroids = Tables.readParquet(emb.sparkSession, s"$indexDir/centroids.parquet")
     writeCells(assignCells(emb, centroids), s"$indexDir/index.parquet")
   }
 
@@ -207,7 +208,7 @@ object IvfAnn {
     * [[ensureIncrementalGuarded]] answers with a measured-recall retrain. */
   def buildDeltaIndex(newEmb: DataFrame, centroidsPath: String,
                       stagingDir: String): Unit = {
-    val centroids = newEmb.sparkSession.read.parquet(centroidsPath)
+    val centroids = Tables.readParquet(newEmb.sparkSession, centroidsPath)
     writeCells(assignCells(newEmb, centroids), s"$stagingDir/index.parquet")
   }
 
@@ -225,13 +226,13 @@ object IvfAnn {
   def searchIndexedMulti(spark: org.apache.spark.sql.SparkSession,
                          centroidsPath: String, indexPaths: Seq[String],
                          queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val centroids = spark.read.parquet(centroidsPath)
+    val centroids = Tables.readParquet(spark, centroidsPath)
     // One read PER batch root, then a union: a single multi-root read of
     // cell_id-partitioned datasets makes Spark hunt for a common partition
     // base across the batch dirs and throw CONFLICTING_DIRECTORY_STRUCTURES.
     // Per-root discovery keeps each batch's cell_id pruning intact, and
     // UNION is exactly the incremental artifact's semantics.
-    val index = indexPaths.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    val index = indexPaths.map(Tables.readParquet(spark, _)).reduce(_ unionByName _)
     probeTopK(index, centroids, queries, k, nprobe)
   }
 
@@ -305,7 +306,7 @@ object IvfAnn {
   def recallOfIndex(spark: org.apache.spark.sql.SparkSession,
                     centroidsPath: String, indexPaths: Seq[String],
                     k: Int, nprobe: Int, sampleN: Int): Double = {
-    val index = indexPaths.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    val index = indexPaths.map(Tables.readParquet(spark, _)).reduce(_ unionByName _)
     // Materialize the sampled queries as a LOCAL relation: the frame is
     // referenced twice (brute truth + artifact probe) and collapsing it to
     // sampleN in-memory rows makes both consumers read the identical set
@@ -385,7 +386,7 @@ object IvfAnn {
                              root: java.nio.file.Path,
                              retainMillis: Long): Seq[String] =
     DeltaIndex.compact(spark, root, retainMillis) { (bs, staging) =>
-      val centroids = spark.read.parquet(s"${bs.head}/centroids.parquet")
+      val centroids = Tables.readParquet(spark, s"${bs.head}/centroids.parquet")
       centroids.write.mode("overwrite").parquet(s"$staging/centroids.parquet")
       // The replacement batch COVERS the rebased union but its centroids
       // were TRAINED on whatever the old initial batch trained on — carry
@@ -393,7 +394,7 @@ object IvfAnn {
       // the compacted batch as full-trained and freeze post-compaction
       // drift forever (the VERDICT r19 lead finding).
       DeltaIndex.writeTrained(staging, DeltaIndex.trainedKeysOf(bs.head))
-      writeCells(bs.map(b => spark.read.parquet(s"$b/index.parquet"))
+      writeCells(bs.map(b => Tables.readParquet(spark, s"$b/index.parquet"))
         .reduce(_ unionByName _), s"$staging/index.parquet")
     }.map(_.toString)
 

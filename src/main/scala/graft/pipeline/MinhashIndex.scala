@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.operators.{t, QueryFn}
 
 /** Standing MinHash signature artifact — the scale path for repeated
@@ -71,7 +72,7 @@ object MinhashIndex {
 
   private def read(spark: SparkSession, dirs: Seq[String],
                    rel: String): DataFrame =
-    spark.read.parquet(dirs.map(d => s"$d/$rel"): _*)
+    Tables.readParquet(spark, dirs.map(d => s"$d/$rel"): _*)
 
   /** Writes one batch; `members` is evaluated after the signatures are
     * written (the organic build derives it from them). */

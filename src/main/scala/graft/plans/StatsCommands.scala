@@ -163,7 +163,7 @@ case class GraftShowColumnStatsCommand(ident: Seq[String])
       val av = fixed.getOrElse(
         s.flatMap(_.avgLen).map(_.toDouble).getOrElse(-1d))
       Row(f.name,
-        graft.testing.GoldenTestRunner.typeName(f.dataType).toUpperCase,
+        StatsCommands.typeName(f.dataType).toUpperCase,
         ndv, nulls, mx, av)
     }
   }
@@ -191,7 +191,7 @@ case class GraftShowCreateTableCommand(ident: Seq[String])
     val resolver = session.sessionState.conf.resolver
     val partNames = meta.partitionColumnNames
     def colLine(f: StructField): String = {
-      val t = graft.testing.GoldenTestRunner.typeName(f.dataType).toUpperCase
+      val t = StatsCommands.typeName(f.dataType).toUpperCase
       val comment = f.getComment().map(c => s" COMMENT '$c'").getOrElse("")
       s"  ${f.name} $t$comment"
     }
@@ -240,7 +240,23 @@ case class GraftShowCreateTableCommand(ident: Seq[String])
   }
 }
 
-private[plans] object StatsCommands {
+private[graft] object StatsCommands {
+
+  /** Impala type name for a Spark type (reference: `ColumnType.java`). */
+  def typeName(dt: DataType): String = dt match {
+    case BooleanType => "boolean"
+    case ByteType => "tinyint"
+    case ShortType => "smallint"
+    case IntegerType => "int"
+    case LongType => "bigint"
+    case FloatType => "float"
+    case DoubleType => "double"
+    case StringType => "string"
+    case TimestampType | TimestampNTZType => "timestamp"
+    case DateType => "date"
+    case d: DecimalType => s"decimal(${d.precision},${d.scale})"
+    case other => other.simpleString
+  }
 
   /** Render a CSV option value the way the reference spells it in ROW
     * FORMAT (control chars as escapes). */

@@ -14,14 +14,18 @@ object Ddl {
     * `fe/src/main/cup/sql-parser.y:637-655`, CreateTableLikeFileStmt, backed
     * by `CreateTableLikeFileStmt.readFileMetadata`'s parquet-footer reader):
     * derive the schema from a data file's own metadata and create an empty
-    * table with it. The footer read is Spark's own parquet schema inference
-    * on the single file — no data pages are touched.
+    * table with it. A parquet schema comes from one footer read on the
+    * driver ([[graft.Tables.readParquet]]), like the reference's
+    * `readFileMetadata`: no data pages are touched and no Spark job runs.
+    * Other formats keep their source's own schema inference.
     *
     * Returns the inferred schema. */
   def createTableLikeFile(spark: SparkSession, table: String,
                           schemaFile: String, format: String = "parquet",
                           location: Option[String] = None): StructType = {
-    val schema = spark.read.format(format).load(schemaFile).schema
+    val schema =
+      if (format.equalsIgnoreCase("parquet")) graft.Tables.readParquet(spark, schemaFile).schema
+      else spark.read.format(format).load(schemaFile).schema
     val loc = location.map(l => s" LOCATION '$l'").getOrElse("")
     spark.sql(s"CREATE TABLE $table (${schema.toDDL}) USING $format$loc")
     schema

@@ -11,6 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
+import graft.Tables
 
 /** Ordinal-position parquet resolution, the way the reference scanner maps
   * columns: `be/src/exec/hdfs-parquet-scanner.cc:985-996` takes each slot's
@@ -70,7 +71,7 @@ object PositionalParquet {
         val (healthy, damaged) = group.partition(_._4)
         val stock =
           if (healthy.isEmpty) None
-          else Some(spark.read.parquet(healthy.map(_._1.getPath.toString): _*))
+          else Some(Tables.readParquet(spark, healthy.map(_._1.getPath.toString): _*))
         val salvaged =
           if (damaged.isEmpty) None
           else {

@@ -4,6 +4,7 @@ import scala.io.Source
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.plans.StatsCommands
 
 /** Golden-file query harness in the reference's `.test` format.
   *
@@ -181,22 +182,6 @@ object GoldenTestRunner {
     }
     out += sb.toString
     out.toSeq.map(_.trim.replaceAll("\\s+", "")).filter(_.nonEmpty)
-  }
-
-  /** Impala type name for a Spark type (reference: `ColumnType.java`). */
-  def typeName(dt: DataType): String = dt match {
-    case BooleanType => "boolean"
-    case ByteType => "tinyint"
-    case ShortType => "smallint"
-    case IntegerType => "int"
-    case LongType => "bigint"
-    case FloatType => "float"
-    case DoubleType => "double"
-    case StringType => "string"
-    case TimestampType | TimestampNTZType => "timestamp"
-    case DateType => "date"
-    case d: DecimalType => s"decimal(${d.precision},${d.scale})"
-    case other => other.simpleString
   }
 
   /** Impala's floating-point text rendering: C `%.16g` with trailing zeros
@@ -391,7 +376,7 @@ object GoldenTestRunner {
           catch { case e: Throwable =>
             return Fail(s"execution failed: ${e.getMessage}") }
         c.types.foreach { expected =>
-          val got = df.schema.fields.map(f => typeName(f.dataType)).toSeq
+          val got = df.schema.fields.map(f => StatsCommands.typeName(f.dataType)).toSeq
           if (got != expected.map(_.toLowerCase))
             return Fail(s"types mismatch: expected $expected, got $got")
         }

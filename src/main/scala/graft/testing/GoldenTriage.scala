@@ -36,7 +36,7 @@ object GoldenTriage {
           val df = GoldenTestRunner.splitStatements(c.query).map(spark.sql).last
           println(s"==== case $i ----")
           println(df.schema.fields.map(f =>
-            GoldenTestRunner.typeName(f.dataType)).mkString(", "))
+            graft.plans.StatsCommands.typeName(f.dataType)).mkString(", "))
           df.collect().foreach(r =>
             println(GoldenTestRunner.renderRow(r, df.schema)))
         } else GoldenTestRunner.run(spark, c) match {

@@ -73,7 +73,7 @@ object TpchDb {
     if (spark.catalog.databaseExists("tpch")) return
     spark.sql("CREATE DATABASE tpch")
     BaseTables.foreach { t =>
-      val base = spark.read.parquet(s"$sfDir/$t.parquet")
+      val base = graft.Tables.readParquet(spark, s"$sfDir/$t.parquet")
       val padded = PadColumns.getOrElse(t, Nil).foldLeft(base) {
         case (df, (name, expr)) =>
           df.withColumn(name, org.apache.spark.sql.functions.expr(expr))
